@@ -17,48 +17,82 @@ import glob
 import json
 import os
 import re
-import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+
+def _bench_rounds(repo_dir: str) -> list[tuple[int, str]]:
+    """``(round, path)`` of every driver ``BENCH_r{N}.json``, oldest
+    first by PARSED round number (lexicographic order breaks at r9/r10).
+    Core-count variants (``BENCH_r16_c8.json``) are skipped: they time
+    the same round on a different machine shape."""
+    return sorted(
+        (int(m.group(1)), p)
+        for p in glob.glob(os.path.join(repo_dir, "BENCH_r*.json"))
+        if (m := re.search(r"BENCH_r(\d+)\.json$", p))
+    )
 
 
 def load_prior_timings(repo_dir: str) -> tuple[dict[str, float], str | None]:
-    """Per-query timings from the newest ``BENCH_r*.json`` the driver
-    recorded, for round-over-round regression diffing.
-
-    The driver file holds the bench's stdout TAIL (possibly truncated
-    mid-line) plus a ``parsed`` field that may be null — so recovery is
-    best-effort: prefer ``parsed.queries``, else regex-harvest
-    ``"name": seconds`` pairs from the tail.  Returns ({}, None) when
-    nothing is recoverable; the bench must never fail because history
-    is missing."""
-    paths = sorted(glob.glob(os.path.join(repo_dir, "BENCH_r*.json")))
-    for path in reversed(paths):
+    """Per-query timings (``parsed.queries``) from the newest driver
+    ``BENCH_r{N}.json``, for round-over-round regression diffing.
+    Returns ({}, None) when no record carries them; the bench must never
+    fail because history is missing."""
+    for _, path in reversed(_bench_rounds(repo_dir)):
         try:
             with open(path) as f:
-                rec = json.load(f)
-        except (OSError, json.JSONDecodeError):
+                queries = (json.load(f).get("parsed") or {}).get("queries")
+        except (OSError, json.JSONDecodeError, AttributeError):
             continue
-        parsed = rec.get("parsed") or {}
-        queries = parsed.get("queries")
         if isinstance(queries, dict) and queries:
             return (
                 {k: float(v) for k, v in queries.items()},
                 os.path.basename(path),
             )
-        tail = rec.get("tail") or ""
-        pairs = re.findall(r'"([a-z0-9_]+)":\s*([0-9]+\.[0-9]+)', tail)
-        # drop harness fields that match the pattern (value/sf live
-        # outside the queries map but share its shape)
-        timings = {
-            k: float(v)
-            for k, v in pairs
-            if k not in ("value", "sf")
-        }
-        if timings:
-            return timings, os.path.basename(path)
     return {}, None
+
+
+def time_queries(spark, registry, names, sf_dir, repeats):
+    """Min-of-``repeats`` wall seconds of ``collect()`` for each name.
+
+    Warm-up first, not counted: every name runs once at
+    ``$SPARK_GRAFT_WARMUP`` (default sf0.001; "0" disables) so
+    whole-stage-codegen compilation, plan caches and per-query
+    Python/Arrow paths are paid before timing.  The minimum over passes
+    is the steady-state estimator: single shots on a shared machine
+    carry ±15% scheduler/GC noise.  Returns ``(timings, errors)``; a
+    name is an error only if NO pass succeeded.  Shared with
+    ``tools/ab_bench.py`` so both A/B sides run this exact loop."""
+    warm_dir = os.environ.get("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
+    if warm_dir not in ("0", ""):
+        for name in names:
+            try:
+                registry[name].spark(spark, warm_dir).collect()
+            except Exception:
+                pass  # a warmup failure must never sink the bench
+        # warmup queries persist intermediates too — release them so the
+        # first timed query starts with a clean storage-memory budget
+        spark.catalog.clearCache()
+    timings: dict[str, float] = {}
+    errors: dict[str, str] = {}
+    for _ in range(repeats):
+        for name in names:
+            t0 = time.perf_counter()
+            try:
+                registry[name].spark(spark, sf_dir).collect()
+                t = round(time.perf_counter() - t0, 4)
+                timings[name] = min(timings.get(name, t), t)
+            except Exception as exc:  # fault-isolate: one broken query
+                # must never zero out the whole round's perf signal
+                errors.setdefault(
+                    name, f"{type(exc).__name__}: {exc}"[:500]
+                )
+            finally:
+                # Queries that persist intermediates must not leak
+                # storage memory into the next query's execution-memory
+                # budget — each entry is timed standalone.
+                spark.catalog.clearCache()
+    errors = {n: e for n, e in errors.items() if n not in timings}
+    return timings, errors
 
 
 def main() -> None:
@@ -88,61 +122,14 @@ def main() -> None:
         lambda it: it, schema="l_quantity double"
     ).count()
 
-    # Warm-up iteration (not counted): run every query once at a tiny
-    # scale factor so whole-stage-codegen compilation (janino), plan
-    # caches, and per-query Python/Arrow paths are paid before timing —
-    # the timed run then measures steady-state data processing, which is
-    # what extrapolates to a long-lived 100 TB cluster.  Standard
-    # warm-up-iteration practice (JMH-style).  Disable with
-    # SPARK_GRAFT_WARMUP=0; point elsewhere with SPARK_GRAFT_WARMUP=<dir>.
-    warm_dir = os.environ.get("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
-    if warm_dir not in ("0", ""):
-        for name, q in sorted(registry.items()):
-            try:
-                q.spark(spark, warm_dir).collect()
-            except Exception:
-                pass  # a warmup failure must never sink the bench
-        # warmup queries persist intermediates too — release them so the
-        # first timed query starts with a clean storage-memory budget
-        spark.catalog.clearCache()
-
-    # min-of-N timing: single-shot numbers on a shared machine carry
-    # ±15% scheduler/GC noise; the minimum over a couple of passes is
-    # the standard steady-state estimator (what the work costs when the
-    # machine isn't preempting you).  SPARK_GRAFT_REPEATS=1 restores
-    # single-shot.
+    # SPARK_GRAFT_REPEATS=1 restores single-shot timing
     try:
         repeats = max(1, int(os.environ.get("SPARK_GRAFT_REPEATS", "2")))
     except ValueError:
         repeats = 2  # a malformed env var must never sink the bench
-    timings: dict[str, float] = {}
-    errors: dict[str, str] = {}
-    for _ in range(repeats):
-        for name, q in sorted(registry.items()):
-            t0 = time.perf_counter()
-            try:
-                q.spark(spark, sf_dir).collect()
-                t = round(time.perf_counter() - t0, 4)
-                timings[name] = min(timings.get(name, t), t)
-            except Exception as exc:  # fault-isolate: one broken query
-                # must never zero out the whole round's perf signal —
-                # note the error and keep timing the rest.  Every repeat
-                # attempts every query (a transient in ANY repeat must
-                # not decide whether a query is timed), and a query
-                # reports as an error only if NO repeat succeeded.
-                errors.setdefault(
-                    name, f"{type(exc).__name__}: {exc}"[:500]
-                )
-            finally:
-                # Queries that persist intermediates (dedup signature
-                # tables, scalar-subquery caches) must not leak storage
-                # memory into the next query's execution-memory budget —
-                # each bench entry is timed standalone, as a cluster job
-                # would run.
-                spark.catalog.clearCache()
-
-    # a query that succeeded in any repeat is a timing, not an error
-    errors = {n: e for n, e in errors.items() if n not in timings}
+    timings, errors = time_queries(
+        spark, registry, sorted(registry), sf_dir, repeats
+    )
     total = round(sum(timings.values()), 4)
     out = {
         "metric": "query_corpus_total_runtime",
@@ -162,9 +149,8 @@ def main() -> None:
     # regression moves one query, not the median); a query regresses
     # when it is >20% slower than drift-adjusted expectation AND >0.15s
     # absolute (20% of a 50ms query is noise).
-    prior, prior_src = load_prior_timings(
-        os.path.dirname(os.path.abspath(__file__))
-    )
+    repo = os.path.dirname(os.path.abspath(__file__))
+    prior, prior_src = load_prior_timings(repo)
     shared = {
         name: t / prior[name]
         for name, t in timings.items()
@@ -208,15 +194,12 @@ def main() -> None:
     # the next round's file — overwritten by that round's own pre-flight).
     # Override with SPARK_GRAFT_ROUND.  Best-effort: a read-only
     # checkout must not sink the bench.
-    repo = os.path.dirname(os.path.abspath(__file__))
     try:
-        rounds = [
-            int(m.group(1))
-            for p in glob.glob(os.path.join(repo, "BENCH_r*.json"))
-            if (m := re.search(r"BENCH_r(\d+)\.json$", p))
-        ]
+        rounds = _bench_rounds(repo)
         n_round = int(
-            os.environ.get("SPARK_GRAFT_ROUND", max(rounds, default=0) + 1)
+            os.environ.get(
+                "SPARK_GRAFT_ROUND", (rounds[-1][0] if rounds else 0) + 1
+            )
         )
         with open(
             os.path.join(repo, f"bench_full_r{n_round:02d}.json"), "w"

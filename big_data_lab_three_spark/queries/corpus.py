@@ -9,10 +9,6 @@ Reference scope note: the reference lab (``src/preprocess.py``,
 beyond-reference extension, built on the registry's existing
 conventions (portable md5 hashing, micro-unit quantization, chained-CTE
 iterative oracles per ``queries/graph.py``'s pagerank_check).
-
-Registration-order contract: this module imports LAST (see
-``queries/__init__._MODULES``) so its never-driver-verified names sort
-after every older queued name in the driver's 50-query prefix.
 """
 
 from __future__ import annotations

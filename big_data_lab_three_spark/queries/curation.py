@@ -1,10 +1,6 @@
 """Round-9 corpus-curation layer: substring-level decontamination,
 streaming index admission, and mergeable sketch parity.
 
-Registration-order contract: this module imports LAST in
-``queries.__init__._MODULES`` (see the extras module docstring) so its
-names queue behind every older never-driver-verified query.
-
 These extend the LLM-training-data families (SURVEY.md §2 extensions):
 ``contamination_check`` flags WHOLE documents sharing 8-grams with a
 benchmark suite; ``span_decontaminate`` locates the contaminated token
@@ -22,9 +18,6 @@ from pyspark.sql import functions as F
 from big_data_lab_three_spark.functions.numeric import quantized_sum as _qsum
 from big_data_lab_three_spark.functions.text import shingles, tokens
 from big_data_lab_three_spark.queries import register
-# stats imports ABOVE any curation registration: whoever imports this
-# module directly must register every stats name first, preserving the
-# module-import-order contract the driver prefix relies on
 from big_data_lab_three_spark.queries.stats import _EWMA_W, _EWMA_W_SQL
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table

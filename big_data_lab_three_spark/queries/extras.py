@@ -3,13 +3,6 @@
 the vendored real-PNG codec, binaryFile media ingest) into the
 oracle-checked registry.
 
-REGISTRATION-ORDER CONTRACT: this module is imported LAST in
-``queries.__init__._MODULES`` **on purpose** — its names must sort
-after every never-driver-verified name from the older modules so that
-registering them mid-round cannot displace a queued name out of the
-driver's 50-query correctness prefix.  Keep it last; add
-newer-than-extras modules after it.
-
 The md5-derived arithmetic used here is bit-portable across engines:
 Spark's ``conv(substr(md5(x), 1, 15), 16, 10)`` equals DuckDB's
 ``('0x' || substr(md5(x), 1, 15))::BIGINT`` exactly (60-bit value,

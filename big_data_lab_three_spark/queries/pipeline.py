@@ -2,10 +2,6 @@
 forecasting, DSIR-style importance resampling, and event-time
 admission.
 
-Registration-order contract: this module imports LAST in
-``queries.__init__._MODULES`` (see the extras module docstring) so its
-names queue behind every older never-driver-verified query.
-
 These extend the LLM-training-data families (SURVEY.md §2 extensions):
 ``dsir_importance_resample`` is the data-selection shape of Xie et
 al.'s DSIR (hashed-n-gram importance weights + Gumbel-top-k resample)
@@ -21,10 +17,6 @@ from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.functions.numeric import quantized_sum as _qsum
 from big_data_lab_three_spark.queries import register
-# curation imports ABOVE any pipeline registration: whoever imports
-# this module directly must register every curation name first,
-# preserving the module-import-order contract the driver prefix
-# relies on
 from big_data_lab_three_spark.queries.curation import (
     _BROWN_W1,
     _BROWN_W1_SQL,

@@ -1,15 +1,18 @@
-"""The driver correctness-checks a 50-query PREFIX of ``load_all()``
-(observed r1+r2), so ordering IS evidence strategy: stale-plan queries
-first, never-driver-verified next, verified last.  Pin that contract.
+"""The driver correctness-checks a 50-query PREFIX of ``load_all()``, so
+ordering is evidence strategy: failed or unrecorded names first, then
+the oldest driver evidence.  Pin that order and the registry's size.
 """
 
 from __future__ import annotations
 
+import importlib
+
+import pytest
+
+from big_data_lab_three_spark import queries
 from big_data_lab_three_spark.queries import (
-    _DRIVER_ROTATION,
-    _FORCE_FRONT,
+    _MODULES,
     REGISTRY,
-    _driver_verified,
     _evidence_rounds,
     load_all,
 )
@@ -21,18 +24,17 @@ def test_every_query_listed_exactly_once():
     assert len(names) == len(set(names))
 
 
-def test_force_front_leads():
-    names = list(load_all())
-    expect = [n for n in _FORCE_FRONT if n in REGISTRY]
-    assert names[: len(expect)] == expect
+def _verified() -> set[str]:
+    return {n for n, rnd in _evidence_rounds().items() if rnd >= 0}
 
 
 def test_unverified_precede_verified():
-    """Outside the forced prefix, no driver-verified name may sit in
-    front of a never-verified one — that would waste a driver slot on
-    evidence we already have."""
-    verified = _driver_verified()
-    names = [n for n in load_all() if n not in _FORCE_FRONT]
+    """No name with passing driver evidence may sit in front of a failed
+    or unrecorded one — that would waste a driver slot on evidence we
+    already have.  Unverified names keep registration order."""
+    verified = _verified()
+    registered = {n: i for i, n in enumerate(REGISTRY)}
+    names = list(load_all())
     seen_verified = False
     for n in names:
         if n in verified:
@@ -41,97 +43,39 @@ def test_unverified_precede_verified():
             assert not seen_verified, (
                 f"unverified {n!r} ordered after a verified name"
             )
-
-
-def test_rotation_priority_within_unverified():
-    """Curated family priority: among never-verified names, rotation
-    entries come before unlisted ones (the prefix budget goes to the
-    families the round plan targets)."""
-    verified = _driver_verified()
-    names = [
-        n
-        for n in load_all()
-        if n not in _FORCE_FRONT and n not in verified
-    ]
-    rotation_unverified = [
-        n
-        for n in _DRIVER_ROTATION
-        if n in REGISTRY and n not in verified and n not in _FORCE_FRONT
-    ]
-    assert names[: len(rotation_unverified)] == rotation_unverified
-
-
-def test_unverified_names_respect_module_import_order():
-    """The registration-order contract (extras module docstring): each
-    round's NEWEST query module imports last in ``_MODULES``, so that
-    registering a query mid-round sorts it after every older
-    never-driver-verified name and cannot displace a queued name out of
-    the driver's 50-name prefix.  Pin the observable consequence: among
-    never-verified names (outside the forced prefix), positions must be
-    monotone in the registering module's import index.  (Once a round's
-    CORRECTNESS record verifies the older names, later-module entries
-    entering the prefix is the intended drain behavior.)"""
-    from big_data_lab_three_spark.queries import _MODULES
-
-    mod_index = {m: i for i, m in enumerate(_MODULES)}
-    verified = _driver_verified()
-    unverified = [
-        n
-        for n in load_all()
-        if n not in _FORCE_FRONT and n not in verified
-    ]
-    if not unverified:
-        # Drained pool: every registered name has driver evidence (the
-        # r7 record verified all 202).  The ordering property is
-        # vacuously true; it re-arms automatically the moment a new
-        # query registers without a CORRECTNESS row.
-        return
-    indices = [
-        mod_index[getattr(REGISTRY[n].spark, "__module__", "")]
-        for n in unverified
-    ]
-    assert indices == sorted(indices), (
-        "never-verified names out of module import order: "
-        f"{[n for n, a, b in zip(unverified, indices, sorted(indices)) if a != b]}"
-    )
+    head = [registered[n] for n in names if n not in verified]
+    assert head == sorted(head)
 
 
 def test_verified_tail_rotates_by_evidence_age():
-    """r12 verdict item 3: within the all-verified tail, names must
-    sort oldest-driver-evidence-first so the driver's 50-name prefix
-    refreshes the stalest CORRECTNESS records each round rather than
-    re-proving the same registration-order first-50 forever."""
+    """Within the verified tail, names sort oldest-evidence-first, with
+    registration order breaking ties, so the 50-name prefix re-proves
+    the stalest CORRECTNESS records each round instead of the same
+    names forever."""
     evidence = _evidence_rounds()
-    verified = _driver_verified()
-    tail = [
-        n
-        for n in load_all()
-        if n not in _FORCE_FRONT and n in verified
+    verified = _verified()
+    registered = {n: i for i, n in enumerate(REGISTRY)}
+    keys = [
+        (evidence[n], registered[n]) for n in load_all() if n in verified
     ]
-    ages = [evidence[n] for n in tail]
-    assert ages == sorted(ages), (
-        "verified tail not ordered oldest-evidence-first: "
-        f"{[n for n, a, b in zip(tail, ages, sorted(ages)) if a != b][:5]}"
-    )
+    assert keys == sorted(keys)
 
 
-def test_queued_names_fit_in_driver_prefix():
-    """The displacement tripwire the module-order invariant alone can't
-    provide: if the stale-plan + never-verified pool ever exceeds the
-    driver's 50-name prefix, some queued query would silently never get
-    driver-verified.  Fail loudly instead — the fix is to stop adding
-    names (or to re-home additions into the last module) until a round
-    record drains the pool."""
-    verified = _driver_verified()
-    queued = [n for n in _FORCE_FRONT if n in REGISTRY] + [
-        n
-        for n in REGISTRY
-        if n not in verified and n not in _FORCE_FRONT
-    ]
-    assert len(queued) <= 50, (
-        f"{len(queued)} queued names exceed the 50-name driver prefix: "
-        f"the overflow would never be verified — {queued[50:]}"
+@pytest.mark.parametrize("mod", _MODULES)
+def test_every_query_module_imports(mod):
+    importlib.import_module(mod)
+
+
+def test_registry_size_is_pinned():
+    assert len(load_all()) == 277
+
+
+def test_load_all_fails_loud_on_broken_module(monkeypatch):
+    monkeypatch.setattr(
+        queries, "_MODULES", (*_MODULES, "big_data_lab_three_spark.queries.nope")
     )
+    with pytest.raises(ModuleNotFoundError):
+        queries.load_all()
 
 
 def test_evidence_rounds_compare_parsed_round_numbers(tmp_path):

@@ -5,10 +5,11 @@ Cross-round absolute timings drift 18-30% with machine state, so "is
 this plan change faster?" is only answerable by running BOTH versions
 on the same box, same day, interleaved.  This tool:
 
-1. checks out ``<ref>`` into a scratch git worktree under /tmp;
-2. runs an identical self-contained timing runner in the current tree
-   (A) and the worktree (B), ALTERNATING A,B,A,B… so slow-machine
-   phases hit both sides equally;
+1. exports ``<ref>`` (``git archive``) into a scratch directory;
+2. times the current tree (A) and the export (B), ALTERNATING
+   A,B,A,B… so slow-machine phases hit both sides equally.  Both sides
+   run the current checkout's ``bench.time_queries`` loop over their
+   own registry, so a ref older than that function still works;
 3. takes the per-query minimum per side across rounds (steady-state
    estimator, same as bench.py) and prints per-query A/B deltas.
 
@@ -18,78 +19,49 @@ Usage::
     SPARK_GRAFT_AB_ROUNDS=3 python tools/ab_bench.py HEAD~1 quantile_profile
 
 Each side runs in its OWN subprocess/SparkSession (no classpath or
-conf bleed between versions); the runner warms the subset at sf0.001
-first (codegen/Arrow startup is per-process, not a plan property).
-Exit code 0 always — this is a measurement tool, not a gate.
+conf bleed between versions).  Exit code 0 always — this is a
+measurement tool, not a gate.
 """
 
 from __future__ import annotations
 
+import importlib.util
 import json
 import os
+import shutil
 import subprocess
 import sys
 import tempfile
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
-_RUNNER = r"""
-import json, os, sys, time
 
-tree = sys.argv[1]
-sf_dir = sys.argv[2]
-names = sys.argv[3].split(",") if sys.argv[3] else []
-inner = int(sys.argv[4])
-sys.path.insert(0, tree)
-os.chdir(tree)
+def side(tree: str, sf_dir: str, names: list[str]) -> None:
+    """One A/B side, in its own process: this checkout's timing loop
+    over ``tree``'s registry and session."""
+    spec = importlib.util.spec_from_file_location(
+        "bench", os.path.join(REPO, "bench.py")
+    )
+    bench = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(bench)
+    sys.path.insert(0, tree)
+    os.chdir(tree)
+    from big_data_lab_three_spark.queries import load_all
+    from big_data_lab_three_spark.session import get_spark
 
-from big_data_lab_three_spark.queries import load_all
-from big_data_lab_three_spark.session import get_spark
-
-reg = load_all()
-names = names or sorted(reg)
-spark = get_spark("ab_bench")
-spark.sparkContext.setLogLevel("ERROR")
-warm = os.environ.get("SPARK_GRAFT_WARMUP", "/root/testdata/sf0.001")
-if warm not in ("0", ""):
-    for n in names:
-        try:
-            reg[n].spark(spark, warm).collect()
-        except Exception:
-            pass
-    spark.catalog.clearCache()
-res = {}
-for _ in range(inner):
-    for n in names:
-        if n not in reg:
-            res[n] = None
-            continue
-        t0 = time.perf_counter()
-        try:
-            reg[n].spark(spark, sf_dir).collect()
-            t = time.perf_counter() - t0
-            prev = res.get(n)
-            res[n] = t if prev is None else min(prev, t)
-        except Exception:
-            res.setdefault(n, None)
-        finally:
-            spark.catalog.clearCache()
-print("ABJSON:" + json.dumps(res))
-"""
+    reg = load_all()
+    spark = get_spark("ab_bench")
+    spark.sparkContext.setLogLevel("ERROR")
+    timings, _ = bench.time_queries(
+        spark, reg, names or sorted(reg), sf_dir, repeats=1
+    )
+    print("ABJSON:" + json.dumps(timings))
 
 
-def run_side(tree: str, sf_dir: str, names: list[str], inner: int) -> dict:
+def run_side(tree: str, sf_dir: str, names: list[str]) -> dict:
     try:
         proc = subprocess.run(
-            [
-                sys.executable,
-                "-c",
-                _RUNNER,
-                tree,
-                sf_dir,
-                ",".join(names),
-                str(inner),
-            ],
+            [sys.executable, __file__, "--side", tree, sf_dir, *names],
             capture_output=True,
             text=True,
             timeout=3600,
@@ -110,30 +82,33 @@ def main() -> int:
     if len(sys.argv) < 2:
         print(__doc__)
         return 0
+    if sys.argv[1] == "--side":
+        side(sys.argv[2], sys.argv[3], sys.argv[4:])
+        return 0
     ref = sys.argv[1]
     names = sys.argv[2:]
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     rounds = max(1, int(os.environ.get("SPARK_GRAFT_AB_ROUNDS", "2")))
 
-    wt = tempfile.mkdtemp(prefix="ab_bench_wt_")
-    subprocess.run(
-        ["git", "-C", REPO, "worktree", "add", "--detach", wt, ref],
-        check=True,
-        capture_output=True,
-    )
+    wt = tempfile.mkdtemp(prefix="ab_bench_")
     try:
+        archive = subprocess.run(
+            ["git", "-C", REPO, "archive", ref],
+            check=True,
+            capture_output=True,
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", wt], input=archive, check=True)
         a_best: dict = {}
         b_best: dict = {}
         for r in range(rounds):
             for label, tree, best in (
-                ("A(worktree=current)", REPO, a_best),
+                ("A(current)", REPO, a_best),
                 (f"B({ref})", wt, b_best),
             ):
                 print(f"round {r + 1}/{rounds} {label} ...", flush=True)
-                got = run_side(tree, sf_dir, names, inner=1)
+                got = run_side(tree, sf_dir, names)
                 for k, v in got.items():
-                    if v is not None:
-                        best[k] = min(best.get(k, v), v)
+                    best[k] = min(best.get(k, v), v)
         keys = sorted(set(a_best) | set(b_best))
         print(f"\n{'query':<32} {'A=now':>8} {'B=' + ref:>10} {'A/B':>6}")
         for k in keys:
@@ -155,10 +130,7 @@ def main() -> int:
                 f"A={ta:.2f}s  B={tb:.2f}s  A/B={ta / tb:.2f}"
             )
     finally:
-        subprocess.run(
-            ["git", "-C", REPO, "worktree", "remove", "--force", wt],
-            capture_output=True,
-        )
+        shutil.rmtree(wt, ignore_errors=True)
     return 0
 
 

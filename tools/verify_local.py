@@ -11,11 +11,12 @@ Usage: python tools/verify_local.py [sf_dir] [query ...]
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from big_data_lab_three_spark.oracle_compare import (  # noqa: E402
     compare,
