@@ -149,10 +149,28 @@ def mmr_select(
     )
 
 
-def _content_keyed_sample(train: DataFrame, cap: int, seed: int):
-    """Collect a deterministic CONTENT-KEYED training sample as an
-    L2-normalized float64 matrix.  ``train`` must expose ``_i`` (id) and
-    ``_v`` (vector).  ``xxhash64(id) mod step == 0`` with ``step`` sized
+# Column names every ANN operator reads, and the seed and Lloyd's
+# iteration count every driver-side trainer runs with.
+_ID_COL, _VEC_COL = "vec_id", "embedding"
+_SEED, _MAX_ITER = 7, 8
+
+
+def _query_side(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.col(_ID_COL).alias("query_id"), F.col(_VEC_COL).alias("qvec")
+    )
+
+
+def _corpus_side(df: DataFrame) -> DataFrame:
+    return df.select(
+        F.col(_ID_COL).alias("neighbor_id"), F.col(_VEC_COL).alias("cvec")
+    )
+
+
+def _content_keyed_sample(corpus: DataFrame, cap: int):
+    """Collect a deterministic CONTENT-KEYED training sample of the
+    corpus vectors as an L2-normalized float64 matrix.
+    ``xxhash64(id) mod step == 0`` with ``step`` sized
     from a cheap id-only count thins to between ``cap`` and ``2·cap``
     rows (a pure function of the DATA, invariant to file layout), then a
     hash-ordered cut (id tiebreak) caps it — ordering by the hash keeps
@@ -162,15 +180,15 @@ def _content_keyed_sample(train: DataFrame, cap: int, seed: int):
     retrain a different quantizer from identical data."""
     import numpy as np
 
-    n_train = train.select("_i").count()
-    step = max(1, n_train // cap)
-    h = F.xxhash64(F.col("_i"), F.lit(seed))
+    train = _corpus_side(corpus)
+    step = max(1, train.select("neighbor_id").count() // cap)
+    h = F.xxhash64(F.col("neighbor_id"), F.lit(_SEED))
     rows = (
         train.where(F.pmod(h, F.lit(step)) == 0)
-        .orderBy(h, F.col("_i"))
+        .orderBy(h, F.col("neighbor_id"))
         .limit(cap)
     )
-    sample = np.asarray([r["_v"] for r in rows.collect()], dtype=np.float64)
+    sample = np.asarray([r["cvec"] for r in rows.collect()], dtype=np.float64)
     sample /= np.maximum(
         np.linalg.norm(sample, axis=1, keepdims=True), 1e-12
     )
@@ -269,6 +287,14 @@ def _train_opq(mat, m: int, ksub: int, seed: int, max_iter: int,
     return rot, books
 
 
+def _train_codebooks(mat, m: int, ksub: int, opq: bool):
+    """(rotation or None, codebooks) for the PQ-family operators: OPQ
+    when ``opq``, plain per-subspace Lloyd's otherwise."""
+    if opq:
+        return _train_opq(mat, m, ksub, _SEED, _MAX_ITER)
+    return None, _train_pq_books(mat, m, ksub, _SEED, _MAX_ITER)
+
+
 def _stack(col: "pd.Series"):
     import numpy as np
 
@@ -312,31 +338,17 @@ def cosine_score_pairs(
     return pairs.mapInPandas(run, schema)
 
 
-def brute_force_topk(
-    queries: DataFrame,
-    corpus: DataFrame,
-    k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> DataFrame:
-    """Exact cosine top-k: broadcast the query set, scan the corpus
-    once, score each (corpus row × query) batch with one matmul, rank
-    per query.  Self-matches (same id) are excluded.
+def _rank_topk(cand: DataFrame, k: int) -> DataFrame:
+    """The one rescore-and-rank tail every ``*_topk`` operator ends in:
+    exact cosine over a ``(query_id, neighbor_id, qvec, cvec)``
+    candidate frame, then the first ``k`` per query by (cos_sim DESC,
+    neighbor_id ASC).  Approximate operators therefore differ from
+    brute force only in WHICH candidates they hand over, never in how
+    those are scored, tie-broken or cut.
 
-    Returns (query_id, neighbor_id, cos_sim, rank) with deterministic
-    ordering (sim DESC, neighbor id ASC).
-    """
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pairs = c.crossJoin(F.broadcast(q)).where(
-        F.col("query_id") != F.col("neighbor_id")
-    )
+    Returns (query_id, neighbor_id, cos_sim, rank)."""
     scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
+        cand, "qvec", "cvec", ["query_id", "neighbor_id"]
     )
     w = Window.partitionBy("query_id").orderBy(
         F.desc("cos_sim"), F.asc("neighbor_id")
@@ -345,6 +357,22 @@ def brute_force_topk(
         scored.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
     )
+
+
+def brute_force_topk(
+    queries: DataFrame, corpus: DataFrame, k: int = 5
+) -> DataFrame:
+    """Exact cosine top-k: broadcast the query set, scan the corpus
+    once, score each (corpus row × query) batch with one matmul, rank
+    per query.  Self-matches (same id) are excluded.
+
+    Returns (query_id, neighbor_id, cos_sim, rank) with deterministic
+    ordering (sim DESC, neighbor id ASC).
+    """
+    pairs = _corpus_side(corpus).crossJoin(
+        F.broadcast(_query_side(queries))
+    ).where(F.col("query_id") != F.col("neighbor_id"))
+    return _rank_topk(pairs, k)
 
 
 def hyperplane_keys(
@@ -364,8 +392,20 @@ def hyperplane_keys(
     agreement p collides in one b-bit table w.p. p^b, but in ≥1 of L
     tables w.p. 1-(1-p^b)^L — recall is tuned by L without fattening
     any single bucket.
+
+    Raises ``ValueError`` when ``planes`` does not split evenly into
+    ``tables`` (leftover planes would be silently dropped) or when a
+    table is wider than 63 bits (its signature would overflow int64).
     """
-    per = len(planes) // tables
+    per, leftover = divmod(len(planes), tables)
+    if leftover:
+        raise ValueError(
+            f"{len(planes)} planes do not split evenly into {tables} tables"
+        )
+    if per > 63:
+        raise ValueError(
+            f"{per} bits per table overflow the int64 signature (max 63)"
+        )
     plane_rows = [list(map(float, p)) for p in planes]
     schema = T.StructType(
         list(df.schema.fields)
@@ -476,18 +516,12 @@ def ivf_topk(
     nlist: int | None = 16,
     nprobe: int = 4,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    train_fraction: float = 1.0,
-    max_iter: int = 8,
 ) -> DataFrame:
     """IVF (inverted-file) approximate top-k — the other classic ANN
     scale path next to sign-LSH:
 
-    1. fit a seeded ``pyspark.ml`` KMeans coarse quantizer with
-       ``nlist`` centroids (optionally on a sample — at 100 TB you
-       train the quantizer on a fraction and it generalizes);
+    1. fit a seeded spherical-KMeans coarse quantizer with ``nlist``
+       centroids;
     2. assign every corpus vector to its single nearest cell — this is
        the inverted file, and at scale the corpus would be *written
        partitioned by cell* so a probe touches only matching files;
@@ -523,40 +557,18 @@ def ivf_topk(
         # count job; fixture queries pass an explicit nlist instead)
         nlist = adaptive_nlist(corpus.count())
     cap = min(max(nlist * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    train = corpus.select(
-        F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")
-    )
-    if train_fraction < 1.0:
-        train = train.sample(fraction=train_fraction, seed=seed)
-    sample = _content_keyed_sample(train, cap, seed)
-    centers = _spherical_kmeans(sample, nlist, seed, max_iter).tolist()
+    sample = _content_keyed_sample(corpus, cap)
+    centers = _spherical_kmeans(sample, nlist, _SEED, _MAX_ITER).tolist()
 
-    cb = _cell_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        centers, nprobe=1, vec_col="cvec",
-    )
+    cb = _cell_keys(_corpus_side(corpus), centers, nprobe=1, vec_col="cvec")
     qb = _cell_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        centers, nprobe=nprobe, vec_col="qvec",
+        _query_side(queries), centers, nprobe=nprobe, vec_col="qvec"
     )
-    candidates = (
+    return _rank_topk(
         cb.join(F.broadcast(qb), on="cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qvec", "cvec")
-    )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "qvec", "cvec"),
+        k,
     )
 
 
@@ -566,8 +578,6 @@ def lsh_bucketed_topk(
     planes: list[list[float]],
     tables: int = 8,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
 ) -> DataFrame:
     """Approximate top-k: multi-table hyperplane buckets on both sides,
     join on (table, signature), dedup candidates, score, rank.
@@ -575,34 +585,83 @@ def lsh_bucketed_topk(
     At 100 TB the corpus side is partitioned by the bucket key and only
     colliding buckets are scored — candidate count per query is
     L × bucket-size instead of the corpus size."""
-    qb = hyperplane_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        planes, tables, vec_col="qvec",
-    )
-    cb = hyperplane_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        planes, tables, vec_col="cvec",
-    )
-    candidates = (
+    qb = hyperplane_keys(_query_side(queries), planes, tables, vec_col="qvec")
+    cb = hyperplane_keys(_corpus_side(corpus), planes, tables, vec_col="cvec")
+    return _rank_topk(
         cb.join(F.broadcast(qb), on="key")
         .where(F.col("query_id") != F.col("neighbor_id"))
         .select("query_id", "neighbor_id", "qvec", "cvec")
-        .dropDuplicates(["query_id", "neighbor_id"])
+        .dropDuplicates(["query_id", "neighbor_id"]),
+        k,
     )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
+
+
+_ADC_SCHEMA = T.StructType(
+    [
+        T.StructField("query_id", T.LongType(), True),
+        T.StructField("neighbor_id", T.LongType(), True),
+        T.StructField("approx_d", T.DoubleType(), True),
+    ]
+)
+
+
+def _collect_queries(queries: DataFrame):
+    """Driver-side (ids, L2-normalized float64 matrix) of the query
+    set — the ADC operators precompute per-query lookup tables."""
+    import numpy as np
+
+    rows = _query_side(queries).collect()
+    q_mat = np.asarray([r["qvec"] for r in rows], dtype=np.float64)
+    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    return np.asarray([r["query_id"] for r in rows]), q_mat
+
+
+def _adc_topk(
+    queries: DataFrame,
+    corpus: DataFrame,
+    batch_candidates,
+    candidates: int,
+    k: int,
+) -> DataFrame:
+    """Shared prune-then-rescore tail of :func:`pq_topk` and
+    :func:`ivfpq_topk`: ONE ``mapInPandas`` pass over the corpus hands
+    each batch's ids and L2-normalized vectors to ``batch_candidates``
+    (which returns per-query ``(query_id, neighbor_id, approx_d)``
+    frames of at most ``candidates`` rows each), a window keeps the
+    global top-``candidates`` per query by (approx_d, neighbor_id),
+    and the survivors re-join their vectors — query side broadcast —
+    for the exact rescore in :func:`_rank_topk`."""
+
+    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
+        import numpy as np
+        import pandas as pd
+
+        for b in batches:
+            if len(b) == 0:
+                continue
+            x = _stack(b["cvec"])
+            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+            frames = batch_candidates(b["neighbor_id"].to_numpy(), x)
+            if frames:
+                yield pd.concat(frames, ignore_index=True)
+
+    cand = (
+        _corpus_side(corpus)
+        .mapInPandas(scan, _ADC_SCHEMA)
+        .where(F.col("query_id") != F.col("neighbor_id"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
+    wc = Window.partitionBy("query_id").orderBy(
+        F.asc("approx_d"), F.asc("neighbor_id")
     )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+    top_cand = (
+        cand.withColumn("_r", F.row_number().over(wc))
+        .where(F.col("_r") <= candidates)
+        .drop("_r", "approx_d")
     )
+    pairs = top_cand.join(_corpus_side(corpus), "neighbor_id").join(
+        F.broadcast(_query_side(queries)), "query_id"
+    )
+    return _rank_topk(pairs, k)
 
 
 def pq_topk(
@@ -612,10 +671,6 @@ def pq_topk(
     ksub: int = 16,
     k: int = 5,
     candidates: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    max_iter: int = 8,
     opq: bool = False,
 ) -> DataFrame:
     """Product-quantization ANN (FAISS ``IndexPQ`` shape) — the
@@ -659,28 +714,15 @@ def pq_topk(
     import numpy as np
 
     cap = min(max(ksub * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")),
-        cap,
-        seed,
-    )
+    sample = _content_keyed_sample(corpus, cap)
     dsub = sample.shape[1] // m
-    if opq:
-        # OPQ: learned orthogonal pre-rotation (Ge et al. 2013) before
-        # slicing — same code budget, finer quantization; one extra
-        # d×d matmul per Arrow batch, guarantee-preserving (a
-        # duplicate rotates to the same vector, hence the same codes).
-        rot, books_arr = _train_opq(sample, m, ksub, seed, max_iter)
-    else:
-        rot = None
-        books_arr = _train_pq_books(sample, m, ksub, seed, max_iter)
+    # OPQ: learned orthogonal pre-rotation (Ge et al. 2013) before
+    # slicing — same code budget, finer quantization; one extra d×d
+    # matmul per Arrow batch, guarantee-preserving (a duplicate rotates
+    # to the same vector, hence the same codes).
+    rot, books_arr = _train_codebooks(sample, m, ksub, opq)
 
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).collect()
-    q_ids = np.asarray([r["query_id"] for r in q_rows])
-    q_mat = np.asarray([r["qvec"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    q_ids, q_mat = _collect_queries(queries)
     if rot is not None:
         q_mat = q_mat @ rot
     # ADC tables: tables[q, j, c] = ||q_slice_j - books[j][c]||²
@@ -688,77 +730,31 @@ def pq_topk(
         (q_mat.reshape(len(q_mat), m, 1, dsub) - books_arr[None]) ** 2
     ).sum(axis=3)
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), True),
-            T.StructField("neighbor_id", T.LongType(), True),
-            T.StructField("approx_d", T.DoubleType(), True),
-        ]
-    )
-
-    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
+    def batch_candidates(ids, x):
         import pandas as pd
 
-        for b in batches:
-            if len(b) == 0:
-                continue
-            ids = b["neighbor_id"].to_numpy()
-            x = _stack(b["cvec"])
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            if rot is not None:
-                x = x @ rot
-            xs = x.reshape(len(x), m, 1, dsub)
-            codes = ((xs - books_arr[None]) ** 2).sum(axis=3).argmin(axis=2)
-            # approx[i, q] = Σ_j tables[q, j, codes[i, j]]
-            approx = tables[:, np.arange(m)[None, :], codes].sum(axis=2).T
-            c_eff = min(candidates, len(ids))
-            rows = []
-            for qi in range(len(q_ids)):
-                order = np.lexsort((ids, approx[:, qi]))[:c_eff]
-                rows.append(
-                    pd.DataFrame(
-                        {
-                            "query_id": q_ids[qi],
-                            "neighbor_id": ids[order],
-                            "approx_d": approx[order, qi],
-                        }
-                    )
+        if rot is not None:
+            x = x @ rot
+        xs = x.reshape(len(x), m, 1, dsub)
+        codes = ((xs - books_arr[None]) ** 2).sum(axis=3).argmin(axis=2)
+        # approx[i, q] = Σ_j tables[q, j, codes[i, j]]
+        approx = tables[:, np.arange(m)[None, :], codes].sum(axis=2).T
+        c_eff = min(candidates, len(ids))
+        rows = []
+        for qi in range(len(q_ids)):
+            order = np.lexsort((ids, approx[:, qi]))[:c_eff]
+            rows.append(
+                pd.DataFrame(
+                    {
+                        "query_id": q_ids[qi],
+                        "neighbor_id": ids[order],
+                        "approx_d": approx[order, qi],
+                    }
                 )
-            yield pd.concat(rows, ignore_index=True)
+            )
+        return rows
 
-    cand = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        )
-        .mapInPandas(scan, out_schema)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("neighbor_id")
-    )
-    top_cand = (
-        cand.withColumn("_r", F.row_number().over(wc))
-        .where(F.col("_r") <= candidates)
-        .drop("_r", "approx_d")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pairs = top_cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-    scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _adc_topk(queries, corpus, batch_candidates, candidates, k)
 
 
 def ivfpq_topk(
@@ -770,10 +766,6 @@ def ivfpq_topk(
     ksub: int = 16,
     k: int = 5,
     candidates: int = 64,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    max_iter: int = 8,
     opq: bool = False,
 ) -> DataFrame:
     """Combined IVF-PQ ANN (FAISS ``IndexIVFPQ`` shape) — the index
@@ -825,37 +817,21 @@ def ivfpq_topk(
     import numpy as np
 
     cap = min(max(max(nlist, ksub) * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")),
-        cap,
-        seed,
-    )
-    centers_m = _spherical_kmeans(sample, nlist, seed, max_iter)
+    sample = _content_keyed_sample(corpus, cap)
+    centers_m = _spherical_kmeans(sample, nlist, _SEED, _MAX_ITER)
     s_assign = np.argmax(sample @ centers_m.T, axis=1)
-    if opq:
-        # OPQ on the RESIDUALS: coarse assignment is invariant under a
-        # joint rotation (argmax(xR·(CR)ᵀ) == argmax(x·Cᵀ)), so the
-        # learned rotation only re-slices the residual space the PQ
-        # codes quantize — the FAISS ``OPQMatrix`` + ``IndexIVFPQ``
-        # composition.  Guarantee-preserving: a duplicate shares its
-        # query's cell and rotated residual, so its ADC sum stays the
-        # per-term lower bound.
-        rot, books_arr = _train_opq(
-            sample - centers_m[s_assign], m, ksub, seed, max_iter
-        )
-    else:
-        rot = None
-        books_arr = _train_pq_books(
-            sample - centers_m[s_assign], m, ksub, seed, max_iter
-        )
+    # OPQ on the RESIDUALS: coarse assignment is invariant under a
+    # joint rotation (argmax(xR·(CR)ᵀ) == argmax(x·Cᵀ)), so the learned
+    # rotation only re-slices the residual space the PQ codes quantize
+    # — the FAISS ``OPQMatrix`` + ``IndexIVFPQ`` composition.
+    # Guarantee-preserving: a duplicate shares its query's cell and
+    # rotated residual, so its ADC sum stays the per-term lower bound.
+    rot, books_arr = _train_codebooks(
+        sample - centers_m[s_assign], m, ksub, opq
+    )
     dsub = sample.shape[1] // m
 
-    q_rows = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    ).collect()
-    q_ids = np.asarray([r["query_id"] for r in q_rows])
-    q_mat = np.asarray([r["qvec"] for r in q_rows], dtype=np.float64)
-    q_mat /= np.maximum(np.linalg.norm(q_mat, axis=1, keepdims=True), 1e-12)
+    q_ids, q_mat = _collect_queries(queries)
     nq = len(q_ids)
     probe = np.argsort(-(q_mat @ centers_m.T), axis=1)[:, :nprobe]  # (nq, p)
     # Per-(query, probed cell) ADC tables from the query's residual
@@ -872,88 +848,41 @@ def ivfpq_topk(
         for pi in range(nprobe):
             probers.setdefault(int(probe[qi, pi]), []).append((qi, pi))
 
-    out_schema = T.StructType(
-        [
-            T.StructField("query_id", T.LongType(), True),
-            T.StructField("neighbor_id", T.LongType(), True),
-            T.StructField("approx_d", T.DoubleType(), True),
-        ]
-    )
-
-    def scan(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
-        import numpy as np
+    def batch_candidates(ids, x):
         import pandas as pd
 
-        for b in batches:
-            if len(b) == 0:
+        cell = np.argmax(x @ centers_m.T, axis=1)
+        r = x - centers_m[cell]
+        if rot is not None:
+            r = r @ rot
+        codes = (
+            (r.reshape(len(x), m, 1, dsub) - books_arr[None]) ** 2
+        ).sum(axis=3).argmin(axis=2)  # (n, m)
+        c_eff = min(candidates, len(ids))
+        rows = []
+        for c in np.unique(cell):
+            hits = probers.get(int(c))
+            if not hits:
                 continue
-            ids = b["neighbor_id"].to_numpy()
-            x = _stack(b["cvec"])
-            x /= np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
-            cell = np.argmax(x @ centers_m.T, axis=1)
-            r = x - centers_m[cell]
-            if rot is not None:
-                r = r @ rot
-            codes = (
-                (r.reshape(len(x), m, 1, dsub) - books_arr[None]) ** 2
-            ).sum(axis=3).argmin(axis=2)  # (n, m)
-            c_eff = min(candidates, len(ids))
-            rows = []
-            for c in np.unique(cell):
-                hits = probers.get(int(c))
-                if not hits:
-                    continue
-                mask = cell == c
-                m_ids, m_codes = ids[mask], codes[mask]
-                for qi, pi in hits:
-                    approx = tables[qi, pi][
-                        np.arange(m)[None, :], m_codes
-                    ].sum(axis=1)
-                    order = np.lexsort((m_ids, approx))[:c_eff]
-                    rows.append(
-                        pd.DataFrame(
-                            {
-                                "query_id": q_ids[qi],
-                                "neighbor_id": m_ids[order],
-                                "approx_d": approx[order],
-                            }
-                        )
+            mask = cell == c
+            m_ids, m_codes = ids[mask], codes[mask]
+            for qi, pi in hits:
+                approx = tables[qi, pi][np.arange(m)[None, :], m_codes].sum(
+                    axis=1
+                )
+                order = np.lexsort((m_ids, approx))[:c_eff]
+                rows.append(
+                    pd.DataFrame(
+                        {
+                            "query_id": q_ids[qi],
+                            "neighbor_id": m_ids[order],
+                            "approx_d": approx[order],
+                        }
                     )
-            if rows:
-                yield pd.concat(rows, ignore_index=True)
+                )
+        return rows
 
-    cand = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        )
-        .mapInPandas(scan, out_schema)
-        .where(F.col("query_id") != F.col("neighbor_id"))
-    )
-    wc = Window.partitionBy("query_id").orderBy(
-        F.asc("approx_d"), F.asc("neighbor_id")
-    )
-    top_cand = (
-        cand.withColumn("_r", F.row_number().over(wc))
-        .where(F.col("_r") <= candidates)
-        .drop("_r", "approx_d")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-    )
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-    )
-    pairs = top_cand.join(c, "neighbor_id").join(F.broadcast(q), "query_id")
-    scored = cosine_score_pairs(
-        pairs, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-    )
+    return _adc_topk(queries, corpus, batch_candidates, candidates, k)
 
 
 # Soft guard for the interpreted per-row frontier heap in _imi_keys:
@@ -1105,10 +1034,6 @@ def imi_topk(
     ksub: int = 16,
     nprobe: int = 2,
     k: int = 5,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-    seed: int = 7,
-    max_iter: int = 8,
     opq: bool = False,
 ) -> DataFrame:
     """Inverted MULTI-INDEX ANN (Babenko & Lempitsky 2012, the IMI in
@@ -1139,35 +1064,19 @@ def imi_topk(
     same argmin cells as its target on both halves, so the target's
     joint cell is always among the probe's cells at any ``nprobe``."""
     cap = min(max(2 * ksub * 10_000, 100_000), _TRAIN_SAMPLE_MAX)
-    sample = _content_keyed_sample(
-        corpus.select(
-            F.col(id_col).alias("_i"), F.col(vec_col).alias("_v")
-        ),
-        cap,
-        seed,
+    # OPQ at m=2 (IMI training IS PQ training): the rotation
+    # decorrelates the two HALF-SPACES so the joint cells are closer to
+    # a product of independent quantizers — applied identically to
+    # corpus and queries, so the exact-duplicate guarantee is untouched
+    # (same rotated halves, same argmins).
+    rot, books = _train_codebooks(
+        _content_keyed_sample(corpus, cap), 2, ksub, opq
     )
-    if opq:
-        # OPQ at m=2 (IMI training IS PQ training): the rotation
-        # decorrelates the two HALF-SPACES so the joint cells are
-        # closer to a product of independent quantizers — applied
-        # identically to corpus and queries, so the exact-duplicate
-        # guarantee is untouched (same rotated halves, same argmins).
-        rot, books = _train_opq(sample, 2, ksub, seed, max_iter)
-    else:
-        rot = None
-        books = _train_pq_books(sample, 2, ksub, seed, max_iter)
-
     cb = _imi_keys(
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"), F.col(vec_col).alias("cvec")
-        ),
-        books, nprobe=1, vec_col="cvec", rot=rot,
+        _corpus_side(corpus), books, nprobe=1, vec_col="cvec", rot=rot
     )
     qb = _imi_keys(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec")
-        ),
-        books, nprobe=nprobe, vec_col="qvec", rot=rot,
+        _query_side(queries), books, nprobe=nprobe, vec_col="qvec", rot=rot
     )
     # No distinct() needed: every corpus vector carries exactly ONE
     # joint cell (nprobe=1) and a query's nprobe² probed cells are
@@ -1175,18 +1084,9 @@ def imi_topk(
     # frontier index once), so the equi-join cannot emit a
     # (query, neighbor) pair twice — a dedup here would only add a
     # wide shuffle of the vector payloads (review finding r13).
-    candidates = (
+    return _rank_topk(
         cb.join(F.broadcast(qb), on="cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .select("query_id", "neighbor_id", "qvec", "cvec")
-    )
-    scored = cosine_score_pairs(
-        candidates, "qvec", "cvec", ["query_id", "neighbor_id"]
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc("neighbor_id")
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
+        .select("query_id", "neighbor_id", "qvec", "cvec"),
+        k,
     )

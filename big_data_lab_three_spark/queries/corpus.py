@@ -17,9 +17,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.functions.text import tokens
+from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table
+
+log = get_logger(__name__)
 
 _BPE_K = 10
 
@@ -5645,15 +5648,20 @@ def _png_gen_partitions(
     and the coalesce is a no-op."""
     import os
 
+    from py4j.protocol import Py4JJavaError
+
+    docs = os.path.join(sf_dir, "documents.parquet")
     try:
-        jvm = spark._jvm
-        path = jvm.org.apache.hadoop.fs.Path(
-            os.path.join(sf_dir, "documents.parquet")
-        )
+        path = spark._jvm.org.apache.hadoop.fs.Path(docs)
         fs = path.getFileSystem(spark._jsc.hadoopConfiguration())
         size = fs.getContentSummary(path).getLength()
-    except Exception:
-        return 16  # unknown FS: a safe mid fan-out, never 1-per-50-rows
+    except Py4JJavaError as err:
+        # unreadable/unknown FS: a safe mid fan-out, never 1-per-50-rows
+        log.warning(
+            "PNG fan-out falls back to 16 partitions: cannot size %s (%s)",
+            docs, err.java_exception.getClass().getName(),
+        )
+        return 16
     return max(1, int(size) // target_bytes)
 
 

@@ -612,13 +612,13 @@ def index_admit_batch(
     # before the write — the write IS the materialization; the
     # read-back costs a file open, not a job).  Sequencing is
     # unchanged: admitted lands before idx_bands, whose _SUCCESS
-    # remains the batch-complete marker.
-    admitted.select("id", "shard", "d").write.mode("overwrite").parquet(
-        batch_partition(admitted_dir, batch_id)
-    )
-    admitted_ids = spark.read.schema("id long, shard long, d string").parquet(
-        batch_partition(admitted_dir, batch_id)
-    ).select("id")
+    # remains the batch-complete marker.  The read-back uses the schema
+    # just written, so schema drift fails loudly instead of reading
+    # null columns.
+    part = batch_partition(admitted_dir, batch_id)
+    out = admitted.select("id", "shard", "d")
+    out.write.mode("overwrite").parquet(part)
+    admitted_ids = spark.read.schema(out.schema).parquet(part).select("id")
     bands.join(admitted_ids, "id", "left_semi").select(
         "band", "k"
     ).write.mode("overwrite").parquet(batch_partition(idx_bands, batch_id))

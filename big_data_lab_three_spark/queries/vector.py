@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -20,6 +22,13 @@ from big_data_lab_three_spark.operators.text import bm25_topk
 from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table
+
+
+def _rounded_topk(df: DataFrame) -> DataFrame:
+    return df.select(
+        "query_id", "neighbor_id", F.round("cos_sim", 4).alias("cos_sim"),
+        "rank",
+    )
 
 
 @register(
@@ -55,10 +64,7 @@ def similarity_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     over a partitioned corpus — linear, no shuffle of the corpus."""
     e = table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") % 100 == 0)
-    return brute_force_topk(q, e, k=5).select(
-        "query_id", "neighbor_id",
-        F.round("cos_sim", 4).alias("cos_sim"), "rank",
-    )
+    return _rounded_topk(brute_force_topk(q, e, k=5))
 
 
 # Shared oracle for the three ANN recall-audit gates below: everything
@@ -172,6 +178,20 @@ def _ann_recall_audit(
     )
 
 
+def _ann_audit(spark: SparkSession, sf_dir: str, ann) -> DataFrame:
+    """Recall-audit driver shared by the ``similarity_{lsh,ivf,imi,pq,
+    ivfpq}`` gates: ``ann(queries, corpus)`` top-5 over the
+    ``vec_id % 100 == 0`` query sample, audited against the exact
+    ``brute_force_topk`` baseline by :func:`_ann_recall_audit`."""
+    e = table(spark, sf_dir, "embeddings")
+    q = e.where(F.col("vec_id") % 100 == 0)
+    return _ann_recall_audit(ann(q, e), brute_force_topk(q, e, k=5), e, q)
+
+
+# The LSH family's 32 seeded hyperplanes (8 tables × 4 bits over d=64).
+_LSH_PLANES = np.random.default_rng(7).standard_normal((32, 64)).tolist()
+
+
 @register(
     "similarity_lsh",
     ids="similarity: random-hyperplane LSH bucketed ANN — recall-audit gate (full value oracle)",
@@ -186,13 +206,8 @@ def similarity_lsh_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the independent codegen rescore check.  Upgraded in r4 from a
     rows-only check to this full value hash; ``similarity_lsh_recall``
     still pins the exact-duplicate slice row-by-row."""
-    rng = np.random.default_rng(7)
-    planes = rng.standard_normal((32, 64)).tolist()
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % 100 == 0)
-    ann = lsh_bucketed_topk(q, e, planes, tables=8, k=5)
-    exact = brute_force_topk(q, e, k=5)
-    return _ann_recall_audit(ann, exact, e, q)
+    ann = partial(lsh_bucketed_topk, planes=_LSH_PLANES, tables=8, k=5)
+    return _ann_audit(spark, sf_dir, ann)
 
 
 @register(
@@ -205,11 +220,9 @@ def similarity_ivf_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     nprobe=4, exact cosine rescore on candidates), audited in-query
     against the brute-force baseline — same gate design as
     ``similarity_lsh`` (measured recall 0.57–0.72 across SFs)."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % 100 == 0)
-    ann = ivf_topk(q, e, nlist=16, nprobe=4, k=5)
-    exact = brute_force_topk(q, e, k=5)
-    return _ann_recall_audit(ann, exact, e, q)
+    return _ann_audit(
+        spark, sf_dir, partial(ivf_topk, nlist=16, nprobe=4, k=5)
+    )
 
 
 # --------------------------------------------------------------------------
@@ -275,6 +288,14 @@ def _planted_probe_frames(e: DataFrame) -> tuple[DataFrame, DataFrame]:
     return corpus, probes
 
 
+def _planted_probe_topk(spark: SparkSession, sf_dir: str, ann) -> DataFrame:
+    """Planted-probe driver shared by the ``similarity_*_recall``
+    gates: ``ann(probes, corpus)`` over :func:`_planted_probe_frames`,
+    cos_sim rounded to 4 places, ordered by query_id."""
+    corpus, probes = _planted_probe_frames(table(spark, sf_dir, "embeddings"))
+    return _rounded_topk(ann(probes, corpus)).orderBy("query_id")
+
+
 @register(
     "similarity_lsh_recall",
     ids="similarity: LSH ANN planted-probe retrieval (deterministic full oracle, all tiers)",
@@ -291,20 +312,8 @@ def similarity_lsh_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     bucket join, candidate dedup, Arrow-batched rescore, ranked window —
     gets a DuckDB value hash at all four tiers, complementing
     ``similarity_lsh``'s probabilistic audit gate."""
-    rng = np.random.default_rng(7)
-    planes = rng.standard_normal((32, 64)).tolist()
-    e = table(spark, sf_dir, "embeddings")
-    corpus, probes = _planted_probe_frames(e)
-    return (
-        lsh_bucketed_topk(probes, corpus, planes, tables=8, k=1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
-    )
+    ann = partial(lsh_bucketed_topk, planes=_LSH_PLANES, tables=8, k=1)
+    return _planted_probe_topk(spark, sf_dir, ann)
 
 
 @register(
@@ -321,17 +330,8 @@ def similarity_ivf_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     deterministic at every tier.  Pins the KMeans assignment,
     inverted-file probe, candidate rescore, and ranking with a full
     value hash."""
-    e = table(spark, sf_dir, "embeddings")
-    corpus, probes = _planted_probe_frames(e)
-    return (
-        ivf_topk(probes, corpus, nlist=16, nprobe=4, k=1)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
+    return _planted_probe_topk(
+        spark, sf_dir, partial(ivf_topk, nlist=16, nprobe=4, k=1)
     )
 
 
@@ -358,11 +358,9 @@ def similarity_imi_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     lift measured recall@5 from 0.80/0.72/0.51 to a flat
     0.80/0.80/0.80 across the tiers — the multiplicative-cell
     granularity win the IMI design exists for."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % 100 == 0)
-    ann = imi_topk(q, e, ksub=16, nprobe=8, k=5, opq=True)
-    exact = brute_force_topk(q, e, k=5)
-    return _ann_recall_audit(ann, exact, e, q, recall_floor=0.4)
+    return _ann_audit(
+        spark, sf_dir, partial(imi_topk, ksub=16, nprobe=8, k=5, opq=True)
+    )
 
 
 @register(
@@ -379,17 +377,8 @@ def similarity_imi_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     by construction — pinning codebook training, per-half assignment,
     the joint-cell probe join, candidate rescore, and ranking with a
     full value hash at every tier."""
-    e = table(spark, sf_dir, "embeddings")
-    corpus, probes = _planted_probe_frames(e)
-    return (
-        imi_topk(probes, corpus, ksub=16, nprobe=2, k=1, opq=True)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
+    return _planted_probe_topk(
+        spark, sf_dir, partial(imi_topk, ksub=16, nprobe=2, k=1, opq=True)
     )
 
 
@@ -472,11 +461,8 @@ def similarity_pq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     again to 1.00/1.00/0.88 (EXPERIMENTS.md).  Exercises rotation +
     codebook training, encoding, the ADC candidate scan, and the exact
     rescore under a full value hash."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % 100 == 0)
-    ann = pq_topk(q, e, m=8, ksub=16, k=5, opq=True, candidates=256)
-    exact = brute_force_topk(q, e, k=5)
-    return _ann_recall_audit(ann, exact, e, q)
+    ann = partial(pq_topk, m=8, ksub=16, k=5, opq=True, candidates=256)
+    return _ann_audit(spark, sf_dir, ann)
 
 
 @register(
@@ -497,19 +483,8 @@ def similarity_pq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     rotation applies identically to probe and target, so the duplicate
     still attains every per-subspace minimum — the guarantee is
     rotation-invariant."""
-    e = table(spark, sf_dir, "embeddings")
-    corpus, probes = _planted_probe_frames(e)
-    return (
-        pq_topk(probes, corpus, m=8, ksub=16, k=1, opq=True,
-                candidates=256)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
-    )
+    ann = partial(pq_topk, m=8, ksub=16, k=1, opq=True, candidates=256)
+    return _planted_probe_topk(spark, sf_dir, ann)
 
 
 @register(
@@ -536,13 +511,10 @@ def similarity_ivfpq_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     tier).  The 6/16 probe fraction is a small-fixture artifact: at
     production nlist (thousands of cells) nprobe stays a few dozen and
     the scan fraction falls, not rises."""
-    e = table(spark, sf_dir, "embeddings")
-    q = e.where(F.col("vec_id") % 100 == 0)
-    ann = ivfpq_topk(
-        q, e, nlist=16, nprobe=6, m=8, ksub=64, k=5, candidates=512
+    ann = partial(
+        ivfpq_topk, nlist=16, nprobe=6, m=8, ksub=64, k=5, candidates=512
     )
-    exact = brute_force_topk(q, e, k=5)
-    return _ann_recall_audit(ann, exact, e, q)
+    return _ann_audit(spark, sf_dir, ann)
 
 
 @register(
@@ -560,21 +532,10 @@ def similarity_ivfpq_recall_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``operators.similarity.ivfpq_topk``).  Pins coarse training, cell
     assignment, residual PQ encoding, the per-cell ADC scan, candidate
     cuts, and rescore under a full value hash at every tier."""
-    e = table(spark, sf_dir, "embeddings")
-    corpus, probes = _planted_probe_frames(e)
-    return (
-        ivfpq_topk(
-            probes, corpus, nlist=16, nprobe=6, m=8, ksub=64, k=1,
-            candidates=512,
-        )
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round("cos_sim", 4).alias("cos_sim"),
-            "rank",
-        )
-        .orderBy("query_id")
+    ann = partial(
+        ivfpq_topk, nlist=16, nprobe=6, m=8, ksub=64, k=1, candidates=512
     )
+    return _planted_probe_topk(spark, sf_dir, ann)
 
 
 @register(
@@ -726,11 +687,8 @@ def filtered_ann_topk_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     ineligible row groups."""
     e = table(spark, sf_dir, "embeddings")
     q = e.where(F.col("vec_id") % 100 == 0)
-    return brute_force_topk(q, e.where(F.col("label") == 3), k=5).select(
-        "query_id",
-        "neighbor_id",
-        F.round("cos_sim", 4).alias("cos_sim"),
-        "rank",
+    return _rounded_topk(
+        brute_force_topk(q, e.where(F.col("label") == 3), k=5)
     )
 
 

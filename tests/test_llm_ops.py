@@ -7,6 +7,7 @@ known exactly — stronger than the driver's rows-only check.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.operators.similarity import brute_force_topk
@@ -873,3 +874,91 @@ def test_unigram_oracle_differential_on_random_corpora(spark, tmp_path):
         )
         want = [tuple(r) for r in con.execute(q.oracle).fetchall()]
         assert got == want, f"case {case} corpus {text!r}"
+
+
+def _tie_corpus(spark):
+    """Query 10 plus a corpus holding it, two neighbours (3 and 2, in
+    that order) at the identical cosine 1/√2, one orthogonal and one
+    opposite vector."""
+    rows = [
+        (10, [1.0, 0.0, 0.0, 0.0]),
+        (3, [1.0, 1.0, 0.0, 0.0]),
+        (2, [1.0, 0.0, 1.0, 0.0]),
+        (1, [0.0, 0.0, 0.0, 1.0]),
+        (5, [-1.0, 0.0, 0.0, 0.0]),
+    ]
+    corpus = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
+    return corpus.where(F.col("vec_id") == 10), corpus
+
+
+def test_topk_tail_breaks_cosine_ties_on_lower_neighbor_id(spark):
+    q, corpus = _tie_corpus(spark)
+    top = brute_force_topk(q, corpus, k=2).orderBy("rank").collect()
+    assert [(r.neighbor_id, r.rank) for r in top] == [(2, 1), (3, 2)]
+    assert top[0].cos_sim == top[1].cos_sim
+
+
+def test_topk_tail_excludes_the_self_match(spark):
+    q, corpus = _tie_corpus(spark)
+    top = brute_force_topk(q, corpus, k=1).collect()
+    assert [(r.query_id, r.neighbor_id) for r in top] == [(10, 2)]
+
+
+def test_topk_tail_k_above_candidate_count_returns_every_candidate(spark):
+    q, corpus = _tie_corpus(spark)
+    top = brute_force_topk(q, corpus, k=10).orderBy("rank").collect()
+    assert [(r.neighbor_id, r.rank) for r in top] == [
+        (2, 1), (3, 2), (1, 3), (5, 4)
+    ]
+
+
+def _lsh(q, e, k):
+    import numpy as np
+
+    from big_data_lab_three_spark.operators.similarity import (
+        lsh_bucketed_topk,
+    )
+
+    planes = np.random.default_rng(7).standard_normal((32, 64)).tolist()
+    return lsh_bucketed_topk(q, e, planes, tables=8, k=k)
+
+
+def _ann_operators():
+    from big_data_lab_three_spark.operators import similarity as s
+
+    return {
+        "brute_force_topk": lambda q, e: s.brute_force_topk(q, e, k=5),
+        "lsh_bucketed_topk": lambda q, e: _lsh(q, e, k=5),
+        "ivf_topk": lambda q, e: s.ivf_topk(q, e, nlist=16, nprobe=4, k=5),
+        "pq_topk": lambda q, e: s.pq_topk(q, e, m=8, ksub=16, k=5),
+        "ivfpq_topk": lambda q, e: s.ivfpq_topk(
+            q, e, nlist=16, nprobe=4, m=8, ksub=16, k=5
+        ),
+        "imi_topk": lambda q, e: s.imi_topk(q, e, ksub=8, nprobe=2, k=5),
+    }
+
+
+@pytest.mark.parametrize("op", sorted(_ann_operators()))
+def test_ann_operator_output_schema(spark, sf_dir, op):
+    """Every ``*_topk`` operator returns the shared tail's schema."""
+    e = table(spark, sf_dir, "embeddings")
+    q = e.where(F.col("vec_id") % 100 == 0)
+    df = _ann_operators()[op](q, e)
+    assert df.dtypes == [
+        ("query_id", "bigint"),
+        ("neighbor_id", "bigint"),
+        ("cos_sim", "double"),
+        ("rank", "int"),
+    ]
+
+
+@pytest.mark.parametrize("n_planes, tables", [(30, 8), (64, 1)])
+def test_hyperplane_keys_rejects_bad_plane_split(spark, n_planes, tables):
+    """Leftover planes (30 over 8 tables) and a table wider than 63
+    bits (64 over 1) both raise instead of silently mis-keying."""
+    from big_data_lab_three_spark.operators.similarity import hyperplane_keys
+
+    df = spark.createDataFrame([(1, [1.0, 0.0])], "id long, v array<double>")
+    planes = [[1.0, 0.0]] * n_planes
+    with pytest.raises(ValueError):
+        hyperplane_keys(df, planes, tables, vec_col="v")

@@ -479,3 +479,22 @@ def test_image_phash_brightness_invariance(spark):
     }
     assert got[0] == got[1], "uniform brightness shift must be Hamming 0"
     assert got[0] != got[2], "structural edit must move the hash"
+
+
+def test_png_gen_partitions_logs_its_fallback(spark, sf_dir, tmp_path):
+    """A filesystem error while sizing the PNG stage falls back to 16
+    partitions and says so in the log; a readable tier is sized from
+    its documents table (at least one partition)."""
+    from logging.handlers import BufferingHandler
+
+    from big_data_lab_three_spark.queries import corpus
+
+    handler = BufferingHandler(capacity=100)
+    corpus.log.addHandler(handler)
+    try:
+        missing = str(tmp_path / "no_such_tier")
+        assert corpus._png_gen_partitions(spark, missing) == 16
+    finally:
+        corpus.log.removeHandler(handler)
+    assert len(handler.buffer) == 1
+    assert corpus._png_gen_partitions(spark, sf_dir) >= 1
