@@ -6,10 +6,19 @@ Differences from the reference, by design (SURVEY.md §4.3):
 - ONE SparkSession and model registry for the process — the reference
   constructs a ``MultiModel``/``Predictor`` per HTTP request
   (``src/app.py:54``), re-reading and re-fitting everything.
-- ``upload`` mode actually works: CSV bytes → Spark DataFrame →
-  conform to the trained contract → score (the reference's endpoint
-  500s because ``predict_upload`` does not exist —
-  ``src/app.py:97,120-124``).
+- ``upload`` mode actually works: CSV bytes → pandas → conform to the
+  trained contract → score (the reference's endpoint 500s because
+  ``predict_upload`` does not exist — ``src/app.py:97,120-124``).
+  ``d_tree`` and ``log_reg`` uploads score driver-local: the fitted
+  pipeline is compiled once into a NumPy scorer (``ml/local.py``) with
+  the same predictions as ``transform``, so a request never crosses
+  into the JVM.  ``rand_forest`` (its leaves' class statistics are not
+  readable in one call) and ``gnb`` keep the Spark transform.
+- Upload input is checked before either path: a header-only CSV scores
+  zero rows, and a non-numeric feature column is a ``ValueError``
+  (HTTP 400), never coerced.
+- The cache key names the model, and a retrain drops that model's
+  cached smoke score.  Uploads neither read nor write the cache.
 
 FastAPI/redis are optional imports (not baked into every container);
 ``create_app`` raises a clear error if FastAPI is missing, and caching
@@ -21,12 +30,14 @@ from __future__ import annotations
 
 import io
 import json
+import weakref
 
-from pyspark.sql import functions as F
+import pandas as pd
 
 from big_data_lab_three_spark.catalog import Catalog
 from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.ml import MultiModel
+from big_data_lab_three_spark.ml.local import compile_scorer
 from big_data_lab_three_spark.schemas import conform
 from big_data_lab_three_spark.session import get_spark
 from big_data_lab_three_spark.sources.sinks import redis_client
@@ -37,7 +48,7 @@ VALID_MODELS = ("d_tree", "rand_forest", "log_reg", "gnb")
 
 
 class _Cache:
-    """S5 — Redis read-through cache on ``predict:{mode}`` keys
+    """S5 — Redis read-through cache on ``predict:{mode}:{model}`` keys
     (reference ``src/app.py:98-115``); silently disabled without a
     reachable Redis."""
 
@@ -59,6 +70,10 @@ class _Cache:
         if self.conn is not None:
             self.conn.set(key, json.dumps(value))
 
+    def delete(self, key: str) -> None:
+        if self.conn is not None:
+            self.conn.delete(key)
+
 
 class Service:
     """Framework-free core so the API logic is testable without
@@ -76,6 +91,10 @@ class Service:
         self.mm = MultiModel(
             self.spark, train, test, feats, catalog=self.catalog
         )
+        # fitted model → its compiled scorer (None: score in Spark); a
+        # retrain puts a new model object in ``mm.models``, so the old
+        # entry drops with the old model
+        self._scorers = weakref.WeakKeyDictionary()
 
     def train(
         self,
@@ -90,6 +109,7 @@ class Service:
         if model_type not in VALID_MODELS:
             raise ValueError(f"unknown model type: {model_type}")
         ok = self.mm.train(model_type, params or {}, save=save_model)
+        self.cache.delete(f"predict:smoke:{model_type}")
         result = {
             "model_trained": ok,
             "model_type": model_type,
@@ -107,46 +127,72 @@ class Service:
     ) -> dict:
         """V2 — POST /predict/: read-through cache; smoke scores the
         held-out split, upload scores caller-supplied CSV bytes."""
-        cache_key = f"predict:{mode}"
-        if mode != "upload":
-            cached = self.cache.get(cache_key)
-            if cached is not None:
-                return {"from_cache": True, **cached}
-
-        if model_type not in self.mm.models:
-            self.mm.train(model_type, save=False)
-
-        if mode == "smoke":
-            result = self.mm.predict(model_type, mode)
-        elif mode == "upload":
+        if mode == "upload":
             if file_contents is None:
                 raise ValueError("upload mode requires file contents")
-            result = self._predict_upload(model_type, file_contents)
-        else:
+            if model_type not in self.mm.models:
+                self.mm.train(model_type, save=False)
+            return {
+                "from_cache": False,
+                **self._predict_upload(model_type, file_contents),
+            }
+        if mode != "smoke":
             raise ValueError(f"unknown mode: {mode}")
 
+        cache_key = f"predict:{mode}:{model_type}"
+        cached = self.cache.get(cache_key)
+        if cached is not None:
+            return {"from_cache": True, **cached}
+        if model_type not in self.mm.models:
+            self.mm.train(model_type, save=False)
+        result = self.mm.predict(model_type, mode)
         self.cache.set(cache_key, result)
         return {"from_cache": False, **result}
 
     def _predict_upload(self, model_type: str, file_contents: bytes) -> dict:
-        """S10 fixed: CSV bytes → DataFrame → conform to contract →
-        score.  Small request-sized frames — driver-local parallelize is
-        the right plan here, not a distributed read."""
-        import pandas as pd
-
-        pdf = pd.read_csv(io.BytesIO(file_contents))
-        df = self.spark.createDataFrame(pdf)
-        scored = self.mm.models[model_type].transform(
-            conform(df, self.feature_cols)
-        )
-        preds = [int(r["prediction"]) for r in
-                 scored.select("prediction").collect()]
+        """S10 fixed: CSV bytes → pandas → conform to contract → score,
+        driver-local when the model compiles (``ml/local.py``), else
+        through the Spark pipeline."""
+        pdf = self._read_upload(file_contents)
+        model = self.mm.models[model_type]
+        if model not in self._scorers:
+            self._scorers[model] = compile_scorer(model)
+        scorer = self._scorers[model]
+        if pdf.empty:
+            preds = []
+        elif scorer is not None:
+            preds = scorer.predict(pdf).tolist()
+        else:
+            preds = self._spark_predict(model, pdf)
         return {
             "model": model_type,
             "mode": "upload",
             "n_rows": len(preds),
             "predictions": preds,
         }
+
+    def _read_upload(self, file_contents: bytes) -> pd.DataFrame:
+        """Parse upload CSV bytes; a feature column must be numeric
+        (empty cells and ±inf are fine) — Spark would reject it with a
+        500, and coercing it would impute over the caller's data."""
+        pdf = pd.read_csv(io.BytesIO(file_contents))
+        if pdf.empty:
+            return pdf
+        for c in self.feature_cols:
+            if c in pdf.columns and (
+                not pd.api.types.is_numeric_dtype(pdf[c])
+                or pd.api.types.is_bool_dtype(pdf[c])
+            ):
+                raise ValueError(f"upload column {c!r} is not numeric")
+        return pdf
+
+    def _spark_predict(self, model, pdf: pd.DataFrame) -> list[int]:
+        """The pipeline's own ``transform`` on a driver-local frame."""
+        df = conform(self.spark.createDataFrame(pdf), self.feature_cols)
+        return [
+            int(r["prediction"])
+            for r in model.transform(df).select("prediction").collect()
+        ]
 
 
 def create_app(sf_dir: str = "/root/testdata/sf0.001"):

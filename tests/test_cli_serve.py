@@ -15,6 +15,7 @@ import pytest
 
 from big_data_lab_three_spark.flows import preprocess_flows, split_data
 from big_data_lab_three_spark.catalog import Catalog
+from big_data_lab_three_spark.serve.app import VALID_MODELS
 
 
 @pytest.fixture(scope="module")
@@ -85,32 +86,219 @@ def test_cli_train_and_predict(tmp_path, monkeypatch, capsys):
     assert out["model"] == "gnb" and 0.0 <= out["test_score"] <= 1.0
 
 
-def test_service_train_predict_upload(tmp_path, monkeypatch):
+@pytest.fixture(scope="module")
+def service(tmp_path_factory):
+    """One serving core shared by the module's serve tests (building
+    one splits the training frame); a test that needs a fresh model
+    retrains it."""
     from big_data_lab_three_spark.serve.app import Service
 
-    monkeypatch.chdir(tmp_path)
-    svc = Service()
-    result = svc.train("d_tree", save_model=False, predict_flag=True)
+    with pytest.MonkeyPatch.context() as mp:
+        mp.chdir(tmp_path_factory.mktemp("serve"))
+        return Service()
+
+
+class _FakeRedis:
+    """Dict-backed stand-in for the Redis connection, logging calls."""
+
+    def __init__(self):
+        self.data, self.calls = {}, []
+
+    def get(self, key):
+        self.calls.append(("get", key))
+        return self.data.get(key)
+
+    def set(self, key, value):
+        self.calls.append(("set", key))
+        self.data[key] = value
+
+    def delete(self, key):
+        self.calls.append(("delete", key))
+        self.data.pop(key, None)
+
+
+UPLOAD_CSV = (
+    "l_quantity,l_extendedprice,l_discount,l_tax,extra_col\n"
+    "10,1000.5,0.05,0.02,ignored\n"
+    "40,99999.0,0.09,0.01,ignored\n"
+).encode()
+
+
+@pytest.mark.parametrize("model_type", VALID_MODELS)
+def test_service_train_predict_upload(service, model_type):
+    result = service.train(model_type, save_model=False, predict_flag=True)
     assert result["model_trained"] and not result["model_saved"]
     assert 0.0 <= result["test_score"] <= 1.0
 
     with pytest.raises(ValueError):
-        svc.train("not_a_model")
+        service.train("not_a_model")
 
-    smoke = svc.predict("smoke", "d_tree")
+    smoke = service.predict("smoke", model_type)
     assert smoke["from_cache"] is False  # no redis in container
 
-    csv_bytes = (
-        "l_quantity,l_extendedprice,l_discount,l_tax,extra_col\n"
-        "10,1000.5,0.05,0.02,ignored\n"
-        "40,99999.0,0.09,0.01,ignored\n"
-    ).encode()
-    up = svc.predict("upload", "d_tree", file_contents=csv_bytes)
+    up = service.predict("upload", model_type, file_contents=UPLOAD_CSV)
     assert up["n_rows"] == 2
     assert all(p in (0, 1) for p in up["predictions"])
 
     with pytest.raises(ValueError):
-        svc.predict("upload", "d_tree", file_contents=None)
+        service.predict("upload", model_type, file_contents=None)
+
+
+def test_cache_key_names_the_model_and_retrain_drops_it(
+    service, monkeypatch
+):
+    """A log_reg smoke must never be served d_tree's cached score, and a
+    retrain must never be served the score of the model it replaced."""
+    fake = _FakeRedis()
+    monkeypatch.setattr(service.cache, "conn", fake)
+    service.train("d_tree", save_model=False)
+    assert service.predict("smoke", "d_tree")["from_cache"] is False
+    assert service.predict("smoke", "log_reg")["from_cache"] is False
+    assert service.predict("smoke", "d_tree")["from_cache"] is True
+    service.train("d_tree", save_model=False)
+    assert service.predict("smoke", "d_tree")["from_cache"] is False
+
+
+def test_upload_neither_reads_nor_writes_the_cache(service, monkeypatch):
+    fake = _FakeRedis()
+    monkeypatch.setattr(service.cache, "conn", fake)
+    service.predict("upload", "d_tree", file_contents=UPLOAD_CSV)
+    assert fake.calls == []
+
+
+@pytest.mark.parametrize("model_type", ["d_tree", "rand_forest"])
+def test_upload_header_only_csv_scores_no_rows(service, model_type):
+    """Both scoring paths: d_tree compiles, rand_forest uses Spark."""
+    out = service.predict(
+        "upload", model_type,
+        file_contents=b"l_quantity,l_extendedprice,l_discount,l_tax\n",
+    )
+    assert out["n_rows"] == 0 and out["predictions"] == []
+
+
+@pytest.mark.parametrize("model_type", ["d_tree", "rand_forest"])
+def test_upload_non_numeric_feature_is_a_value_error(service, model_type):
+    """A 400 naming the column, never a JVM type error or an imputed
+    guess in place of the caller's value."""
+    csv_bytes = (
+        "l_quantity,l_extendedprice,l_discount,l_tax\n"
+        "10,1000.5,0.05,0.02\n"
+        "12,lots,0.05,0.02\n"
+    ).encode()
+    with pytest.raises(ValueError, match="l_extendedprice"):
+        service.predict("upload", model_type, file_contents=csv_bytes)
+
+
+PARITY_SEED = 20261017
+
+
+def _parity_frames(n=1200, seed=PARITY_SEED):
+    """Two seeded upload frames, parsed the way the service parses them:
+    ``l_quantity`` integer-typed; the other features with 5% empty
+    cells, 2% +inf and 2% -inf; the second frame lacks ``l_tax`` and
+    carries an extra text column."""
+    import io
+
+    import numpy as np
+    import pandas as pd
+
+    rng = np.random.default_rng(seed)
+    frames = []
+    for drop_tax in (False, True):
+        cols = {
+            "l_quantity": rng.integers(1, 51, n).astype(str),
+            "l_extendedprice": np.round(rng.uniform(900, 105000, n), 2),
+            "l_discount": rng.integers(0, 11, n) / 100,
+            "l_tax": rng.integers(0, 9, n) / 100,
+        }
+        for c in ("l_extendedprice", "l_discount", "l_tax"):
+            v = cols[c].astype(str).astype(object)
+            u = rng.random(n)
+            v[u < 0.05] = ""
+            v[(u >= 0.05) & (u < 0.07)] = "inf"
+            v[(u >= 0.07) & (u < 0.09)] = "-inf"
+            cols[c] = v
+        text = pd.DataFrame(cols)
+        if drop_tax:
+            text = text.drop(columns=["l_tax"]).assign(note="free text")
+        csv_bytes = text.to_csv(index=False).encode()
+        frames.append(pd.read_csv(io.BytesIO(csv_bytes)))
+    return frames
+
+
+@pytest.mark.parametrize("model_type", ["d_tree", "log_reg"])
+def test_compiled_scorer_matches_spark_transform(service, model_type):
+    """The NumPy scorer is exact: 0 of 2,400 seeded rows differ from
+    ``PipelineModel.transform(...).prediction``."""
+    import numpy as np
+
+    from big_data_lab_three_spark.ml.local import compile_scorer
+
+    full, partial = _parity_frames()
+    assert str(full["l_quantity"].dtype) == "int64"
+    assert full.isna().any().any() and np.isinf(full["l_tax"]).any()
+    service.train(model_type, save_model=False)
+    model = service.mm.models[model_type]
+    scorer = compile_scorer(model)
+    assert scorer is not None
+    for pdf in (full, partial):
+        local = scorer.predict(pdf)
+        spark = np.array(service._spark_predict(model, pdf))
+        assert len(local) == len(pdf)
+        assert int((local != spark).sum()) == 0
+        assert 0 < local.sum() < len(pdf)  # both classes occur
+
+
+def test_tree_head_goes_left_on_equal_and_rejects_categorical_splits():
+    """Spark's continuous split sends ``x <= threshold`` left, so a value
+    equal to the threshold goes left and NaN goes right; a categorical
+    split has no compiled form and must fail loudly."""
+    from types import SimpleNamespace
+
+    import numpy as np
+
+    from big_data_lab_three_spark.ml.local import _tree_head
+
+    header = "DecisionTreeClassificationModel: uid=t, depth=1, numNodes=3\n"
+    tree = SimpleNamespace(toDebugString=header + (
+        "  If (feature 1 <= 0.5)\n"
+        "   Predict: 0.0\n"
+        "  Else (feature 1 > 0.5)\n"
+        "   Predict: 1.0\n"
+    ))
+    x = np.array([[9.0, 0.5], [9.0, 0.5000001], [9.0, np.nan],
+                  [9.0, -np.inf]])
+    assert _tree_head(tree)(x).tolist() == [0, 1, 1, 0]
+
+    categorical = SimpleNamespace(toDebugString=header + (
+        "  If (feature 0 in {1.0,2.0})\n"
+        "   Predict: 0.0\n"
+        "  Else (feature 0 not in {1.0,2.0})\n"
+        "   Predict: 1.0\n"
+    ))
+    with pytest.raises(ValueError, match="unsupported tree split"):
+        _tree_head(categorical)
+
+
+def test_compiled_uploads_never_reach_spark(service, monkeypatch):
+    """d_tree and log_reg score driver-local; rand_forest (and gnb) have
+    no compiled form and still go through Spark."""
+    from big_data_lab_three_spark.ml.local import compile_scorer
+
+    for model_type in ("d_tree", "log_reg", "rand_forest"):
+        if model_type not in service.mm.models:
+            service.train(model_type, save_model=False)
+
+    def no_spark(*args, **kwargs):
+        raise RuntimeError("upload reached Spark")
+
+    monkeypatch.setattr(service.spark, "createDataFrame", no_spark)
+    for model_type in ("d_tree", "log_reg"):
+        out = service.predict("upload", model_type, file_contents=UPLOAD_CSV)
+        assert out["n_rows"] == 2
+    assert compile_scorer(service.mm.models["rand_forest"]) is None
+    with pytest.raises(RuntimeError, match="reached Spark"):
+        service.predict("upload", "rand_forest", file_contents=UPLOAD_CSV)
 
 
 def _write_fixture(path, rows=8):
