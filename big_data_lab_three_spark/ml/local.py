@@ -21,6 +21,9 @@ Other heads return no scorer: a random forest's prediction needs the
 per-leaf class statistics that ``toDebugString`` does not print, and
 Gaussian naive Bayes is not compiled.  Their callers keep the Spark
 transform, which also stays the parity reference in the tests.
+
+``accuracy`` is ``models.score``'s aggregate in NumPy, so a held-out
+split scored by a compiled pipeline gets the same figure as Spark's.
 """
 
 from __future__ import annotations
@@ -32,6 +35,7 @@ from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.ml import PipelineModel
 from pyspark.ml.classification import (
     DecisionTreeClassificationModel,
@@ -89,6 +93,23 @@ def compile_scorer(model: PipelineModel) -> LocalScorer | None:
         scale,
         head,
     )
+
+
+def accuracy(
+    predictions: np.ndarray, labels: pa.Array | pa.ChunkedArray
+) -> float:
+    """Spark's ``avg(cast(prediction = label AS double))`` over Arrow
+    labels, where a null stays apart from NaN: a null label drops out
+    of both the count of hits and the count of rows, a NaN label is a
+    miss.  No labelled row is a ``ValueError``, where Spark's average
+    would be NULL."""
+    known = ~labels.is_null().to_numpy(zero_copy_only=False)
+    n = int(known.sum())
+    if n == 0:
+        raise ValueError("no labelled rows to score")
+    y = labels.to_numpy(zero_copy_only=False)[known]
+    hits = np.asarray(predictions)[known] == y
+    return int(hits.sum()) / n
 
 
 def _logistic_head(clf: LogisticRegressionModel):

@@ -105,13 +105,16 @@ def train_classifier(
 
 def score(model: PipelineModel, df: DataFrame, label_col: str = "label") -> float:
     """M7 — accuracy (reference ``classifier.score``,
-    ``src/train.py:210-212``)."""
+    ``src/train.py:210-212``); rows with a null label are not counted,
+    and a frame with no labelled row is a ``ValueError``."""
     pred = model.transform(
         df.withColumn("label", F.col(label_col).cast("double"))
     )
     row = pred.agg(
         F.avg((F.col("prediction") == F.col("label")).cast("double")).alias("acc")
     ).first()
+    if row["acc"] is None:
+        raise ValueError("no labelled rows to score")
     return float(row["acc"])
 
 

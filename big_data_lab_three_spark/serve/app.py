@@ -14,6 +14,13 @@ Differences from the reference, by design (SURVEY.md §4.3):
   the same predictions as ``transform``, so a request never crosses
   into the JVM.  ``rand_forest`` (its leaves' class statistics are not
   readable in one call) and ``gnb`` keep the Spark transform.
+- ``smoke`` for ``d_tree`` and ``log_reg`` is driver-local too: the
+  first smoke collects the held-out split once through Arrow (its
+  feature columns and label as doubles, so rows × 5 doubles of driver
+  memory) and keeps it while ``mm.test_df`` is the same frame; each
+  smoke then runs the compiled scorer over it and takes the accuracy
+  in NumPy (``ml.local.accuracy``, the figure Spark's ``score`` gives).
+  ``rand_forest`` and ``gnb`` smoke still run ``score`` in Spark.
 - Upload input is checked before either path: a header-only CSV scores
   zero rows, and a non-numeric feature column is a ``ValueError``
   (HTTP 400), never coerced.
@@ -33,11 +40,12 @@ import json
 import weakref
 
 import pandas as pd
+from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.catalog import Catalog
 from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.ml import MultiModel
-from big_data_lab_three_spark.ml.local import compile_scorer
+from big_data_lab_three_spark.ml.local import accuracy, compile_scorer
 from big_data_lab_three_spark.schemas import conform
 from big_data_lab_three_spark.session import get_spark
 from big_data_lab_three_spark.sources.sinks import redis_client
@@ -95,6 +103,9 @@ class Service:
         # retrain puts a new model object in ``mm.models``, so the old
         # entry drops with the old model
         self._scorers = weakref.WeakKeyDictionary()
+        # (test frame, its features as pandas, its labels as Arrow),
+        # collected on the first compiled smoke
+        self._held_out_split = None
 
     def train(
         self,
@@ -116,7 +127,7 @@ class Service:
             "model_saved": bool(save_model and ok),
         }
         if predict_flag:
-            result["test_score"] = self.mm.predict(model_type)["test_score"]
+            result["test_score"] = self._smoke(model_type)["test_score"]
         return result
 
     def predict(
@@ -145,9 +156,49 @@ class Service:
             return {"from_cache": True, **cached}
         if model_type not in self.mm.models:
             self.mm.train(model_type, save=False)
-        result = self.mm.predict(model_type, mode)
+        result = self._smoke(model_type)
         self.cache.set(cache_key, result)
         return {"from_cache": False, **result}
+
+    def _scorer(self, model):
+        """The fitted model's compiled scorer (None: score in Spark),
+        compiled on first use."""
+        if model not in self._scorers:
+            self._scorers[model] = compile_scorer(model)
+        return self._scorers[model]
+
+    def _smoke(self, model_type: str) -> dict:
+        """Accuracy on the held-out split: the compiled scorer over the
+        collected split, else ``MultiModel.predict`` in Spark."""
+        scorer = self._scorer(self.mm.models[model_type])
+        if scorer is None:
+            return self.mm.predict(model_type, "smoke")
+        features, labels = self._held_out()
+        return {
+            "model": model_type,
+            "mode": "smoke",
+            "test_score": accuracy(scorer.predict(features), labels),
+        }
+
+    def _held_out(self):
+        """The held-out split's feature columns (pandas) and labels
+        (Arrow, so a null label stays apart from NaN), both as doubles
+        the way ``score`` casts them; collected again only when
+        ``mm.test_df`` is another frame."""
+        test_df = self.mm.test_df
+        cached = self._held_out_split
+        if cached is None or cached[0] is not test_df:
+            label = "__label"
+            table = test_df.select(
+                *[F.col(c).cast("double").alias(c) for c in self.feature_cols],
+                F.col(self.mm.label_col).cast("double").alias(label),
+            ).toArrow()
+            self._held_out_split = (
+                test_df,
+                table.drop_columns([label]).to_pandas(),
+                table.column(label),
+            )
+        return self._held_out_split[1:]
 
     def _predict_upload(self, model_type: str, file_contents: bytes) -> dict:
         """S10 fixed: CSV bytes → pandas → conform to contract → score,
@@ -155,9 +206,7 @@ class Service:
         through the Spark pipeline."""
         pdf = self._read_upload(file_contents)
         model = self.mm.models[model_type]
-        if model not in self._scorers:
-            self._scorers[model] = compile_scorer(model)
-        scorer = self._scorers[model]
+        scorer = self._scorer(model)
         if pdf.empty:
             preds = []
         elif scorer is not None:

@@ -301,6 +301,108 @@ def test_compiled_uploads_never_reach_spark(service, monkeypatch):
         service.predict("upload", "rand_forest", file_contents=UPLOAD_CSV)
 
 
+RETRAIN_PARAMS = {"d_tree": {"max_depth": 3}, "log_reg": {"max_iter": 1}}
+
+
+@pytest.mark.parametrize("model_type", ["d_tree", "log_reg"])
+def test_compiled_smoke_matches_spark_score(service, model_type):
+    """The driver-local smoke is Spark's ``score`` exactly, and a retrain
+    is scored by its own model, never by the scorer of the one it
+    replaced."""
+    from big_data_lab_three_spark.ml.models import score
+
+    service.train(model_type, save_model=False)
+    before = service.predict("smoke", model_type)["test_score"]
+    assert before == score(service.mm.models[model_type], service.mm.test_df)
+
+    service.train(model_type, save_model=False,
+                  params=RETRAIN_PARAMS[model_type])
+    after = service.predict("smoke", model_type)["test_score"]
+    assert after == score(service.mm.models[model_type], service.mm.test_df)
+    assert after != before  # the retrain is told apart from its predecessor
+
+
+def test_compiled_smoke_follows_a_replaced_held_out_split(
+    service, monkeypatch
+):
+    """A new ``mm.test_df`` is collected again; rows with a null label
+    drop out exactly as in Spark's average, and a split with no
+    labelled row is a ``ValueError`` on both paths."""
+    from pyspark.sql import functions as F
+
+    from big_data_lab_three_spark.ml.models import score
+
+    if "d_tree" not in service.mm.models:
+        service.train("d_tree", save_model=False)
+    model = service.mm.models["d_tree"]
+    full = service.predict("smoke", "d_tree")["test_score"]
+    holed = service.mm.test_df.withColumn(
+        "label", F.when(F.col("l_quantity") > 25, F.col("label"))
+    )
+    monkeypatch.setattr(service.mm, "test_df", holed)
+    smoke = service.predict("smoke", "d_tree")["test_score"]
+    assert smoke == score(model, holed) and smoke != full
+
+    unlabelled = holed.withColumn("label", F.lit(None).cast("int"))
+    monkeypatch.setattr(service.mm, "test_df", unlabelled)
+    with pytest.raises(ValueError, match="no labelled rows"):
+        service.predict("smoke", "d_tree")
+    with pytest.raises(ValueError, match="no labelled rows"):
+        score(model, unlabelled)
+
+
+def test_compiled_smoke_never_reaches_spark(service, monkeypatch):
+    """Once the held-out split is collected, d_tree and log_reg smokes
+    run no Spark job; rand_forest has no compiled form and still scores
+    in Spark."""
+    from big_data_lab_three_spark.ml import models
+
+    for model_type in ("d_tree", "log_reg", "rand_forest"):
+        if model_type not in service.mm.models:
+            service.train(model_type, save_model=False)
+    service.predict("smoke", "d_tree")  # collects the held-out split
+
+    def no_spark(*args, **kwargs):
+        raise RuntimeError("smoke reached Spark")
+
+    monkeypatch.setattr(models, "score", no_spark)
+    monkeypatch.setattr(service.spark, "createDataFrame", no_spark)
+    sc = service.spark.sparkContext
+    sc.setJobGroup("compiled-smoke", "compiled-smoke")
+    try:
+        for model_type in ("d_tree", "log_reg"):
+            out = service.predict("smoke", model_type)
+            assert 0.0 <= out["test_score"] <= 1.0
+        assert sc.statusTracker().getJobIdsForGroup("compiled-smoke") == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    with pytest.raises(RuntimeError, match="reached Spark"):
+        service.predict("smoke", "rand_forest")
+
+
+def test_accuracy_drops_null_labels_and_rejects_an_unlabelled_split():
+    """``avg(cast(prediction = label AS double))`` in NumPy: a null label
+    leaves numerator and denominator, a NaN label is a miss, and no
+    labelled row is an error, never NaN."""
+    import numpy as np
+    import pyarrow as pa
+
+    from big_data_lab_three_spark.ml.local import accuracy
+
+    def labels(*values):
+        return pa.array(values, type=pa.float64())
+
+    assert accuracy(np.array([1, 1, 1]), labels(1, None, 0)) == 0.5
+    assert accuracy(np.array([0, 1]), labels(float("nan"), 1)) == 0.5
+    chunks = pa.chunked_array([[1.0, None], [0.0, 1.0]], type=pa.float64())
+    assert accuracy(np.array([1, 0, 0, 1]), chunks) == 1.0
+    for empty in (labels(), labels(None, None)):
+        with pytest.raises(ValueError, match="no labelled rows"):
+            accuracy(np.ones(len(empty), dtype=np.int64), empty)
+
+
 def _write_fixture(path, rows=8):
     """A func-mode fixture in the reference shape (FIXTURES.md §2):
     lineitem-feature X records (one with a missing key, one with +inf)
