@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from big_data_lab_three_spark.functions.text import shingles, tokens
+from big_data_lab_three_spark.operators.iterate import Rounds
 
 
 def exact_dedup(
@@ -762,7 +763,14 @@ def _connected_components_loop(
         .select("id", F.col("id").alias("cluster_id"))
         .localCheckpoint()
     )
-    for _ in range(max_iters):
+    rounds = Rounds(
+        pairs.sparkSession,
+        "connected_components",
+        max_iters,
+        unconverged="graph diameter exceeds it; use "
+        "connected_components_star for long-chained graphs",
+    )
+    for _ in rounds:
         nbr_min = (
             edges.join(
                 labels.select(
@@ -777,9 +785,9 @@ def _connected_components_loop(
         # Carry the previous label alongside the new one so convergence
         # detection is a filter over the SAME cached pass — not a second
         # join of labels against itself (halves per-round join work).
-        merged = (
-            labels.join(nbr_min, labels.id == nbr_min.src, "left")
-            .select(
+        # That count also materializes the round's checkpoint.
+        labels = rounds.checkpoint(
+            labels.join(nbr_min, labels.id == nbr_min.src, "left").select(
                 "id",
                 F.col("cluster_id").alias("_prev"),
                 F.least(
@@ -787,27 +795,9 @@ def _connected_components_loop(
                     F.coalesce(F.col("_nbr_min"), F.col("cluster_id")),
                 ).alias("cluster_id"),
             )
-            # lazy (r16): the convergence count below materializes the
-            # checkpoint — one job per round instead of two
-            .localCheckpoint(eager=False)
         )
-        changed = (
-            merged.where(F.col("cluster_id") < F.col("_prev")).count()
-        )
-        labels = merged
-        if changed == 0:
+        if labels.where(F.col("cluster_id") < F.col("_prev")).count() == 0:
             break
-    else:
-        # Min-label propagation advances one hop per round, so a pair
-        # graph with diameter > max_iters would exit here with silently
-        # WRONG labels — the worst failure class.  Fail loudly instead:
-        # near-dup graphs are supposed to be shallow; a deep one means
-        # transitive drift and wants the O(log n) contraction.
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} "
-            "rounds (graph diameter exceeds it); use "
-            "connected_components_star for long-chained graphs"
-        )
     return labels.select("id", "cluster_id")
 
 
@@ -861,10 +851,6 @@ def connected_components_star(
 def _connected_components_star_loop(
     pairs: DataFrame, id_a: str, id_b: str, max_iters: int
 ) -> DataFrame:
-    # localCheckpoint per round truncates the logical lineage — see the
-    # propagation loop's note (Catalyst re-analysis is multiplicative
-    # in round count otherwise; this loop references `edges` six times
-    # per round, so it degrades fastest).
     edges = (
         pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
         .where(F.col("u") != F.col("v"))
@@ -895,14 +881,27 @@ def _connected_components_star_loop(
     sig = signature(edges)
     from pyspark.sql import Window
 
-    for _ in range(max_iters):
+    rounds = Rounds(
+        pairs.sparkSession,
+        "connected_components_star",
+        max_iters,
+        unconverged="raise max_iters (O(log n) rounds suffice for any "
+        "graph, so this indicates n >> expected)",
+    )
+    for _ in rounds:
         # Both stars are "attach min(N(u) ∪ {u}) to every edge of u" —
         # ONE window exchange per star (r16; was a groupBy + an
         # equi-join back, i.e. two exchanges of the edge table per
         # star, plus an intermediate distinct).  Duplicate rows the
         # dropped intermediate distinct would have removed cannot
         # change any min and are collapsed by the final distinct —
-        # the emitted edge SET is identical (guide §2.4).
+        # the emitted edge SET is identical (guide §2.4).  Skew
+        # trade-off: the window buffers all of a node's edges in one
+        # task and has no map-side partial aggregation (the groupBy
+        # form combined per map task and could broadcast a small min
+        # table), so a hot node is one sorting, possibly spilling,
+        # task.  The old sort-merge join co-located the same rows, so
+        # the loss is that combine step, on heavily skewed graphs only.
         by_u = Window.partitionBy("u")
         # ---- large-star ----------------------------------------------
         sym = edges.unionByName(
@@ -921,14 +920,12 @@ def _connected_components_star_loop(
             F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
         )
         ow = oriented.withColumn("m", F.min("v").over(by_u))
-        new_edges = (
+        # the signature job below materializes the round's checkpoint
+        new_edges = rounds.checkpoint(
             ow.select(F.col("v").alias("u"), F.col("m").alias("v"))
             .unionByName(ow.select("u", F.col("m").alias("v")))
             .where(F.col("u") != F.col("v"))
             .distinct()
-            # lazy: materialization rides the signature job below —
-            # one job per round instead of two
-            .localCheckpoint(eager=False)
         )
         new_sig = signature(new_edges)
         prev_edges = edges
@@ -943,15 +940,6 @@ def _connected_components_star_loop(
             if prev_edges.exceptAll(new_edges).limit(1).count() == 0:
                 break
         sig = new_sig
-    else:
-        # Exhausting max_iters without reaching the star-forest fixpoint
-        # would make the label read-off below emit duplicated/wrong
-        # labels — fail loudly, exactly like the propagation variant.
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_iters} "
-            "rounds; raise max_iters (O(log n) rounds suffice for any "
-            "graph, so this indicates n >> expected)"
-        )
 
     # Fixpoint edges form stars (child → component min); roots and any
     # isolated-by-contraction nodes label themselves.

@@ -18,6 +18,7 @@ from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.functions.text import tokens
 from big_data_lab_three_spark.logger import get_logger
+from big_data_lab_three_spark.operators.iterate import Rounds
 from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.queries.text import _DUCK_TOKS
 from big_data_lab_three_spark.sources import table
@@ -56,7 +57,6 @@ def _bpe_merge_loop(
     sf_dir: str,
     k: int = _BPE_K,
     docs: DataFrame | None = None,
-    round_times: list | None = None,
 ):
     """Run the K-merge BPE training loop; returns ``(merges, vocab)``
     where ``merges`` is the list of (rank, left, right, merged, cnt)
@@ -70,16 +70,13 @@ def _bpe_merge_loop(
     exactly Sennrich's merge: a consumed symbol becomes the merged
     token, which can never equal the left symbol again, so the
     last-element check IS the non-overlap rule).  The vocabulary is
-    localCheckpoint'ed per round — bounded state, same convention as
-    the connected-components iteration — so the plan never compounds
-    across rounds."""
+    checkpointed per round (:class:`Rounds`) — bounded state, so the
+    plan never compounds across rounds; each round's checkpoint
+    materializes inside the next round's argmax job."""
     vocab = _bpe_vocab(spark, sf_dir, docs=docs).localCheckpoint()
     merges: list[tuple] = []
-    for rank in range(1, k + 1):
-        if round_times is not None:
-            import time as _time
-
-            _t0 = _time.time()
+    rounds = Rounds(spark, "bpe_merge", k)
+    for rank in rounds:
         n = F.size("syms")
         pairs = (
             vocab.where(n >= 2)
@@ -101,19 +98,11 @@ def _bpe_merge_loop(
             break
         a, b, c = top["a"], top["b"], int(top["c"])
         merges.append((rank, a, b, a + b, c))
-        # LAZY local checkpoint (r16): the merged vocabulary still
-        # truncates its lineage (the plan can never compound across
-        # rounds), but materialization rides round r+1's argmax job
-        # instead of paying a dedicated eager-materialization job —
-        # ONE Spark job per round where the eager form ran two (the
-        # fold-merge projection is computed exactly once either way:
-        # the sort computes every partition, which the lazy
-        # checkpoint's persist captures).  Guide §1.3 fixed costs.
-        vocab = vocab.select(
-            "tok", "cnt", bpe_merge_expr("syms", a, b).alias("syms")
-        ).localCheckpoint(eager=False)
-        if round_times is not None:
-            round_times.append((rank, _time.time() - _t0))
+        vocab = rounds.checkpoint(
+            vocab.select(
+                "tok", "cnt", bpe_merge_expr("syms", a, b).alias("syms")
+            )
+        )
     return merges, vocab
 
 
@@ -1095,24 +1084,20 @@ def kcore_peel_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     sym = sym.localCheckpoint()
     rows: list[tuple] = []
-    for r in range(1, _KCORE_ROUNDS + 1):
-        # lazy checkpoints (r16): the census counts below materialize
-        # them — keep.count() runs the degree rollup, sym.count() the
-        # two semi-joins — 2 jobs per round where the eager form ran 4
-        # (each checkpoint job + each count).  Lineage truncation per
-        # round is unchanged.
-        keep = (
+    rounds = Rounds(spark, "kcore_peel", _KCORE_ROUNDS)
+    for r in rounds:
+        # the census counts materialize the checkpoints: keep.count()
+        # runs the degree rollup, sym.count() the two semi-joins
+        keep = rounds.checkpoint(
             sym.groupBy("src")
             .agg(F.count(F.lit(1)).alias("dg"))
             .where(F.col("dg") >= _KCORE_K)
             .select("src")
-        ).localCheckpoint(eager=False)
-        sym = (
-            sym.join(keep, "src", "left_semi")
-            .join(
+        )
+        sym = rounds.checkpoint(
+            sym.join(keep, "src", "left_semi").join(
                 keep.withColumnRenamed("src", "dst"), "dst", "left_semi"
             )
-            .localCheckpoint(eager=False)
         )
         rows.append((r, keep.count(), sym.count() // 2))
     return spark.createDataFrame(
@@ -2369,14 +2354,12 @@ def _lloyd_state(spark: SparkSession, sf_dir: str):
             ).alias("s"),
         )
 
-    # lazy checkpoints (r16): each round's centroid table still
-    # truncates the logical plan, but materialization rides the next
-    # round's broadcast build instead of a dedicated job per round
-    cent = cents.localCheckpoint(eager=False)
-    for r in range(1, _KM_ROUNDS + 1):
+    rounds = Rounds(spark, "kmeans_lloyd", _KM_ROUNDS)
+    cent = rounds.checkpoint(cents)
+    for r in rounds:
         asg = assign(cent)
         if r < _KM_ROUNDS:
-            cent = update(asg).localCheckpoint(eager=False)
+            cent = rounds.checkpoint(update(asg))
     return ve, asg, cent
 
 

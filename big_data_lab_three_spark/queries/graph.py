@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_lab_three_spark.operators.iterate import Rounds
 from big_data_lab_three_spark.queries import register
 from big_data_lab_three_spark.sources import table
 
@@ -219,11 +220,11 @@ def pagerank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     vertex sits on an edge), so no dangling-mass redistribution term is
     needed; ranks/degrees stay (vertex, double) pairs — the per-
     iteration shuffle carries 16 bytes per edge endpoint; lineage is
-    truncated per iteration with ``localCheckpoint`` (the CC
-    operators' idiom) so the 3-join plan never compounds; |V| comes
-    from one driver-side aggregate (a scalar, not a collect).  Rank
-    sums accumulate in engine order → round(8) absorbs last-bit drift
-    (values are Θ(1/|V|), error Θ(1e-15))."""
+    truncated per iteration by the shared loop driver's checkpoint
+    (``operators.iterate.Rounds``) so the 3-join plan never compounds;
+    |V| comes from one driver-side aggregate (a scalar, not a collect).
+    Rank sums accumulate in engine order → round(8) absorbs last-bit
+    drift (values are Θ(1/|V|), error Θ(1e-15))."""
     o = table(spark, sf_dir, "orders").where(
         (F.col("o_orderdate") >= F.lit("1995-03-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1995-04-01").cast("timestamp"))
@@ -248,7 +249,8 @@ def pagerank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg.persist()
     n = deg.count()
     ranks = deg.select("vertex", "d", (F.lit(1.0) / F.lit(float(n))).alias("r"))
-    for _ in range(3):
+    rounds = Rounds(spark, "pagerank", 3)
+    for _ in rounds:
         contrib = (
             edges.join(
                 ranks.select(
@@ -259,11 +261,14 @@ def pagerank_check(spark: SparkSession, sf_dir: str) -> DataFrame:
             .groupBy(F.col("v").alias("vertex"))
             .agg(F.sum("w").alias("contrib"))
         )
-        ranks = deg.join(contrib, "vertex").select(
-            "vertex",
-            "d",
-            (F.lit(0.15 / float(n)) + F.lit(0.85) * F.col("contrib")).alias("r"),
-        ).localCheckpoint(eager=False)
+        ranks = rounds.checkpoint(
+            deg.join(contrib, "vertex").select(
+                "vertex",
+                "d",
+                (F.lit(0.15 / float(n)) + F.lit(0.85) * F.col("contrib"))
+                .alias("r"),
+            )
+        )
     return ranks.select(
         "vertex",
         F.col("d").cast("long").alias("degree"),

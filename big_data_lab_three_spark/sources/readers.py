@@ -95,10 +95,24 @@ def normalize_events_ts(df: DataFrame, with_ts_utc: bool = False) -> DataFrame:
 # round-trips) — a FIXED per-query tax across all 277 registered
 # queries.  The cache holds LAZY PLANS only: no rows, no results, no
 # persisted data — every action still scans the parquet files (the
-# bench's clearCache() is unaffected; test data is immutable per dir).
-# Keyed by the live session OBJECT (identity) so cloned/new sessions
-# never share plans across conf boundaries.
-_TABLE_CACHE: dict[tuple, DataFrame] = {}
+# bench's clearCache() is unaffected).  A plan's file listing is fixed
+# when it is built, so each entry carries the table's stat fingerprint
+# and a rewritten table replaces its entry instead of being served the
+# old listing.  Keyed by the live session OBJECT (identity) so
+# cloned/new sessions never share plans across conf boundaries.
+_TABLE_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
+
+
+def _fingerprint(path: str) -> tuple:
+    """``(mtime_ns, size)`` of a table path and, for a directory, of
+    each entry — any rewrite of the table changes it."""
+    st = os.stat(path)
+    fp = [("", st.st_mtime_ns, st.st_size)]
+    if os.path.isdir(path):
+        for entry in os.scandir(path):
+            est = entry.stat()
+            fp.append((entry.name, est.st_mtime_ns, est.st_size))
+    return tuple(sorted(fp))
 
 
 def table(
@@ -122,9 +136,11 @@ def table(
     out — used where the frame grows blob columns).
     """
     key = (spark, os.path.realpath(sf_dir), name, spread_ok)
+    path = os.path.join(sf_dir, f"{name}.parquet")
+    fp = _fingerprint(path)
     cached = _TABLE_CACHE.get(key)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == fp:
+        return cached[1]
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # ENGINE-WIDE INVARIANT: sessions run UTC (session factory sets
@@ -134,12 +150,12 @@ def table(
         # so a restore would corrupt it; a session that needs local-time
         # DISPLAY should format with an explicit timezone argument
         # rather than an ambient session default.
-    df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+    df = spark.read.parquet(path)
     if name == "events":
         df = normalize_events_ts(df)
     if spread_ok and name in _CPU_BOUND_TABLES:
         df = spread(df)
-    _TABLE_CACHE[key] = df
+    _TABLE_CACHE[key] = (fp, df)
     return df
 
 

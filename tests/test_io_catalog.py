@@ -88,3 +88,16 @@ def test_sql_front_door_matches_dataframe_api(spark, sf_dir):
         .collect()
     )
     assert [tuple(r) for r in got] == [tuple(r) for r in want]
+
+
+def test_table_plan_cache_follows_a_rewritten_table(spark, tmp_path):
+    """The cached plan of a table fixes its file listing, so a table
+    rewritten in place must get a fresh plan, not the old rows."""
+    path = str(tmp_path / "orders.parquet")
+    rows = lambda n: spark.createDataFrame(  # noqa: E731
+        [(i,) for i in range(n)], "o_orderkey long"
+    )
+    rows(3).write.parquet(path)
+    assert table(spark, str(tmp_path), "orders").count() == 3
+    rows(5).write.mode("overwrite").parquet(path)
+    assert table(spark, str(tmp_path), "orders").count() == 5

@@ -306,7 +306,8 @@ def test_star_contraction_equals_label_propagation(spark):
 def test_star_contraction_handles_deep_chain_where_propagation_raises(spark):
     """A path whose diameter exceeds the propagation round budget: the
     label-prop variant must refuse (not silently mislabel), while the
-    star contraction converges in O(log n) rounds with correct labels."""
+    star contraction converges in O(log n) rounds with correct labels —
+    and refuses too when even that budget is cut below O(log n)."""
     import pytest
 
     from big_data_lab_three_spark.operators.dedup import (
@@ -323,6 +324,8 @@ def test_star_contraction_handles_deep_chain_where_propagation_raises(spark):
     assert star == {(i, 100) for i in range(100, 141)}
     with pytest.raises(RuntimeError, match="did not converge"):
         connected_components(pairs, max_iters=5).collect()
+    with pytest.raises(RuntimeError, match="did not converge"):
+        connected_components_star(pairs, max_iters=1).collect()
 
 
 def test_sequence_packing_fills_and_partitions_exactly(spark, sf_dir):
