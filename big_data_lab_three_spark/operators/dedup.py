@@ -675,7 +675,7 @@ def connected_components(
     which converges in O(log n) rounds on the same edge-table shape.
 
     ``loop_partitions`` pins the shuffle width for the iteration (same
-    pattern as the streaming jobs' ``state_partitions``): the tables in
+    pattern as the streaming drains' stateful partition count): the tables in
     the loop are bounded by the candidate-PAIR set, typically orders of
     magnitude smaller than the corpus, and every extra partition is pure
     per-round scheduler overhead multiplied by the round count.  The

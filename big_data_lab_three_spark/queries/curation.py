@@ -641,7 +641,7 @@ def run_foreachbatch_stream(
     )
     # batch-sized shuffles: 32 default partitions is pure per-task
     # overhead for the tiny per-batch joins (same sizing rationale as
-    # streaming.jobs.run_stream_to_table's state_partitions)
+    # the stateful partition count in streaming.jobs.run_stream_to_table)
     prev = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", "8")
     try:

@@ -11,6 +11,7 @@ such pass at all).
 from __future__ import annotations
 
 import os
+from typing import Callable, TypeVar
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -101,6 +102,9 @@ def normalize_events_ts(df: DataFrame, with_ts_utc: bool = False) -> DataFrame:
 # old listing.  Keyed by the live session OBJECT (identity) so
 # cloned/new sessions never share plans across conf boundaries.
 _TABLE_CACHE: dict[tuple, tuple[tuple, DataFrame]] = {}
+# The same for a parquet path's probed schema (see probe_schema).
+_SCHEMA_CACHE: dict[tuple, tuple[tuple, T.StructType]] = {}
+_V = TypeVar("_V")
 
 
 def _fingerprint(path: str) -> tuple:
@@ -113,6 +117,22 @@ def _fingerprint(path: str) -> tuple:
             est = entry.stat()
             fp.append((entry.name, est.st_mtime_ns, est.st_size))
     return tuple(sorted(fp))
+
+
+def _cached(cache: dict, key: tuple, path: str, build: Callable[[], _V]) -> _V:
+    """``cache[key]`` while ``path`` keeps the fingerprint it was built
+    from, else a fresh ``build()`` stored there.  A miss also drops the
+    entries of sessions (``key[0]``) whose SparkContext has stopped:
+    they can never run again, and their entries pin the session."""
+    fp = _fingerprint(path)
+    hit = cache.get(key)
+    if hit is not None and hit[0] == fp:
+        return hit[1]
+    for stale in [k for k in cache if k[0].sparkContext._jsc is None]:
+        cache.pop(stale, None)
+    value = build()
+    cache[key] = (fp, value)
+    return value
 
 
 def table(
@@ -135,12 +155,18 @@ def table(
     file would otherwise pin it to one core (``spread_ok=False`` opts
     out — used where the frame grows blob columns).
     """
-    key = (spark, os.path.realpath(sf_dir), name, spread_ok)
     path = os.path.join(sf_dir, f"{name}.parquet")
-    fp = _fingerprint(path)
-    cached = _TABLE_CACHE.get(key)
-    if cached is not None and cached[0] == fp:
-        return cached[1]
+    return _cached(
+        _TABLE_CACHE,
+        (spark, os.path.realpath(sf_dir), name, spread_ok),
+        path,
+        lambda: _read_table(spark, path, name, spread_ok),
+    )
+
+
+def _read_table(
+    spark: SparkSession, path: str, name: str, spread_ok: bool
+) -> DataFrame:
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         # ENGINE-WIDE INVARIANT: sessions run UTC (session factory sets
@@ -155,8 +181,23 @@ def table(
         df = normalize_events_ts(df)
     if spread_ok and name in _CPU_BOUND_TABLES:
         df = spread(df)
-    _TABLE_CACHE[key] = (fp, df)
     return df
+
+
+def probe_schema(spark: SparkSession, path: str) -> T.StructType:
+    """The schema ``spark.read.parquet(path)`` infers, probed once per
+    (session, path) and file version.  Inference runs a footer-reading
+    Spark job; a streaming source needs the schema at every start, so
+    each stream over an unchanged file would pay that job again.  The
+    probe reads under the caller's session conf (``events_stream`` pins
+    ``nanosAsLong`` first, so the cached ``ts`` type always matches)."""
+    path = os.path.realpath(path)
+    return _cached(
+        _SCHEMA_CACHE,
+        (spark, path),
+        path,
+        lambda: spark.read.parquet(path).schema,
+    )
 
 
 def events(spark: SparkSession, sf_dir: str) -> DataFrame:

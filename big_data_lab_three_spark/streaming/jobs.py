@@ -17,8 +17,13 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.streaming import DataStreamWriter
 
-from big_data_lab_three_spark.sources.readers import normalize_events_ts
+from big_data_lab_three_spark.sources.readers import (
+    normalize_events_ts,
+    probe_schema,
+)
+
 
 def events_stream(
     spark: SparkSession,
@@ -33,10 +38,11 @@ def events_stream(
     ``ts_utc`` (µs-truncated TimestampType), whatever the files encode.
 
     The streaming file source cannot infer a schema, so the batch
-    reader probes it first (schema-only — reads footers, runs no job)
-    from ``probe_path`` (default: the directory itself).  Hardcoding
-    either encoding's schema makes the other arrive as raw longs at the
-    wrong unit — silently wrong windows; the probe + shared
+    reader probes it first from ``probe_path`` (default: the directory
+    itself) through :func:`probe_schema`, which runs the probe's footer
+    job once per session and file version.  Hardcoding either
+    encoding's schema makes the other arrive as raw longs at the wrong
+    unit — silently wrong windows; the probe + shared
     ``normalize_events_ts`` make both paths agree by construction.
 
     A deployment starting the stream BEFORE any producer file exists
@@ -45,7 +51,7 @@ def events_stream(
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     if schema is None:
-        schema = spark.read.parquet(probe_path or directory).schema
+        schema = probe_schema(spark, probe_path or directory)
     reader = spark.readStream.schema(schema)
     for key, value in reader_options.items():
         reader = reader.option(key, value)
@@ -207,40 +213,117 @@ def sessionize(stream: DataFrame, gap_minutes: int = 720) -> DataFrame:
     )
 
 
+# Plan nodes a no-data micro-batch cannot make emit: stateless streaming
+# steps, and the stateful ones whose watermark eviction only forgets
+# state (dedup keys; inner-join buffers, see _emits_only_on_data).
+_NO_EMIT_ON_EVICTION = frozenset(
+    {
+        "Project",
+        "Filter",
+        "SubqueryAlias",
+        "EventTimeWatermark",
+        "StreamingRelation",
+        "StreamingRelationV2",
+        "Deduplicate",
+        "DeduplicateWithinWatermark",
+    }
+)
+
+
+def _emits_only_on_data(plan) -> bool:
+    """Whether a no-data micro-batch over the analyzed JVM ``plan`` can
+    only evict state, never emit a row.
+
+    True iff every streaming node is in ``_NO_EMIT_ON_EVICTION`` or is
+    an inner join (stream-static joins hold no state; an inner
+    stream-stream join emits a pair only when a new row arrives).
+    Static subtrees hold no streaming state and are not walked.  Any
+    other node keeps the trailing batch: an append-mode aggregate emits
+    the windows its watermark finalizes, ``applyInPandasWithState``
+    fires event-time timeouts, an outer join emits its null-padded
+    rows, and a node this list does not know may do the same."""
+    if not plan.isStreaming():
+        return True
+    name = plan.nodeName()
+    if name == "Join":
+        if plan.joinType().sql() != "INNER":
+            return False
+    elif name not in _NO_EMIT_ON_EVICTION:
+        return False
+    children = plan.children()
+    return all(
+        _emits_only_on_data(children.apply(i)) for i in range(children.size())
+    )
+
+
+def _drain(
+    spark: SparkSession, result: DataFrame, writer: DataStreamWriter
+) -> None:
+    """Start ``writer`` (a sink over ``result``) as a
+    ``Trigger.AvailableNow`` drain and wait for it to finish.
+
+    The query copies the session conf when it starts, so two confs are
+    set for the start only and the caller's values restored at once:
+    the stateful partition count (see :func:`run_stream_to_table`) and,
+    when :func:`_emits_only_on_data` holds, no trailing no-data batch."""
+    confs = {
+        "spark.sql.shuffle.partitions": str(
+            min(4, spark.sparkContext.defaultParallelism)
+        )
+    }
+    if _emits_only_on_data(result._jdf.queryExecution().analyzed()):
+        confs["spark.sql.streaming.noDataMicroBatches.enabled"] = "false"
+    prev = {key: spark.conf.get(key) for key in confs}
+    try:
+        for key, value in confs.items():
+            spark.conf.set(key, value)
+        q = writer.trigger(availableNow=True).start()
+    finally:
+        for key, value in prev.items():
+            spark.conf.set(key, value)
+    q.awaitTermination()
+
+
 def run_stream_to_table(
     spark: SparkSession,
     result: DataFrame,
     name: str,
     output_mode: str = "complete",
-    state_partitions: int = 4,
 ) -> DataFrame:
     """Drain a streaming result into an in-memory table with
     ``Trigger.AvailableNow`` and return it as a batch DataFrame.  The
     memory sink holds only the (small, aggregated) RESULT — raw events
-    never collect anywhere.
+    never collect anywhere.  The sink's session-global view ``name`` is
+    dropped once the frame is resolved; the frame keeps the rows.
 
-    ``state_partitions`` pins the stateful-operator partition count for
-    THIS query (read at stream start, then fixed in the checkpoint).
-    Streaming state cannot be AQE-coalesced, and every state partition
-    pays per-batch store overhead — size it to state volume, not to the
-    batch-side shuffle default.  On a cluster this would be sized to
-    executors × cores."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        # restore immediately: the streaming query captured its conf at
-        # start; later batch queries must see the session default.
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
-    return spark.table(name)
+    The drain runs only work that can change the sink:
+
+    - Stateful operators run on ``min(4, defaultParallelism)``
+      partitions, fixed for the query at start.  Streaming state cannot
+      be AQE-coalesced and every state partition pays a per-batch store
+      commit, so a 1-core session commits once rather than four times;
+      4 cores and up keep the ceiling of 4.  On a cluster this would be
+      sized to executors × cores.
+    - After its data batches, Spark runs one more batch with no input
+      whenever the watermark moved, to evict state and emit what the
+      eviction finalizes.  When every stateful node only forgets state
+      on eviction (dedup, inner stream-stream join) that batch cannot
+      change the sink, so it is not run.  Aggregates, timeouts and outer
+      joins keep it; complete mode never runs it.  On a durable
+      checkpoint the skipped eviction happens at the end of the next
+      run's first batch instead, so a dedup key seen again in that
+      batch is still dropped (within-watermark dedup only promises to
+      drop duplicates inside the delay)."""
+    _drain(
+        spark,
+        result,
+        result.writeStream.format("memory")
+        .queryName(name)
+        .outputMode(output_mode),
+    )
+    drained = spark.table(name)
+    spark.catalog.dropTempView(name)
+    return drained
 
 
 def run_stream_foreach_batch_parquet(
@@ -249,10 +332,10 @@ def run_stream_foreach_batch_parquet(
     path: str,
     checkpoint_dir: str,
     output_mode: str = "append",
-    state_partitions: int = 4,
 ) -> DataFrame:
     """Drain a streaming result to a DURABLE parquet sink via
-    ``foreachBatch``, idempotently, and return the written table.
+    ``foreachBatch``, idempotently, and return the written table.  The
+    drain is sized and trimmed as in :func:`run_stream_to_table`.
 
     Exactly-once-ish recipe: each micro-batch overwrites its own
     ``_batch_id=N`` partition (dynamic partition overwrite), so a batch
@@ -271,19 +354,13 @@ def run_stream_foreach_batch_parquet(
             .parquet(path)
         )
 
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    try:
-        q = (
-            result.writeStream.foreachBatch(write_batch)
-            .outputMode(output_mode)
-            .option("checkpointLocation", checkpoint_dir)
-            .trigger(availableNow=True)
-            .start()
-        )
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    q.awaitTermination()
+    _drain(
+        spark,
+        result,
+        result.writeStream.foreachBatch(write_batch)
+        .outputMode(output_mode)
+        .option("checkpointLocation", checkpoint_dir),
+    )
     return spark.read.parquet(path).drop("_batch_id")
 
 

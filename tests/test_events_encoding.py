@@ -59,7 +59,7 @@ def test_batch_table_normalizes_ts_to_epoch_nanos(spark, enc_dir):
     assert got == sorted(u * 1000 for u in _US)
 
 
-def test_stream_matches_batch_contract(spark, enc_dir):
+def _assert_stream_contract(spark, enc_dir, name):
     from pyspark.sql import functions as F
 
     from big_data_lab_three_spark.streaming.jobs import run_stream_to_table
@@ -75,13 +75,40 @@ def test_stream_matches_batch_contract(spark, enc_dir):
     out = run_stream_to_table(
         spark,
         stream.select("event_id", "ts", F.unix_micros("ts_utc").alias("us")),
-        "enc_contract",
+        name,
         output_mode="append",
     )
     rows = {(r.event_id, r.ts, r.us) for r in out.collect()}
     assert rows == {
         (i, u * 1000, u) for i, u in enumerate(_US)
     }, "stream ts/ts_utc must be exact epoch nanos/micros for any encoding"
+
+
+def test_stream_matches_batch_contract(spark, enc_dir):
+    _assert_stream_contract(spark, enc_dir, "enc_contract")
+
+
+def test_stream_schema_probe_runs_once_per_file_version(spark, tmp_path):
+    """A stream over an unchanged file reuses its probed schema (no
+    Spark job), and a file rewritten in the other encoding is probed
+    again rather than read with the stale ``ts`` type."""
+    from big_data_lab_three_spark.streaming.jobs import read_events_stream
+
+    d = _write_events(str(tmp_path), "ns")
+    read_events_stream(spark, d)
+    sc = spark.sparkContext
+    sc.setJobGroup("schema-probe", "schema-probe")
+    try:
+        read_events_stream(spark, d)
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    assert sc.statusTracker().getJobIdsForGroup("schema-probe") == []
+
+    _write_events(d, "us")
+    _assert_stream_contract(spark, d, "enc_reprobed")
 
 
 # ---------------------------------------------------------------------------

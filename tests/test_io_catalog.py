@@ -101,3 +101,27 @@ def test_table_plan_cache_follows_a_rewritten_table(spark, tmp_path):
     assert table(spark, str(tmp_path), "orders").count() == 3
     rows(5).write.mode("overwrite").parquet(path)
     assert table(spark, str(tmp_path), "orders").count() == 5
+
+
+def test_plan_caches_drop_stopped_sessions(spark, tmp_path):
+    """A cache miss drops the entries of sessions whose SparkContext
+    has stopped, in both the table-plan and the probed-schema cache;
+    the live session's entries stay."""
+    from types import SimpleNamespace
+
+    from big_data_lab_three_spark.sources import readers
+
+    class StoppedSession:
+        sparkContext = SimpleNamespace(_jsc=None)
+
+    stopped = StoppedSession()
+    readers._TABLE_CACHE[(stopped, "", "orders", True)] = ((), None)
+    readers._SCHEMA_CACHE[(stopped, "")] = ((), None)
+    path = str(tmp_path / "orders.parquet")
+    spark.createDataFrame([(1,)], "o_orderkey long").write.parquet(path)
+    table(spark, str(tmp_path), "orders")
+    readers.probe_schema(spark, path)
+    for cache in (readers._TABLE_CACHE, readers._SCHEMA_CACHE):
+        sessions = {key[0] for key in cache}
+        assert stopped not in sessions
+        assert spark in sessions

@@ -1,26 +1,45 @@
 """Streaming semantics the single-batch oracle replay can't prove:
-state carry-over across microbatches and watermark late-data dropping.
+state carry-over across microbatches, watermark late-data dropping,
+checkpoint recovery, and which batches a drain runs.
 
-Both tests re-shard ``events.parquet`` into two chronological files in a
-tmpdir and stream them with ``maxFilesPerTrigger=1`` so the engine runs
-two data microbatches (+ the trailing no-data batch)."""
+The batch-boundary tests re-shard ``events.parquet`` into two
+chronological files in a tmpdir and stream them with
+``maxFilesPerTrigger=1`` so the engine runs two data microbatches, plus
+the trailing no-data batch when the plan can emit on it (sessionize and
+the append-mode windowed aggregate can; the inner interval join cannot,
+so its drain stops after the data)."""
 
 from __future__ import annotations
 
 import os
 
+import threading
+
 import duckdb
 import pyarrow.compute as pc
 import pyarrow.parquet as pq
+import pytest
+from pyspark import SparkContext
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import StreamingQueryListener
 
+from big_data_lab_three_spark.oracle_compare import (
+    compare,
+    register_oracle_views,
+)
 from big_data_lab_three_spark.queries import load_all
 from big_data_lab_three_spark.streaming import (
+    dedup_within_watermark,
+    interval_join_attribution,
+    read_events_stream,
     run_stream_to_table,
     sessionize,
     windowed_event_counts,
 )
-from big_data_lab_three_spark.streaming.jobs import events_stream
+from big_data_lab_three_spark.streaming.jobs import (
+    _emits_only_on_data,
+    events_stream,
+)
 
 REG = load_all()
 
@@ -587,3 +606,134 @@ def test_admission_replay_after_first_batch_crash(spark, sf_dir, tmp_path):
     for k, b in enumerate(batches):
         index_admit_batch(spark, b, rx, k)
     assert snap(rx) == clean
+
+
+class _Progress(StreamingQueryListener):
+    """Every progress event of the queries started while registered;
+    ``done`` is set once one terminates (the listener bus delivers a
+    query's progress events before its termination event)."""
+
+    def __init__(self):
+        self.events = []
+        self.done = threading.Event()
+
+    def onQueryStarted(self, event):
+        pass
+
+    def onQueryProgress(self, event):
+        self.events.append(event.progress)
+
+    def onQueryIdle(self, event):
+        pass
+
+    def onQueryTerminated(self, event):
+        self.done.set()
+
+
+def _drain_registered(spark, sf_dir, qname):
+    """Run the registered streaming query ``qname``; return its progress
+    events and its mismatches against the DuckDB oracle."""
+    listener = _Progress()
+    spark.streams.addListener(listener)
+    try:
+        q = REG[qname]
+        out = q.spark(spark, sf_dir)
+        assert listener.done.wait(60), f"{qname}: no termination event"
+    finally:
+        spark.streams.removeListener(listener)
+    con = duckdb.connect()
+    register_oracle_views(con, sf_dir)
+    problems, n = compare(out, con.execute(q.oracle))
+    assert n > 0
+    return listener.events, problems
+
+
+def test_trailing_batch_rule_over_plan_shapes(spark, sf_dir):
+    """The no-data batch is skipped only where it can just evict state:
+    dedup and inner stream-stream joins.  Timeouts, append-mode
+    aggregates and outer joins emit on eviction, so they keep it."""
+    stream = read_events_stream(spark, sf_dir)
+    clicks = (
+        stream.where(F.col("event_type") == "click")
+        .select(
+            F.col("user_id").alias("t_user"), F.col("ts_utc").alias("t_ts")
+        )
+        .withWatermark("t_ts", "2 hours")
+    )
+    buys = (
+        stream.where(F.col("event_type") == "purchase")
+        .select("user_id", "ts_utc")
+        .withWatermark("ts_utc", "2 hours")
+    )
+    left_outer = buys.join(
+        clicks,
+        F.expr(
+            "user_id = t_user AND ts_utc >= t_ts"
+            " AND ts_utc <= t_ts + interval 1 hour"
+        ),
+        "left_outer",
+    )
+    shapes = {
+        "dedup": dedup_within_watermark(stream),
+        "inner interval join": interval_join_attribution(stream),
+        "sessionize": sessionize(stream),
+        "windowed aggregate": windowed_event_counts(stream),
+        "left-outer stream-stream join": left_outer,
+    }
+    got = {
+        name: _emits_only_on_data(df._jdf.queryExecution().analyzed())
+        for name, df in shapes.items()
+    }
+    assert got == {
+        "dedup": True,
+        "inner interval join": True,
+        "sessionize": False,
+        "windowed aggregate": False,
+        "left-outer stream-stream join": False,
+    }
+
+
+@pytest.mark.parametrize(
+    "qname, batches", [("streaming_dedup", 1), ("streaming_sessionize", 2)]
+)
+def test_drain_runs_trailing_batch_only_when_it_can_emit(
+    spark, sf_dir, qname, batches
+):
+    """Dedup drains in its one data batch; sessionize keeps the no-data
+    batch whose event-time timeouts emit the sessions the final
+    watermark closes.  Both stay oracle-equal, on the session's state
+    partition count capped at 4."""
+    progress, problems = _drain_registered(spark, sf_dir, qname)
+    assert not problems, f"{qname}: " + "; ".join(problems)
+    assert [p.batchId for p in progress] == list(range(batches))
+    assert progress[0].stateOperators[0].numShufflePartitions == min(
+        4, spark.sparkContext.defaultParallelism
+    )
+
+
+@pytest.mark.parametrize("qname", ["streaming_dedup", "streaming_sessionize"])
+def test_one_core_drain_runs_one_state_partition(
+    spark, sf_dir, monkeypatch, qname
+):
+    """A 1-core session sizes stream state to one partition: one state
+    store commit per batch, still oracle-equal."""
+    monkeypatch.setattr(
+        SparkContext, "defaultParallelism", property(lambda self: 1)
+    )
+    progress, problems = _drain_registered(spark, sf_dir, qname)
+    assert not problems, f"{qname}: " + "; ".join(problems)
+    assert progress[0].stateOperators[0].numShufflePartitions == 1
+
+
+def test_memory_sink_drain_leaves_no_view(spark, sf_dir):
+    """The memory sink registers a session-global view holding the
+    sink's rows; the drain drops it, and the returned frame keeps the
+    rows."""
+    sf_dir = os.path.join(os.path.dirname(sf_dir), "sf0.01")
+    if not os.path.isdir(sf_dir):
+        pytest.skip(f"{sf_dir} not generated")
+    out = REG["streaming_dedup"].spark(spark, sf_dir)
+    assert len(out.collect()) == 750
+    views = [t.name for t in spark.catalog.listTables()]
+    assert not [v for v in views if v.startswith("stream_dedup_")]
+    assert out.count() == 750
