@@ -49,12 +49,12 @@ LOW_IMPORTANCE_COLUMNS = [
 ]
 
 
-def preprocess_flows(df: DataFrame, label_col: str = "Label") -> DataFrame:
+def preprocess_flows(df: DataFrame) -> DataFrame:
     """Strip → binarize(State) → inf/NaN→NULL → prune.  Keeps features
     and label in ONE DataFrame (the engine's X/y design)."""
     out = strip_column_names(df)
-    if label_col in out.columns:
-        out = binarize_label(out, src=label_col, positive="BENIGN", out="State")
+    if "Label" in out.columns:
+        out = binarize_label(out, src="Label", positive="BENIGN", out="State")
     # Feature columns Spark's CSV inference left as strings (e.g. rate
     # columns containing 'inf') get pandas-compatible numeric coercion.
     out = coerce_numeric(

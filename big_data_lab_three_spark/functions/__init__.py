@@ -1,5 +1,4 @@
 from big_data_lab_three_spark.functions.vector import (  # noqa: F401
-    cosine_similarity,
     dot,
     l2_norm,
 )

@@ -37,8 +37,3 @@ def l2_norm(a: Column) -> Column:
         )
     )
 
-
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity of two array columns; NULL if either norm is 0."""
-    n = l2_norm(a) * l2_norm(b)
-    return F.when(n > 0, dot(a, b) / n)

@@ -26,6 +26,10 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
+# Seed of the SMOTE neighbour search and of its hash-derived choices.
+_SEED = 42
+
+
 def _sampled_knn_radius(pts, k: int) -> float:
     """95th-percentile k-th-NN Euclidean distance within a (small) point
     sample — the finite ``approxSimilarityJoin`` radius for
@@ -68,8 +72,8 @@ def oversample_minority(
     return out
 
 
-def class_weights(df: DataFrame, label_col: str = "label", weight_col: str = "weight") -> DataFrame:
-    """(b) Balanced instance weights: w_c = n_total / (k · n_c)
+def class_weights(df: DataFrame, label_col: str = "label") -> DataFrame:
+    """(b) Balanced instance weights in ``weight``: w_c = n_total / (k · n_c)
     (sklearn's ``class_weight='balanced'`` formula).  The weight map is
     broadcast via a literal CASE — no join, no shuffle."""
     counts = _class_counts(df, label_col)
@@ -77,19 +81,12 @@ def class_weights(df: DataFrame, label_col: str = "label", weight_col: str = "we
     expr = F.lit(1.0)
     for cls, n in counts.items():
         expr = F.when(F.col(label_col) == cls, F.lit(total / (k * n))).otherwise(expr)
-    return df.withColumn(weight_col, expr)
+    return df.withColumn("weight", expr)
 
 
-def smote(
-    df: DataFrame,
-    features_col: str = "features",
-    label_col: str = "label",
-    minority_class=None,
-    k: int = 5,
-    bucket_length: float = 2.0,
-    seed: int = 42,
-) -> DataFrame:
-    """(c) Distributed SMOTE.
+def smote(df: DataFrame, minority_class=None, k: int = 5) -> DataFrame:
+    """(c) Distributed SMOTE over ``features`` (a vector column) and
+    ``label``, seeded with ``_SEED``.
 
     Synthesizes ``majority - minority`` rows for the minority class:
 
@@ -111,14 +108,14 @@ def smote(
        ``zip_with`` array expression (JVM-side).
 
     Output: input rows + synthetic minority rows (same schema:
-    features_col + label_col only for synthetic rows' other columns =
+    features + label only for synthetic rows' other columns =
     NULL-free subset — callers select the needed columns first).  If the
     finite radius leaves some isolated base rows with zero neighbors and
     the interpolated pool comes up short, the remainder is topped up by
     deterministic duplication of minority rows so the class balance is
     still exact.
     """
-    counts = _class_counts(df, label_col)
+    counts = _class_counts(df, "label")
     if minority_class is None:
         minority_class = min(counts, key=counts.get)
     n_min = counts[minority_class]
@@ -126,19 +123,19 @@ def smote(
     if n_need <= 0:
         return df
 
-    base_cols = [features_col, label_col]
+    base_cols = ["features", "label"]
     minority = (
-        df.where(F.col(label_col) == minority_class)
+        df.where(F.col("label") == minority_class)
         .select(*base_cols)
         .withColumn("__id", F.monotonically_increasing_id())
     )
 
     lsh = BucketedRandomProjectionLSH(
-        inputCol=features_col,
+        inputCol="features",
         outputCol="__hashes",
-        bucketLength=bucket_length,
+        bucketLength=2.0,
         numHashTables=3,
-        seed=seed,
+        seed=_SEED,
     )
     model = lsh.fit(minority)
 
@@ -149,8 +146,8 @@ def smote(
     # the radius is generous without being infinite.
     radius_sample = 500
     sampled = (
-        minority.select(vector_to_array(features_col).alias("__arr"), "__id")
-        .orderBy(F.xxhash64("__id", F.lit(seed)))
+        minority.select(vector_to_array("features").alias("__arr"), "__id")
+        .orderBy(F.xxhash64("__id", F.lit(_SEED)))
         .limit(radius_sample)
         .collect()
     )
@@ -169,9 +166,9 @@ def smote(
         .withColumn("__cnt", F.count(F.lit(1)).over(Window.partitionBy("datasetA.__id")))
         .select(
             F.col("datasetA.__id").alias("base_id"),
-            F.col(f"datasetA.{features_col}").alias("base_vec"),
+            F.col("datasetA.features").alias("base_vec"),
             F.col("datasetB.__id").alias("nbr_id"),
-            F.col(f"datasetB.{features_col}").alias("nbr_vec"),
+            F.col("datasetB.features").alias("nbr_vec"),
             "__rn",
             "__cnt",
         )
@@ -183,9 +180,9 @@ def smote(
     reps = -(-n_need // n_min)
     replicas = knn.sparkSession.range(reps).withColumnRenamed("id", "__rep")
     replicated = knn.crossJoin(F.broadcast(replicas))
-    h = F.xxhash64("base_id", "nbr_id", "__rep", F.lit(seed))
+    h = F.xxhash64("base_id", "nbr_id", "__rep", F.lit(_SEED))
     chosen = replicated.where(
-        F.pmod(F.xxhash64("base_id", "__rep", F.lit(seed)), F.col("__cnt"))
+        F.pmod(F.xxhash64("base_id", "__rep", F.lit(_SEED)), F.col("__cnt"))
         == F.col("__rn") - 1
     )
     lam = (F.pmod(h, F.lit(10_000)) + 0.5) / 10_000.0
@@ -196,8 +193,8 @@ def smote(
     )
     synthetic = (
         chosen.select(
-            synth_vec.alias(features_col),
-            F.lit(minority_class).alias(label_col),
+            synth_vec.alias("features"),
+            F.lit(minority_class).alias("label"),
         )
         .limit(n_need)
     )
@@ -233,7 +230,7 @@ def smote(
             out = out.unionByName(full_passes)
         topup = (
             minority.select(*base_cols)
-            .orderBy(F.xxhash64("__id", F.lit(seed + 1)))
+            .orderBy(F.xxhash64("__id", F.lit(_SEED + 1)))
             .limit(rem)
         )
         out = out.unionByName(topup)

@@ -35,10 +35,9 @@ def fold_assignments(
     k: int = 5,
     key_cols: list[str] | None = None,
     seed: int = 0,
-    fold_col: str = "fold",
     portable: bool = False,
 ) -> DataFrame:
-    """Attach a deterministic fold id in ``[0, k)``: a content hash of
+    """Attach a deterministic ``fold`` id in ``[0, k)``: a content hash of
     the key columns (all columns when unspecified) and the seed, mod k.
     Pure projection — evaluated in the scan stage wherever it's used
     as a filter.
@@ -62,7 +61,7 @@ def fold_assignments(
         fold = F.conv(h15, 16, 10).cast("long") % F.lit(k)
     else:
         fold = F.pmod(F.xxhash64(*keys, F.lit(seed)), F.lit(k))
-    return df.withColumn(fold_col, fold.cast("int"))
+    return df.withColumn("fold", fold.cast("int"))
 
 
 def cross_validate(
@@ -70,39 +69,30 @@ def cross_validate(
     feature_cols: list[str],
     model_type: str = "d_tree",
     k: int = 5,
-    params: dict | None = None,
-    label_col: str = "label",
-    key_cols: list[str] | None = None,
-    seed: int = 0,
 ) -> list[dict]:
-    """k-fold CV of the §2.10 training pipeline: for each fold i,
-    train on rows with ``fold != i``, evaluate accuracy on ``fold ==
-    i``.  Returns one dict per fold (fold, n_train, n_test, accuracy)
+    """k-fold CV of the §2.10 training pipeline with default params: for
+    each fold i (hashed over all columns, seed 0), train on rows with
+    ``fold != i``, evaluate accuracy on ``fold == i``.  Returns one dict
+    per fold (fold, n_train, n_test, accuracy)
     — aggregate-sized, so a driver-side list is the honest return type.
 
     The input is persisted with its fold column for the duration (k
     passes over the same frame); callers with a long-lived pipeline
     should pass an already-persisted df."""
-    folded = fold_assignments(df, k=k, key_cols=key_cols, seed=seed)
+    folded = fold_assignments(df, k=k)
     folded.persist()
     try:
         results = []
         for i in range(k):
             train = folded.where(F.col("fold") != i)
             test = folded.where(F.col("fold") == i)
-            model = train_classifier(
-                train,
-                feature_cols,
-                model_type=model_type,
-                params=params,
-                label_col=label_col,
-            )
+            model = train_classifier(train, feature_cols, model_type=model_type)
             results.append(
                 {
                     "fold": i,
                     "n_train": train.count(),
                     "n_test": test.count(),
-                    "accuracy": score(model, test, label_col=label_col),
+                    "accuracy": score(model, test),
                 }
             )
         return results

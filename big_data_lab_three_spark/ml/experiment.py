@@ -123,7 +123,6 @@ def write_experiment_record(
     model_params: dict,
     score: float,
     model_artifact_path: str | None = None,
-    now: datetime | None = None,
 ) -> str:
     """S9 — per-run experiment dir (reference ``src/predict.py:146-169``).
 
@@ -134,7 +133,7 @@ def write_experiment_record(
     """
     import yaml
 
-    stamp = (now or datetime.now()).strftime("%Y_%m_%d_%H_%M_%S")
+    stamp = datetime.now().strftime("%Y_%m_%d_%H_%M_%S")
     # reference naming (test[:6] + second-granularity stamp) collides for
     # fixtures sharing a 6-char prefix scored in the same second — the
     # reference silently overwrites; uniquify with a suffix instead
@@ -191,7 +190,7 @@ def run_func_fixtures(
     experiment record per fixture (the reference loop,
     ``src/predict.py:130-169``).  Returns per-fixture result dicts.
     """
-    from big_data_lab_three_spark.ml.models import score as score_fn
+    from big_data_lab_three_spark.ml.models import score
 
     if not os.path.isdir(fixtures_dir):
         raise FileNotFoundError(f"fixtures dir not found: {fixtures_dir}")
@@ -202,7 +201,7 @@ def run_func_fixtures(
         df = load_func_fixture(
             spark, os.path.join(fixtures_dir, name), contract
         )
-        acc = score_fn(model, df, label_col="label")
+        acc = score(model, df)
         log.info("%s has %s score on %s", model_type, acc, name)
         exp_dir = write_experiment_record(
             exp_root, name, model_type, model_params or {}, acc,

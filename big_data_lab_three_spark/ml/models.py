@@ -50,11 +50,9 @@ MODEL_SECTIONS = {
 }
 
 
-def _make_classifier(model_type: str, params: dict, weighted: bool):
+def _make_classifier(model_type: str, params: dict):
     """Translate reference param names → an MLlib classifier stage."""
-    common = dict(featuresCol="features", labelCol="label")
-    if weighted:
-        common["weightCol"] = "weight"
+    common = dict(featuresCol="features", labelCol="label", weightCol="weight")
     if model_type == "log_reg":
         return LogisticRegression(
             maxIter=int(params.get("max_iter", 100)), **common
@@ -84,31 +82,29 @@ def train_classifier(
     feature_cols: list[str],
     model_type: str = "d_tree",
     params: dict | None = None,
-    label_col: str = "label",
-    balance: str | None = "weight",
 ) -> PipelineModel:
-    """Fit preprocessing + classifier as ONE PipelineModel.
+    """Fit preprocessing + classifier as ONE PipelineModel on
+    ``train_df``'s ``label`` column (cast to double).
 
-    ``balance='weight'`` applies the reference's SMOTE *intent* (equal
+    Balanced class weights apply the reference's SMOTE *intent* (equal
     class influence) via instance weights — the scale-preferred tier of
-    M2; ``'oversample'``/``'smote'`` plug in the other tiers upstream.
+    M2 (``ml.balance``).
     """
     params = params or {}
-    df = train_df.withColumn("label", F.col(label_col).cast("double"))
-    weighted = balance == "weight"
-    if weighted:
-        df = class_weights(df, "label")
+    df = train_df.withColumn("label", F.col("label").cast("double"))
+    df = class_weights(df, "label")
     stages = build_preprocessing(feature_cols).getStages()
-    stages.append(_make_classifier(model_type, params, weighted))
+    stages.append(_make_classifier(model_type, params))
     return Pipeline(stages=stages).fit(df)
 
 
-def score(model: PipelineModel, df: DataFrame, label_col: str = "label") -> float:
-    """M7 — accuracy (reference ``classifier.score``,
-    ``src/train.py:210-212``); rows with a null label are not counted,
-    and a frame with no labelled row is a ``ValueError``."""
+def score(model: PipelineModel, df: DataFrame) -> float:
+    """M7 — accuracy against ``df``'s ``label`` column (reference
+    ``classifier.score``, ``src/train.py:210-212``); rows with a null
+    label are not counted, and a frame with no labelled row is a
+    ``ValueError``."""
     pred = model.transform(
-        df.withColumn("label", F.col(label_col).cast("double"))
+        df.withColumn("label", F.col("label").cast("double"))
     )
     row = pred.agg(
         F.avg((F.col("prediction") == F.col("label")).cast("double")).alias("acc")
@@ -173,7 +169,6 @@ class MultiModel:
         train_df: DataFrame,
         test_df: DataFrame,
         feature_cols: list[str],
-        label_col: str = "label",
         catalog: Catalog | None = None,
         artifact_dir: str | None = None,
     ) -> None:
@@ -181,18 +176,16 @@ class MultiModel:
         self.train_df = train_df
         self.test_df = test_df
         self.feature_cols = feature_cols
-        self.label_col = label_col
         self.catalog = catalog
         self.artifact_dir = artifact_dir or resolve_artifact_dir()
         self.models: dict[str, PipelineModel] = {}
 
     def train(self, model_type: str, params: dict | None = None, save: bool = True) -> bool:
         model = train_classifier(
-            self.train_df, self.feature_cols, model_type, params,
-            label_col=self.label_col,
+            self.train_df, self.feature_cols, model_type, params
         )
         self.models[model_type] = model
-        acc = score(model, self.test_df, self.label_col)
+        acc = score(model, self.test_df)
         log.info("trained %s: test accuracy %.4f", model_type, acc)
         if save:
             return save_model(
@@ -201,16 +194,7 @@ class MultiModel:
             )
         return True
 
-    # Reference method names (src/train.py:116-159)
-    def log_reg(self, **params) -> bool:
-        return self.train("log_reg", params)
-
-    def rand_forest(self, **params) -> bool:
-        return self.train("rand_forest", params)
-
-    def gnb(self, **params) -> bool:
-        return self.train("gnb", params)
-
+    # Reference method name (src/train.py:149-159)
     def d_tree(self, **params) -> bool:
         return self.train("d_tree", params)
 
@@ -259,5 +243,5 @@ class MultiModel:
                 "fixture_scores": {r["fixture"]: r["score"] for r in runs},
                 "experiment_dirs": [r["experiment_dir"] for r in runs],
             }
-        acc = score(model, self.test_df, self.label_col)
+        acc = score(model, self.test_df)
         return {"model": model_type, "mode": mode, "test_score": acc}

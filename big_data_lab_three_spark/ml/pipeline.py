@@ -18,16 +18,11 @@ from pyspark.ml import Pipeline
 from pyspark.ml.feature import Imputer, StandardScaler, VectorAssembler
 
 
-def build_preprocessing(
-    feature_cols: list[str],
-    output_col: str = "features",
-    impute_strategy: str = "mean",
-    with_mean: bool = True,
-    with_std: bool = True,
-) -> Pipeline:
-    """Imputer(mean) → VectorAssembler → StandardScaler, as an unfitted
-    Pipeline — ``fit`` on train only, ``transform`` everywhere (the
-    reference's fit-on-train/transform-both contract).
+def build_preprocessing(feature_cols: list[str]) -> Pipeline:
+    """Imputer(mean) → VectorAssembler → StandardScaler(mean, std) into
+    ``features``, as an unfitted Pipeline — ``fit`` on train only,
+    ``transform`` everywhere (the reference's fit-on-train/transform-both
+    contract).
 
     All three stages are single-pass aggregations + projections — two
     jobs to fit (imputer means, scaler moments), zero shuffles.
@@ -36,7 +31,7 @@ def build_preprocessing(
     return Pipeline(
         stages=[
             Imputer(
-                strategy=impute_strategy,
+                strategy="mean",
                 inputCols=list(feature_cols),
                 outputCols=imputed,
             ),
@@ -46,9 +41,9 @@ def build_preprocessing(
             ),
             StandardScaler(
                 inputCol="__features_raw",
-                outputCol=output_col,
-                withMean=with_mean,
-                withStd=with_std,
+                outputCol="features",
+                withMean=True,
+                withStd=True,
             ),
         ]
     )

@@ -136,13 +136,12 @@ DHASH_SCHEMA = T.StructType(
 )
 
 
-def image_dhash(df: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
+def image_dhash(df: DataFrame) -> DataFrame:
     """Perceptual difference hash (dHash) per image through the REAL
-    decode path: payload → codec-registry decode → (height, width)
-    grayscale grid → horizontal-gradient sign bits — bit
-    ``r·(width−1)+c`` is 1 iff ``p[r,c] < p[r,c+1]`` — packed
-    little-endian into one int64 (``height·(width−1)`` bits; 56 at the
-    8×8 default, comfortably inside the sign bit).
+    decode path: payload → codec-registry decode → 8×8 grayscale grid →
+    horizontal-gradient sign bits — bit ``r·7+c`` is 1 iff
+    ``p[r,c] < p[r,c+1]`` — packed little-endian into one int64 (56
+    bits, comfortably inside the sign bit).
 
     dHash is the standard perceptual near-dup signature (the image
     twin of simhash): a local pixel edit flips at most the two
@@ -152,8 +151,7 @@ def image_dhash(df: DataFrame, width: int = 8, height: int = 8) -> DataFrame:
     One vectorized pass per Arrow batch; the per-image work is a
     reshape + one elementwise compare + one dot with the bit-weight
     vector."""
-    if height * (width - 1) > 62:
-        raise ValueError("dhash wider than 62 bits does not fit int64")
+    height = width = 8
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
         import numpy as np

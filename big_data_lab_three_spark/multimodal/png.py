@@ -41,10 +41,11 @@ def _chunk(typ: bytes, body: bytes) -> bytes:
     )
 
 
-def encode_png(arr: "np.ndarray", compress_level: int = 6) -> bytes:
+def encode_png(arr: "np.ndarray") -> bytes:
     """Encode a uint8 array as PNG: 2-D → grayscale, (h,w,2) →
     gray+alpha, (h,w,3) → RGB, (h,w,4) → RGBA.  Filter 0 on every
-    scanline, one IDAT chunk — valid per spec, just not size-optimal."""
+    scanline, one zlib level-6 IDAT chunk — valid per spec, just not
+    size-optimal."""
     a = np.ascontiguousarray(arr, dtype=np.uint8)
     if a.ndim == 2:
         ctype = 0
@@ -58,7 +59,7 @@ def encode_png(arr: "np.ndarray", compress_level: int = 6) -> bytes:
     return (
         _SIG
         + _chunk(b"IHDR", ihdr)
-        + _chunk(b"IDAT", zlib.compress(raw, compress_level))
+        + _chunk(b"IDAT", zlib.compress(raw, 6))
         + _chunk(b"IEND", b"")
     )
 

@@ -3,20 +3,13 @@ from big_data_lab_three_spark.operators.relational import (  # noqa: F401
     drop_columns,
     label_encode,
     nullify_nonfinite,
-    string_columns,
-    top1_per_group,
     topk,
     union_by_name,
-    with_row_id,
 )
 from big_data_lab_three_spark.operators.aggregates import (  # noqa: F401
-    accuracy,
     classification_report,
-    column_modes,
     confusion_matrix,
     distinct_profile,
-    impute_mean,
-    impute_mode,
     null_profile,
     shape,
     value_counts,

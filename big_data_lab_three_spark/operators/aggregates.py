@@ -1,11 +1,11 @@
-"""Aggregations (SURVEY.md §2.3): profiling, imputation, scaling, metrics.
+"""Aggregations (SURVEY.md §2.3): profiling, scaling, metrics.
 
 The pandas reference computes per-column statistics with one full pass per
 column (85 passes for an 85-column null profile).  Every profile here is a
 SINGLE wide ``agg(*exprs)`` — Catalyst fuses all columns into one
 hash-aggregate stage, one scan, with map-side partial aggregation.
 
-Imputation/scaling deliberately avoid ``avg(...) over ()`` empty-frame
+Scaling deliberately avoids ``avg(...) over ()`` empty-frame
 windows: a global window funnels the whole table through ONE task.  Instead
 the tiny statistics row is computed with an ``agg`` and broadcast-joined
 back — the fact table never shuffles.
@@ -61,20 +61,12 @@ def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     )
 
 
-def distinct_profile(
-    df: DataFrame, cols: Sequence[str] | None = None, approx: bool = False
-) -> DataFrame:
-    """A2 — per-column distinct count (reference nb cells 15-16:
-    ``{c: df[c].nunique()}``), one wide agg.
-
-    ``approx=True`` switches to HyperLogLog ``approx_count_distinct`` — at
-    100 TB exact multi-column countDistinct expands rows per column, so the
-    sketch is the scale path (2% default error, one pass, mergeable).
-    """
+def distinct_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
+    """A2 — per-column exact distinct count (reference nb cells 15-16:
+    ``{c: df[c].nunique()}``), one wide agg."""
     cols = cols or df.columns
-    fn = F.approx_count_distinct if approx else F.countDistinct
     agg = df.agg(
-        *[fn(F.col(c)).alias(f"d_{i}") for i, c in enumerate(cols)]
+        *[F.countDistinct(F.col(c)).alias(f"d_{i}") for i, c in enumerate(cols)]
     )
     pairs = ", ".join(f"'{c}', d_{i}" for i, c in enumerate(cols))
     return agg.selectExpr(
@@ -82,100 +74,14 @@ def distinct_profile(
     )
 
 
-def column_modes(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """A4 — per-column mode with pandas tie-breaking (reference nb cell 18:
-    ``df.mode().iloc[0]`` takes the SMALLEST value on ties — SURVEY.md §7.4).
-
-    One shuffle total: melt all columns with ``stack`` then a single
-    (column, value) count + argmax, instead of one job per column.  Values
-    are cast to string for the melt (heterogeneous types); callers cast back.
-    Returns (column, mode_value, mode_count).
-    """
-    cols = cols or df.columns
-    pairs = ", ".join(f"'{c}', cast(`{c}` as string)" for c in cols)
-    melted = df.selectExpr(f"stack({len(cols)}, {pairs}) as (column, value)")
-    counts = (
-        melted.where(F.col("value").isNotNull())
-        .groupBy("column", "value")
-        .count()
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("column").orderBy(
-        F.desc("count"), F.asc("value")
-    )
-    return (
-        counts.withColumn("_rn", F.row_number().over(w))
-        .where("_rn = 1")
-        .select(
-            "column",
-            F.col("value").alias("mode_value"),
-            F.col("count").alias("mode_count"),
-        )
-    )
-
-
-def impute_mode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
-    """A4 — mode imputation (reference nb cells 18/39:
-    ``df.fillna(df.mode().iloc[0])``).
-
-    The tiny mode table is collected driver-side (one row per column — this
-    is metadata-sized, not data-sized) and baked into a ``coalesce``
-    projection, so the fill itself is shuffle-free.
-    """
-    modes = {
-        r["column"]: r["mode_value"]
-        for r in column_modes(df, cols).collect()
-    }
-    out = df
-    for f_ in df.schema.fields:
-        if f_.name in modes:
-            out = out.withColumn(
-                f_.name,
-                F.coalesce(
-                    F.col(f_.name),
-                    F.lit(modes[f_.name]).cast(f_.dataType),
-                ),
-            )
-    return out
-
-
-def impute_mean(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
-    """A5 — mean imputation (reference ``src/train.py:61-66``
-    ``SimpleImputer(strategy='mean')``; SQL form ``coalesce(c, avg(c) over())``).
-
-    Means come from one wide agg; the single stats row is broadcast
-    cross-joined back (a ``BroadcastNestedLoopJoin`` over ONE row — free),
-    so the fact table is never funneled through a global window partition.
-    """
-    cols = _numeric_cols(df, cols)
-    stats = df.agg(
-        *[F.avg(F.col(c)).alias(f"_mean_{i}") for i, c in enumerate(cols)]
-    )
-    joined = df.crossJoin(F.broadcast(stats))
-    exprs = []
-    idx = {c: i for i, c in enumerate(cols)}
-    for c in df.columns:
-        if c in idx:
-            exprs.append(
-                F.coalesce(F.col(c), F.col(f"_mean_{idx[c]}")).alias(c)
-            )
-        else:
-            exprs.append(F.col(c))
-    return joined.select(*exprs)
-
-
-def zscore(
-    df: DataFrame,
-    cols: Sequence[str] | None = None,
-    with_mean: bool = True,
-    with_std: bool = True,
-) -> DataFrame:
+def zscore(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """A6 — z-score standardization (reference ``src/train.py:61-66``
     ``StandardScaler``: ``(x - mean) / std`` per column, sample std).
 
-    Same broadcast-stats pattern as :func:`impute_mean` — one agg pass for
-    all means/stds, broadcast back, pure projection to scale.  The
+    Means and stds come from one wide agg; the single stats row is
+    broadcast cross-joined back (a ``BroadcastNestedLoopJoin`` over ONE
+    row — free), so scaling is a pure projection and the fact table is
+    never funneled through a global window partition.  The
     ``pyspark.ml`` pipeline variant is ``ml.pipeline.build_preprocessing``.
     """
     cols = _numeric_cols(df, cols)
@@ -190,34 +96,17 @@ def zscore(
     for c in df.columns:
         if c in idx:
             i = idx[c]
-            e = F.col(c)
-            if with_mean:
-                e = e - F.col(f"_mean_{i}")
-            if with_std:
-                e = e / F.col(f"_std_{i}")
+            e = (F.col(c) - F.col(f"_mean_{i}")) / F.col(f"_std_{i}")
             exprs.append(e.alias(c))
         else:
             exprs.append(F.col(c))
     return joined.select(*exprs)
 
 
-def value_counts(df: DataFrame, col: str, asc_value_tiebreak: bool = True) -> DataFrame:
+def value_counts(df: DataFrame, col: str) -> DataFrame:
     """A7 — group-count descending (reference nb cell 43:
-    ``value_counts()``), with a deterministic value tiebreak."""
-    order = [F.desc("count")]
-    order.append(F.asc(col) if asc_value_tiebreak else F.desc(col))
-    return df.groupBy(col).count().orderBy(*order)
-
-
-def accuracy(
-    df: DataFrame, label: str = "label", prediction: str = "prediction"
-) -> float:
-    """A9 — accuracy (reference ``src/train.py:123-124``
-    ``accuracy_score``)."""
-    row = df.agg(
-        F.avg((F.col(prediction) == F.col(label)).cast("double")).alias("acc")
-    ).first()
-    return float(row["acc"]) if row["acc"] is not None else float("nan")
+    ``value_counts()``), ties broken by ascending value."""
+    return df.groupBy(col).count().orderBy(F.desc("count"), F.asc(col))
 
 
 def confusion_matrix(
@@ -232,11 +121,11 @@ def confusion_matrix(
     )
 
 
-def classification_report(
-    df: DataFrame, label: str = "label", prediction: str = "prediction"
-) -> DataFrame:
-    """A11 — per-class precision/recall/F1 (reference nb cell 51), derived
-    relationally from the confusion counts (tiny frame — per-class rows)."""
+def classification_report(df: DataFrame) -> DataFrame:
+    """A11 — per-class precision/recall/F1 (reference nb cell 51) of
+    ``df``'s ``label``/``prediction`` columns, derived relationally from
+    the confusion counts (tiny frame — per-class rows)."""
+    label, prediction = "label", "prediction"
     cm = confusion_matrix(df, label, prediction)
     per_label = cm.groupBy(label).agg(F.sum("n").alias("support"))
     per_pred = cm.groupBy(prediction).agg(F.sum("n").alias("predicted_n"))

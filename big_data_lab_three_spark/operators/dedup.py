@@ -26,10 +26,14 @@ from pyspark.sql import types as T
 from big_data_lab_three_spark.functions.text import shingles, tokens
 from big_data_lab_three_spark.operators.iterate import Rounds
 
+# Every document operator reads the ``documents`` table's columns and
+# shingles on word 3-grams.
+_TEXT_COL = "text"
+_ID_COL = "doc_id"
+_SHINGLE_K = 3
 
-def exact_dedup(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
+
+def exact_dedup(df: DataFrame) -> DataFrame:
     """Exact dedup via content-digest groupBy: returns one row per
     distinct content with the smallest id kept and the duplicate count.
 
@@ -38,80 +42,18 @@ def exact_dedup(
     shuffling 100 TB of text and ~2 TB of digests.
     """
     return (
-        df.groupBy(F.md5(F.encode(F.col(text_col), "UTF-8")).alias("content_md5"))
+        df.groupBy(F.md5(F.encode(F.col(_TEXT_COL), "UTF-8")).alias("content_md5"))
         .agg(
-            F.min(id_col).alias("kept_id"),
+            F.min(_ID_COL).alias("kept_id"),
             F.count(F.lit(1)).alias("copies"),
         )
     )
 
 
-def minhash_signature(
-    toks: Column, num_perms: int = 32, shingle_k: int = 3
-) -> Column:
-    """MinHash signature: hash every shingle ONCE to a 64-bit value,
-    then fold a single pass over those hashes keeping, for permutation
-    i, ``min(xxhash64(h, i))`` — re-hashing a fixed-width long per
-    permutation instead of the variable-length shingle string.
-
-    Expressed as one ``aggregate`` (fold) so the expression tree stays
-    small: a naive ``transform(perms, i -> array_min(transform(sh, s ->
-    xxhash64(s, i))))`` inlines the shingle subtree into every
-    permutation lambda and re-tokenizes/re-hashes the document
-    ``num_perms`` times per evaluation — measured 40s vs <2s on the
-    sf0.1 corpus.  One projection, no explode, no shuffle — the right
-    form when a shuffle is unaffordable (streaming, per-row scoring).
-    Batch pipelines should prefer :func:`minhash_signatures`, whose
-    groupBy stays in codegen and materializes signatures exactly once.
-    """
-    hashes = F.transform(shingles(toks, shingle_k), lambda s: F.xxhash64(s))
-    return F.aggregate(
-        hashes,
-        F.array_repeat(F.lit(None).cast("long"), num_perms),
-        lambda acc, h: F.zip_with(
-            acc,
-            F.sequence(F.lit(0), F.lit(num_perms - 1)),
-            lambda m, i: F.least(m, F.xxhash64(h, i)),
-        ),
-    )
-
-
-def minhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    num_perms: int = 32,
-    shingle_k: int = 3,
-) -> DataFrame:
-    """MinHash signatures as ``(id, sig array<long>)`` via explode +
-    hash-aggregate: shingle hashes become 16-byte ``(id, h)`` rows, one
-    ``groupBy(id)`` computes ``min(xxhash64(h, i))`` for every
-    permutation in a single codegen'd pass.  Map-side partial
-    aggregation collapses each document to one signature row before the
-    shuffle.  Duplicate shingles need no dedup — ``min`` is idempotent.
-    Documents with fewer than ``shingle_k`` tokens produce no row."""
-    hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(tokens(F.col(text_col)), shingle_k)).alias("t"),
-    ).select("id", F.xxhash64("t").alias("h"))
-    g = hashed.groupBy("id").agg(
-        *[
-            F.min(F.xxhash64(F.col("h"), F.lit(i))).alias(f"_m{i}")
-            for i in range(num_perms)
-        ]
-    )
-    return g.select(
-        "id", F.array(*[f"_m{i}" for i in range(num_perms)]).alias("sig")
-    )
-
-
 def minhash_lsh_pairs(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     num_perms: int = 32,
     bands: int = 16,
-    shingle_k: int = 3,
     jaccard_threshold: float = 0.7,
     candidate_filter: Column | None = None,
 ) -> DataFrame:
@@ -146,9 +88,9 @@ def minhash_lsh_pairs(
     # signature pipeline and the rescore joins (it previously ran as
     # two independent tokenize+shingle passes over the corpus).
     sets = df.select(
-        F.col(id_col).alias("id"),
+        F.col(_ID_COL).alias("id"),
         F.array_distinct(
-            shingles(tokens(F.col(text_col)), shingle_k)
+            shingles(tokens(F.col(_TEXT_COL)), _SHINGLE_K)
         ).alias("sh"),
     ).where(F.size("sh") > 0).persist()
     hashed = sets.select(
@@ -235,18 +177,13 @@ def minhash_lsh_pairs(
     ).where(F.col("jaccard") >= jaccard_threshold)
 
 
-def ngram_jaccard_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
+def ngram_jaccard_pairs(df: DataFrame) -> DataFrame:
     """Exact all-pairs n-gram Jaccard (brute force).  Quadratic — the
     CORRECTNESS baseline for :func:`minhash_lsh_pairs`, only ever run on
     samples or within LSH candidate buckets at scale."""
     sets = df.select(
-        F.col(id_col).alias("id"),
-        F.array_distinct(shingles(tokens(F.col(text_col)), shingle_k)).alias(
+        F.col(_ID_COL).alias("id"),
+        F.array_distinct(shingles(tokens(F.col(_TEXT_COL)), _SHINGLE_K)).alias(
             "sh"
         ),
     ).where(F.size("sh") > 0).persist()
@@ -272,12 +209,7 @@ _SIMHASH_BITS = 60
 _SIMHASH_MASKS = [1 << b for b in range(_SIMHASH_BITS)]
 
 
-def simhash_signatures(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    shingle_k: int = 3,
-) -> DataFrame:
+def simhash_signatures(df: DataFrame, shingle_k: int = 3) -> DataFrame:
     """60-bit SimHash per document as ``(id, sig)``: per bit position,
     sum +1/-1 over shingle hashes by whether the bit is set; positive
     sum → signature bit 1.  Documents with fewer than ``shingle_k``
@@ -293,8 +225,8 @@ def simhash_signatures(
     interpreted, boxed — and measured 20ms/row (~20× slower) on the
     sf0.1 corpus."""
     hashed = df.select(
-        F.col(id_col).alias("id"),
-        F.explode(shingles(tokens(F.col(text_col)), shingle_k)).alias("t"),
+        F.col(_ID_COL).alias("id"),
+        F.explode(shingles(tokens(F.col(_TEXT_COL)), shingle_k)).alias("t"),
     ).select(
         "id",
         # engine-portable 60-bit hash: first 15 hex digits of md5
@@ -324,9 +256,7 @@ def hamming64(a: Column, b: Column) -> Column:
     return F.bit_count(a.bitwiseXOR(b))
 
 
-def simhash_bucket_keys(
-    sigs: DataFrame, max_hamming: int = 3, blocks: int | None = None
-) -> DataFrame:
+def simhash_bucket_keys(sigs: DataFrame, max_hamming: int = 3) -> DataFrame:
     """Pigeonhole bucket keys for a SimHash signature table — the
     candidate-generation half of :func:`simhash_pairs`, exposed so
     census/audit queries can inspect the bucket structure WITHOUT the
@@ -334,19 +264,18 @@ def simhash_bucket_keys(
     here is a projection + explode, linear at any corpus size).
 
     Input: ``(id, sig)``; output: ``(id, sig, t, k)`` — one row per
-    (document, table), where table ``t`` keys on a distinct combination
-    of ``blocks - max_hamming`` signature segments and ``k`` packs those
+    (document, table), where the signature is cut into
+    ``max_hamming + 1`` equal segments, table ``t`` keys on a distinct
+    combination of all but ``max_hamming`` of them and ``k`` packs those
     segments' bits.  Any pair within Hamming ``max_hamming`` shares
     (t, k) for some t — recall 1 by the pigeonhole argument (Manku et
     al., WWW'07)."""
     from itertools import combinations
 
     d = max_hamming
-    b = blocks if blocks is not None else d + 1
-    if b < d + 1 or _SIMHASH_BITS % b != 0:
-        raise ValueError(
-            f"blocks must be >= max_hamming+1 and divide {_SIMHASH_BITS}"
-        )
+    b = d + 1
+    if _SIMHASH_BITS % b != 0:
+        raise ValueError(f"max_hamming+1 must divide {_SIMHASH_BITS}")
     seg_bits = _SIMHASH_BITS // b
     seg_mask = (1 << seg_bits) - 1
 
@@ -377,7 +306,6 @@ def simhash_bucket_keys(
 
 def portable_minhash_signatures(
     df: DataFrame,
-    text_col: str = "text",
     id_col: str = "doc_id",
     num_perms: int = 8,
     shingle_k: int = 3,
@@ -387,7 +315,7 @@ def portable_minhash_signatures(
     ``s || '|' || i`` — bit-identical in DuckDB as
     ``('0x' || substr(md5(s || '|' || i), 1, 15))::BIGINT`` — so a SQL
     oracle can recompute signatures LINEARLY (docs × shingles × perms),
-    unlike the xxhash64 production path (:func:`minhash_signatures`)
+    unlike the xxhash64 production path (:func:`minhash_lsh_pairs`)
     whose correctness witness is the quadratic all-pairs Jaccard.
 
     Same scale shape as the production path: explode to (id, shingle,
@@ -399,7 +327,7 @@ def portable_minhash_signatures(
     hashed = (
         df.select(
             F.col(id_col).alias("id"),
-            F.explode(shingles(tokens(F.col(text_col)), shingle_k)).alias(
+            F.explode(shingles(tokens(F.col(_TEXT_COL)), shingle_k)).alias(
                 "s"
             ),
         )
@@ -426,38 +354,32 @@ def portable_minhash_signatures(
     )
 
 
-def simhash_pairs(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    max_hamming: int = 3,
-    blocks: int | None = None,
-) -> DataFrame:
+def simhash_pairs(df: DataFrame, max_hamming: int = 3) -> DataFrame:
     """SimHash near-dup pairs via multi-segment (pigeonhole) bucketing
-    — Manku et al., WWW'07: split the 60-bit signature into ``blocks``
-    equal segments and bucket each document once per combination of
-    ``blocks - max_hamming`` segments, keyed on those segments' bits.
-    Any pair within Hamming ``max_hamming`` differs in at most
-    ``max_hamming`` segments, so it agrees exactly on SOME such
-    combination — candidate recall is 1 BY CONSTRUCTION (the r2 prefix
-    scheme missed pairs whose differing bits fell in the prefix).
+    — Manku et al., WWW'07: split the 60-bit signature into
+    ``max_hamming + 1`` equal segments and bucket each document once per
+    segment, keyed on that segment's bits.  Any pair within Hamming
+    ``max_hamming`` differs in at most ``max_hamming`` segments, so it
+    agrees exactly on at least one — candidate recall is 1 BY
+    CONSTRUCTION (the r2 prefix scheme missed pairs whose differing bits
+    fell in the prefix).
 
-    Bucket math: ``blocks = max_hamming + 1`` (the default, 4 blocks →
-    4 tables keyed on one 15-bit segment) keeps keying cost minimal and
-    suits corpora up to ~10⁷ docs; at 10⁹ docs a 15-bit key leaves
-    ~30k docs/bucket, so raise ``blocks`` (e.g. 6 → C(6,3)=20 tables
-    keyed on 30 bits → ~1 doc/bucket) — table count times keying rows
-    is the price of bounded buckets, the plan shape is unchanged.
+    Bucket math: at ``max_hamming = 3`` that is 4 tables keyed on one
+    15-bit segment, which keeps keying cost minimal and suits corpora up
+    to ~10⁷ docs; at 10⁹ docs a 15-bit key leaves ~30k docs/bucket, and
+    keying on combinations of more segments (6 segments → C(6,3)=20
+    tables keyed on 30 bits → ~1 doc/bucket) bounds the buckets at the
+    price of table count times keying rows.
     Shuffles carry (id, sig, table, key) — never text.
     """
     # Shingle-level (not token-level) simhash: token sets collapse
     # when the corpus shares one vocabulary; shingles are
     # order-sensitive and spread unrelated docs to Hamming ≈ 32.
-    sigs = simhash_signatures(df, text_col, id_col, shingle_k=3)
+    sigs = simhash_signatures(df, shingle_k=3)
     # Signature table feeds both sides of the self-join — persist so the
     # explode + 64-sum aggregation runs once, not twice (measured 2x).
     sigs = sigs.persist()
-    keyed = simhash_bucket_keys(sigs, max_hamming=max_hamming, blocks=blocks)
+    keyed = simhash_bucket_keys(sigs, max_hamming=max_hamming)
     a, bb = keyed.alias("a"), keyed.alias("b")
     return (
         a.join(
@@ -569,28 +491,24 @@ def embedding_near_dup_pairs_lsh(
     id_col: str = "vec_id",
     threshold: float = 0.99,
     dim: int | None = None,
-    bits: int = 16,
-    tables: int = 4,
-    seed: int = 13,
 ) -> DataFrame:
     """Embedding-cosine near-duplicate pairs at scale: hyperplane-LSH
     bucket both copies of the corpus, equi-join on (table, signature),
     dedup candidate pairs, then exact cosine rescore ≥ ``threshold``.
 
     Nothing ever materializes on the driver: candidates come from a
-    bucket-key shuffle join whose per-bucket size is tuned by ``bits``
-    (16 sign bits ⇒ ~65k buckets per table), and only colliding pairs
+    bucket-key shuffle join whose per-bucket size is set by the sign
+    bits per table (16 ⇒ ~65k buckets per table), and only colliding pairs
     are scored — O(Σ bucket²) work instead of O(n²).  The exact rescore
     means false candidates cost time, never correctness; recall is the
     only approximation.  Near-duplicate vectors are near-COLINEAR, and
     sign-LSH collision probability is 1 − θ/π per bit (θ = angle), so a
     cos ≥ 0.99 pair (θ ≤ 8.1°) agrees per-bit w.p. ≥ 0.955, hits one
     16-bit table w.p. ≥ 0.955¹⁶ ≈ 0.48, and ≥1 of 4 tables w.p.
-    ≈ 0.93 at the defaults; exactly-colinear duplicates
+    ≈ 0.93 with 4 tables; exactly-colinear duplicates
     (rescaled/requantized copies, the dominant real-world case) collide
-    in EVERY table — recall 1.  Raise ``tables`` (recall
-    1−(1−0.48)^L) or lower ``bits`` for more recall at proportional
-    candidate cost.
+    in EVERY table — recall 1.  More tables (recall 1−(1−0.48)^L) or
+    fewer bits buy more recall at proportional candidate cost.
 
     The plane matrix is a tiny seeded (bits·tables × d) constant shipped
     in the task closure — deterministic, never a shuffle.  ``dim`` is
@@ -626,7 +544,8 @@ def embedding_near_dup_pairs_lsh(
                 ),
             )
         dim = first["d"]
-    rng = np.random.default_rng(seed)
+    bits, tables = 16, 4
+    rng = np.random.default_rng(13)
     planes = rng.normal(size=(bits * tables, dim)).tolist()
     keyed = hyperplane_keys(v, planes, tables, vec_col="vec")
     a = keyed.select(
@@ -653,11 +572,7 @@ def embedding_near_dup_pairs_lsh(
 
 
 def connected_components(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 20,
-    loop_partitions: int = 8,
+    pairs: DataFrame, max_iters: int = 20, loop_partitions: int = 8
 ) -> DataFrame:
     """Cluster the near-duplicate pair graph: every id is labeled with
     the MINIMUM id reachable through the pairs — the canonical member of
@@ -694,9 +609,7 @@ def connected_components(
     return _run_at_loop_width(
         pairs,
         loop_partitions,
-        lambda p: _connected_components_loop(
-            p, id_a, id_b, max_iters, loop_partitions
-        ),
+        lambda p: _connected_components_loop(p, max_iters, loop_partitions),
     )
 
 
@@ -737,13 +650,9 @@ def _run_at_loop_width(pairs: DataFrame, loop_partitions: int, run):
 
 
 def _connected_components_loop(
-    pairs: DataFrame,
-    id_a: str,
-    id_b: str,
-    max_iters: int,
-    loop_partitions: int,
+    pairs: DataFrame, max_iters: int, loop_partitions: int
 ) -> DataFrame:
-    fwd = pairs.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
+    fwd = pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     # localCheckpoint (not persist): iterative DataFrame algorithms grow
     # their LOGICAL plan multiplicatively per round — the cache serves
     # results, but Catalyst still re-analyzes the whole unrolled lineage
@@ -802,11 +711,7 @@ def _connected_components_loop(
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    id_a: str = "id_a",
-    id_b: str = "id_b",
-    max_iters: int = 30,
-    loop_partitions: int = 8,
+    pairs: DataFrame, max_iters: int = 30, loop_partitions: int = 8
 ) -> DataFrame:
     """Connected components via alternating **large-star / small-star**
     contraction (Kiveris et al., "Connected Components in MapReduce and
@@ -842,17 +747,13 @@ def connected_components_star(
     return _run_at_loop_width(
         pairs,
         loop_partitions,
-        lambda p: _connected_components_star_loop(
-            p, id_a, id_b, max_iters
-        ),
+        lambda p: _connected_components_star_loop(p, max_iters),
     )
 
 
-def _connected_components_star_loop(
-    pairs: DataFrame, id_a: str, id_b: str, max_iters: int
-) -> DataFrame:
+def _connected_components_star_loop(pairs: DataFrame, max_iters: int) -> DataFrame:
     edges = (
-        pairs.select(F.col(id_a).alias("u"), F.col(id_b).alias("v"))
+        pairs.select(F.col("id_a").alias("u"), F.col("id_b").alias("v"))
         .where(F.col("u") != F.col("v"))
         .distinct()
         .localCheckpoint()

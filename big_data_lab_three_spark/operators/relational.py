@@ -96,28 +96,10 @@ def coerce_numeric(df: DataFrame, cols: Sequence[str]) -> DataFrame:
     return df.select(*exprs)
 
 
-def string_columns(df: DataFrame) -> list[str]:
-    """P7 — dtype-based column selection (reference nb cell 23:
-    ``select_dtypes(include=['object'])``)."""
-    return [
-        f.name for f in df.schema.fields if isinstance(f.dataType, StringType)
-    ]
-
-
-def with_row_id(df: DataFrame, name: str = "row_id") -> DataFrame:
-    """P8 — explicit row id replacing the pandas index
-    (``monotonically_increasing_id`` — unique and stable within a run, NOT
-    the dense 0..n-1 of pandas; dense ids would force a global sort +
-    ``zipWithIndex``, which is a scale anti-pattern)."""
-    return df.withColumn(name, F.monotonically_increasing_id())
-
-
-def label_encode(
-    df: DataFrame, cols: Sequence[str], suffix: str = "_code"
-) -> DataFrame:
-    """P9 — string → dense int codes (reference nb cell 23,
-    ``LabelEncoder``: codes are the 0-based rank of the sorted distinct
-    values).
+def label_encode(df: DataFrame, cols: Sequence[str]) -> DataFrame:
+    """P9 — string → dense int codes in ``<col>_code`` (reference nb
+    cell 23, ``LabelEncoder``: codes are the 0-based rank of the sorted
+    distinct values).
 
     Implemented as a broadcast join per column against the tiny distinct
     dictionary — the dictionary aggregation shuffles only distinct values
@@ -133,7 +115,7 @@ def label_encode(
             .select(
                 c,
                 (F.dense_rank().over(Window.orderBy(F.col(c))) - 1).alias(
-                    f"{c}{suffix}"
+                    f"{c}_code"
                 ),
             )
         )
@@ -173,30 +155,12 @@ def topk(
     return df.orderBy(*order).limit(k)
 
 
-def top1_per_group(
-    df: DataFrame,
-    keys: Sequence[str],
-    order: Sequence,
-) -> DataFrame:
-    """O3 — argmax per group (reference nb cell 18: ``df.mode().iloc[0]``
-    is an argmax of value-counts per column).  ``row_number`` over a
-    partitioned window — one shuffle on the group keys."""
-    w = Window.partitionBy(*keys).orderBy(*order)
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") == 1)
-        .drop("_rn")
-    )
-
-
 def salted_join(
     big: DataFrame,
     small: DataFrame,
     big_key: str,
     small_key: str,
     salt_buckets: int = 8,
-    seed: int = 42,
-    how: str = "inner",
 ) -> DataFrame:
     """Skew-mitigating join: salt the big (skewed) side into
     ``salt_buckets`` sub-keys and replicate the small side once per salt
@@ -210,7 +174,7 @@ def salted_join(
     SINGLE key value, which cannot be partition-split without changing
     the key.  The salt is random (seeded) because it only routes rows;
     the join result is salt-invariant."""
-    salt = F.floor(F.rand(seed) * salt_buckets).cast("int")
+    salt = F.floor(F.rand(42) * salt_buckets).cast("int")
     b = big.withColumn("_salt", salt)
     s = small.withColumn(
         "_salt_arr",
@@ -219,7 +183,7 @@ def salted_join(
     joined = b.join(
         s,
         (b[big_key] == s[small_key]) & (b["_salt"] == s["_salt"]),
-        how,
+        "inner",
     )
     return joined.drop(b["_salt"]).drop(s["_salt"])
 

@@ -149,10 +149,12 @@ def mmr_select(
     )
 
 
-# Column names every ANN operator reads, and the seed and Lloyd's
-# iteration count every driver-side trainer runs with.
+# Column names every ANN operator reads, the seed and Lloyd's
+# iteration count every driver-side trainer runs with, and the OPQ
+# solver's rotation/codebook alternations.
 _ID_COL, _VEC_COL = "vec_id", "embedding"
 _SEED, _MAX_ITER = 7, 8
+_OPQ_ITERS = 6
 
 
 def _query_side(df: DataFrame) -> DataFrame:
@@ -247,8 +249,7 @@ def _train_pq_books(mat, m: int, ksub: int, seed: int, max_iter: int):
     return np.stack(books)
 
 
-def _train_opq(mat, m: int, ksub: int, seed: int, max_iter: int,
-               opq_iters: int = 6):
+def _train_opq(mat, m: int, ksub: int, seed: int, max_iter: int):
     """OPQ rotation + codebooks (Ge et al. 2013, the non-parametric
     alternating solver; FAISS ``OPQMatrix``): iterate (a) train PQ
     codebooks on the rotated sample, (b) reconstruct each rotated
@@ -273,7 +274,7 @@ def _train_opq(mat, m: int, ksub: int, seed: int, max_iter: int,
     # matters (pq@sf0.1 0.64 → 0.52, below even the unrotated 0.56)
     # while saving only ~2s of driver time on a corpus-independent
     # capped sample — the wrong trade at every scale (r14 A/B).
-    for _ in range(opq_iters):
+    for _ in range(_OPQ_ITERS):
         xr = mat @ rot
         books = _train_pq_books(xr, m, ksub, seed, max_iter)
         recon = np.empty_like(xr)
@@ -380,11 +381,10 @@ def hyperplane_keys(
     planes: list[list[float]],
     tables: int,
     vec_col: str,
-    out: str = "key",
 ) -> DataFrame:
     """Multi-table random-hyperplane LSH keys: ``planes`` split into
     ``tables`` groups; each group's sign bits form one bucket key
-    (table_id, signature).  One output row per (vector, table); sign
+    ``key`` = (tbl, sig).  One output row per (vector, table); sign
     bits come from a single per-batch matmul against the (driver-seeded,
     deterministic) plane matrix.
 
@@ -411,7 +411,7 @@ def hyperplane_keys(
         list(df.schema.fields)
         + [
             T.StructField(
-                out,
+                "key",
                 T.StructType(
                     [
                         T.StructField("tbl", T.IntegerType(), False),
@@ -436,7 +436,7 @@ def hyperplane_keys(
                 for i in range(per):
                     sig |= bits[:, t * per + i].astype(np.int64) << i
                 o = b.copy()
-                o[out] = [
+                o["key"] = [
                     {"tbl": t, "sig": int(s)} for s in sig
                 ]
                 yield o
@@ -449,16 +449,15 @@ def _cell_keys(
     centers: list[list[float]],
     nprobe: int,
     vec_col: str,
-    out: str = "cell",
 ) -> DataFrame:
     """Assign each vector to its ``nprobe`` nearest coarse-quantizer
-    cells (cosine, via L2-normalized dot against the tiny center
+    ``cell``s (cosine, via L2-normalized dot against the tiny center
     matrix — one matmul per Arrow batch).  One output row per
     (vector, probed cell).  ``nprobe=1`` is the corpus-side assignment;
     queries probe several cells to recover vectors near cell borders."""
     c_rows = [list(map(float, c)) for c in centers]
     schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.IntegerType(), False)]
+        list(df.schema.fields) + [T.StructField("cell", T.IntegerType(), False)]
     )
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
@@ -477,7 +476,7 @@ def _cell_keys(
             top = np.argsort(-sims, axis=1)[:, :nprobe]  # deterministic
             for j in range(nprobe):
                 o = b.copy()
-                o[out] = top[:, j].astype("int32")
+                o["cell"] = top[:, j].astype("int32")
                 yield o
 
     return df.mapInPandas(run, schema)
@@ -495,19 +494,19 @@ _MAX_CELLS = 4096
 _TRAIN_SAMPLE_MAX = 262_144
 
 
-def adaptive_nlist(n_vecs: int, target_cell: int = 256, floor: int = 16) -> int:
+def adaptive_nlist(n_vecs: int) -> int:
     """IVF cell count as a function of corpus size: enough cells that
-    the EXPECTED inverted list holds ~``target_cell`` vectors, never
-    fewer than ``floor``, never more than ``_MAX_CELLS`` (r11 verdict
-    watch item + ADVICE r12).  Below the cap, per-cell candidate work
-    is ``nprobe × target_cell`` regardless of corpus scale; above it
+    the EXPECTED inverted list holds ~256 vectors, never fewer than 16,
+    never more than ``_MAX_CELLS`` (r11 verdict watch item + ADVICE
+    r12).  Below the cap, per-cell candidate work is ``nprobe × 256``
+    regardless of corpus scale; above it
     (> ~1M vectors) the centroid matrix and probe cost stay bounded
     while inverted lists grow ``n/_MAX_CELLS`` — the honest flat-IVF
     trade; the scale path past that is a two-level (IVF-in-IVF)
     quantizer.  Pinned by ``tests/test_scaling.py``'s bound property."""
     import math
 
-    return min(_MAX_CELLS, max(floor, math.ceil(n_vecs / target_cell)))
+    return min(_MAX_CELLS, max(16, math.ceil(n_vecs / 256)))
 
 
 def ivf_topk(
@@ -766,7 +765,6 @@ def ivfpq_topk(
     ksub: int = 16,
     k: int = 5,
     candidates: int = 64,
-    opq: bool = False,
 ) -> DataFrame:
     """Combined IVF-PQ ANN (FAISS ``IndexIVFPQ`` shape) — the index
     virtually every production billion-scale vector deployment runs,
@@ -820,14 +818,8 @@ def ivfpq_topk(
     sample = _content_keyed_sample(corpus, cap)
     centers_m = _spherical_kmeans(sample, nlist, _SEED, _MAX_ITER)
     s_assign = np.argmax(sample @ centers_m.T, axis=1)
-    # OPQ on the RESIDUALS: coarse assignment is invariant under a
-    # joint rotation (argmax(xR·(CR)ᵀ) == argmax(x·Cᵀ)), so the learned
-    # rotation only re-slices the residual space the PQ codes quantize
-    # — the FAISS ``OPQMatrix`` + ``IndexIVFPQ`` composition.
-    # Guarantee-preserving: a duplicate shares its query's cell and
-    # rotated residual, so its ADC sum stays the per-term lower bound.
-    rot, books_arr = _train_codebooks(
-        sample - centers_m[s_assign], m, ksub, opq
+    books_arr = _train_pq_books(
+        sample - centers_m[s_assign], m, ksub, _SEED, _MAX_ITER
     )
     dsub = sample.shape[1] // m
 
@@ -837,8 +829,6 @@ def ivfpq_topk(
     # Per-(query, probed cell) ADC tables from the query's residual
     # against that cell's centroid: (nq, nprobe, m, ksub).
     qr = q_mat[:, None, :] - centers_m[probe]
-    if rot is not None:
-        qr = qr @ rot
     tables = (
         (qr.reshape(nq, nprobe, m, 1, dsub) - books_arr[None, None]) ** 2
     ).sum(axis=4)
@@ -853,8 +843,6 @@ def ivfpq_topk(
 
         cell = np.argmax(x @ centers_m.T, axis=1)
         r = x - centers_m[cell]
-        if rot is not None:
-            r = r @ rot
         codes = (
             (r.reshape(len(x), m, 1, dsub) - books_arr[None]) ** 2
         ).sum(axis=3).argmin(axis=2)  # (n, m)
@@ -899,7 +887,6 @@ def _imi_keys(
     books,
     nprobe: int,
     vec_col: str,
-    out: str = "cell",
     rot=None,
 ) -> DataFrame:
     """Assign each vector to its ``nprobe²`` BEST joint cells of the
@@ -934,7 +921,7 @@ def _imi_keys(
     # int64 joint keys: int32 wraps silently at ksub >= 46341, BELOW
     # the ksub=65k scale the IMI design targets (review finding r13)
     schema = T.StructType(
-        list(df.schema.fields) + [T.StructField(out, T.LongType(), False)]
+        list(df.schema.fields) + [T.StructField("cell", T.LongType(), False)]
     )
 
     def run(batches: "Iterator[pd.DataFrame]") -> "Iterator[pd.DataFrame]":
@@ -976,7 +963,7 @@ def _imi_keys(
                 # Corpus assignment: one joint cell per vector,
                 # vectorized (the traversal's first pop, separably).
                 o = b.copy()
-                o[out] = (
+                o["cell"] = (
                     np.argmin(d0, axis=1).astype("int64") * ksub
                     + np.argmin(d1, axis=1)
                 ).astype("int64")
@@ -1022,7 +1009,7 @@ def _imi_keys(
                         )
             for t in range(t_cells):
                 o = b.copy()
-                o[out] = cells[:, t]
+                o["cell"] = cells[:, t]
                 yield o
 
     return df.mapInPandas(run, schema)

@@ -26,6 +26,14 @@ LANG_MARKERS: dict[str, list[str]] = {
     "es": ["el", "los", "las", "y", "es"],
 }
 
+# Every document operator reads the ``documents`` table's columns.
+_TEXT_COL = "text"
+_ID_COL = "doc_id"
+
+# Okapi BM25 term-saturation and length-normalization constants.
+_BM25_K1 = 1.2
+_BM25_B = 0.75
+
 # A BPE-ish word/number/punctuation splitter: runs of letters, runs of
 # digits, or single non-space symbols — the common pre-tokenizer shape.
 BPE_ISH_PATTERN = r"[A-Za-z]+|[0-9]+|[^A-Za-z0-9\s]"
@@ -38,14 +46,14 @@ def token_count(text: Column, bpe: bool = False) -> Column:
     return F.size(tokens(text))
 
 
-def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
+def quality_metrics(df: DataFrame) -> DataFrame:
     """Per-document quality signals: char/token counts, average token
     length, stopword fraction, punctuation fraction.
 
     One projection pass; all ratios are exact integer divisions so the
     numbers are reproducible bit-for-bit across engines.
     """
-    t = F.col(text_col)
+    t = F.col(_TEXT_COL)
     toks = tokens(t)
     n_toks = F.size(toks)
     tok_chars = F.aggregate(
@@ -66,7 +74,7 @@ def quality_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
+def repetition_metrics(df: DataFrame) -> DataFrame:
     """Per-document repetition and shape signals — the Gopher-style
     quality rules (Rae et al. 2021, "Scaling Language Models", App. A)
     a pretraining pipeline applies before anything model-based:
@@ -82,7 +90,7 @@ def repetition_metrics(df: DataFrame, text_col: str = "text") -> DataFrame:
     shuffle, no Python; throughput is scan-bound and scales with
     executors.  All three are ratios of exact integer counts, so both
     engines reproduce them bit-for-bit before any rounding."""
-    t = F.col(text_col)
+    t = F.col(_TEXT_COL)
     toks = tokens(t)
     n_toks = F.size(toks)
     sh2 = shingles(toks, 2)
@@ -132,52 +140,19 @@ def gopher_keep(df: DataFrame) -> DataFrame:
     )
 
 
-def lang_scores(text: Column) -> dict[str, Column]:
-    """Marker-hit count per candidate language (stopword-set heuristic —
-    the classic cheap language ID for web-scale corpora)."""
-    toks = tokens(F.lower(text))
-    return {
-        lang: F.size(F.filter(toks, lambda x: x.isin(*markers)))
-        for lang, markers in LANG_MARKERS.items()
-    }
-
-
-def predict_lang(text: Column, default: str = "en") -> Column:
-    """Argmax of :func:`lang_scores` with deterministic tie-breaking
-    (first language in LANG_MARKERS order wins ties; all-zero → default).
-    """
-    scores = lang_scores(text)
-    langs = list(scores)
-    best = scores[langs[0]]
-    for lang in langs[1:]:
-        best = F.greatest(best, scores[lang])
-    # Build CASE from last to first so earlier languages win ties (the
-    # first language's WHEN ends up outermost).
-    expr = F.lit(default)
-    for lang in reversed(langs):
-        expr = F.when(
-            (best > 0) & (scores[lang] == best), F.lit(lang)
-        ).otherwise(expr)
-    return expr
-
-
-def lang_id_table(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    default: str = "en",
-) -> DataFrame:
+def lang_id_table(df: DataFrame) -> DataFrame:
     """Language ID as ``(id, predicted_lang)`` via explode + one
     hash-aggregate: token rows get one conditional-sum per candidate
     language, argmax runs over the four post-aggregation COLUMNS
-    (attribute refs, not re-derived expressions).  Same semantics as
-    :func:`predict_lang`, but everything stays in whole-stage codegen —
-    the expression form re-tokenizes per CASE branch through duplicated
+    (attribute refs, not re-derived expressions), ties going to the
+    first language in ``LANG_MARKERS`` order.  Everything stays in
+    whole-stage codegen — an argmax over per-row marker-count
+    expressions re-tokenizes per CASE branch through duplicated
     higher-order-function subtrees (CodegenFallback, interpreted).
-    Token-less documents fall back to ``default``."""
+    Token-less and marker-less documents fall back to ``"en"``."""
     toks = df.select(
-        F.col(id_col).alias("_lid_id"),
-        F.explode(tokens(F.lower(F.col(text_col)))).alias("_tok"),
+        F.col(_ID_COL).alias("_lid_id"),
+        F.explode(tokens(F.lower(F.col(_TEXT_COL)))).alias("_tok"),
     )
     scores = toks.groupBy("_lid_id").agg(
         *[
@@ -187,50 +162,45 @@ def lang_id_table(
     )
     langs = list(LANG_MARKERS)
     best = F.greatest(*[F.col(f"_s_{lang}") for lang in langs])
-    expr = F.lit(default)
+    expr = F.lit("en")
     for lang in reversed(langs):
         expr = F.when(
             (best > 0) & (F.col(f"_s_{lang}") == best), F.lit(lang)
         ).otherwise(expr)
     scored = scores.select("_lid_id", expr.alias("predicted_lang"))
     return (
-        df.select(F.col(id_col))
-        .join(scored, F.col(id_col) == F.col("_lid_id"), "left")
+        df.select(F.col(_ID_COL))
+        .join(scored, F.col(_ID_COL) == F.col("_lid_id"), "left")
         .select(
-            id_col,
-            F.coalesce("predicted_lang", F.lit(default)).alias(
+            _ID_COL,
+            F.coalesce("predicted_lang", F.lit("en")).alias(
                 "predicted_lang"
             ),
         )
     )
 
 
-def fingerprint(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def fingerprint(df: DataFrame) -> DataFrame:
     """Document fingerprinting: whole-content md5 plus a min-shingle
-    fingerprint (md5 over k-gram shingles, minimum taken — the 1-perm
+    fingerprint (md5 over 3-gram shingles, minimum taken — the 1-perm
     minhash / winnowing-lite sketch).  Portable: md5 is identical across
     engines, so fingerprints computed here match any other stack's.
 
     Shingle hashing runs as explode + ``min`` hash-aggregate (codegen,
-    map-side combined); documents with <k tokens fall back to the
+    map-side combined); documents with <3 tokens fall back to the
     content hash via the left join's NULL."""
-    t = F.col(text_col)
+    t = F.col(_TEXT_COL)
     base = df.withColumn("content_md5", md5_hex(t))
     mins = (
         df.select(
-            F.col(id_col).alias("_fp_id"),
-            F.explode(shingles(tokens(t), k)).alias("_sh"),
+            F.col(_ID_COL).alias("_fp_id"),
+            F.explode(shingles(tokens(t), 3)).alias("_sh"),
         )
         .groupBy("_fp_id")
         .agg(F.min(md5_hex(F.col("_sh"))).alias("_min_md5"))
     )
     return (
-        base.join(mins, F.col(id_col) == F.col("_fp_id"), "left")
+        base.join(mins, F.col(_ID_COL) == F.col("_fp_id"), "left")
         .withColumn(
             "min_shingle_md5",
             F.coalesce(F.col("_min_md5"), F.col("content_md5")),
@@ -239,12 +209,7 @@ def fingerprint(
     )
 
 
-def tfidf_top_terms(
-    df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
-    k: int = 3,
-) -> DataFrame:
+def tfidf_top_terms(df: DataFrame, k: int = 3) -> DataFrame:
     """Top-``k`` TF-IDF terms per document as ``(doc_id, term, rank,
     tfidf)`` — the classic corpus-weighting step of a training-data
     pipeline (keyword extraction, quality filtering, near-dup features).
@@ -266,8 +231,8 @@ def tfidf_top_terms(
     unequal ones differ by far more than the 1-ULP libm drift.
     """
     toks = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.explode(tokens(F.col(text_col))).alias("term"),
+        F.col(_ID_COL).alias("doc_id"),
+        F.explode(tokens(F.col(_TEXT_COL))).alias("term"),
     )
     # tf feeds BOTH the document-frequency aggregate and the scoring
     # join — persist it so the corpus-wide explode+aggregate (the
@@ -301,8 +266,6 @@ def tfidf_top_terms(
 
 def chunk_documents(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     chunk_tokens: int = 32,
     stride: int = 16,
 ) -> DataFrame:
@@ -321,7 +284,7 @@ def chunk_documents(
     UDF: chunking 100 TB scales with input splits, and the downstream
     (doc_id, chunk_start) key is deterministic for exactly-once
     re-runs."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col(_TEXT_COL))
     n = F.size(toks)
     # last window index: ceil((n - chunk) / stride) in integer math,
     # clamped at 0 — its window [1 + stride*k, +chunk) always reaches n
@@ -343,7 +306,7 @@ def chunk_documents(
             ),
         )
     )
-    return df.select(F.col(id_col).alias("doc_id"), chunk.alias("ch")).select(
+    return df.select(F.col(_ID_COL).alias("doc_id"), chunk.alias("ch")).select(
         "doc_id",
         F.col("ch.chunk_start").alias("chunk_start"),
         F.size("ch.ctoks").alias("n_chunk_tokens"),
@@ -353,8 +316,6 @@ def chunk_documents(
 
 def pack_sequences(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     seq_tokens: int = 64,
     n_streams: int = 8,
 ) -> DataFrame:
@@ -379,15 +340,15 @@ def pack_sequences(
     explode whose fan-out is ⌈doc_tokens/L⌉.  No Python, no second
     shuffle; output is keyed (stream, seq_id) so shard writes are
     ``repartition + partitionBy`` file-pruned reads."""
-    n_tok = F.size(tokens(F.col(text_col)))
+    n_tok = F.size(tokens(F.col(_TEXT_COL)))
     stream = F.pmod(
-        F.conv(F.substring(md5_hex(F.col(text_col)), 1, 8), 16, 10).cast(
+        F.conv(F.substring(md5_hex(F.col(_TEXT_COL)), 1, 8), 16, 10).cast(
             "long"
         ),
         F.lit(n_streams),
     ).cast("int")
     base = df.select(
-        F.col(id_col).alias("doc_id"),
+        F.col(_ID_COL).alias("doc_id"),
         stream.alias("stream"),
         n_tok.alias("n_tokens"),
     ).where(F.col("n_tokens") > 0)
@@ -432,8 +393,6 @@ def pack_sequences(
 def interleave_mix(
     df: DataFrame,
     weights: dict[str, int],
-    group_col: str = "lang",
-    id_col: str = "doc_id",
     n_streams: int = 8,
 ) -> DataFrame:
     """Deterministic proportional data-mix interleaving — the sampling
@@ -445,8 +404,9 @@ def interleave_mix(
     Each group's k-th document gets virtual position
     ``(2k−1) · (W/w_g)`` (W = lcm of weights — INTEGER positions, so
     cross-engine float ties cannot exist); sorting by position yields
-    the proportional interleave.  A group's documents stay in
-    ``id_col`` order; unlisted groups default to weight 1.
+    the proportional interleave.  Groups are ``lang`` values; a group's
+    documents stay in ``doc_id`` order; unlisted groups default to
+    weight 1.
 
     Scale shape: the schedule is computed independently per
     ``doc_id % n_streams`` stream, so the only windows are
@@ -459,13 +419,13 @@ def interleave_mix(
     W = math.lcm(*weights.values()) if weights else 1
     stride = F.lit(W)  # default weight 1 → stride W
     for g, wgt in weights.items():
-        stride = F.when(F.col(group_col) == g, F.lit(W // wgt)).otherwise(
+        stride = F.when(F.col("lang") == g, F.lit(W // wgt)).otherwise(
             stride
         )
-    stream = F.pmod(F.col(id_col), F.lit(n_streams)).cast("int")
+    stream = F.pmod(F.col(_ID_COL), F.lit(n_streams)).cast("int")
     base = df.select(
-        F.col(id_col).alias("doc_id"),
-        F.col(group_col).alias("grp"),
+        F.col(_ID_COL).alias("doc_id"),
+        F.col("lang").alias("grp"),
         stream.alias("stream"),
         stride.alias("_stride"),
     )
@@ -480,15 +440,13 @@ def interleave_mix(
     return ranked.select(
         "stream",
         F.row_number().over(w_mix).cast("long").alias("mix_rank"),
-        F.col("grp").alias(group_col),
+        F.col("grp").alias("lang"),
         "doc_id",
     )
 
 
 def shard_assignments(
     df: DataFrame,
-    text_col: str = "text",
-    id_col: str = "doc_id",
     n_shards: int = 64,
 ) -> DataFrame:
     """Deterministic training-shard assignment: shard = first 8 hex
@@ -503,8 +461,8 @@ def shard_assignments(
     re-builds possible.  Writing the shards is then
     ``df.repartition(n_shards, 'shard').write.partitionBy('shard')``."""
     return df.select(
-        F.col(id_col).alias("doc_id"),
-        shard_expr(F.col(text_col), n_shards).alias("shard"),
+        F.col(_ID_COL).alias("doc_id"),
+        shard_expr(F.col(_TEXT_COL), n_shards).alias("shard"),
     )
 
 
@@ -522,10 +480,6 @@ def bm25_topk(
     docs: DataFrame,
     terms: Sequence[str],
     k: int = 20,
-    k1: float = 1.2,
-    b: float = 0.75,
-    id_col: str = "doc_id",
-    text_col: str = "text",
 ) -> DataFrame:
     """Okapi BM25 retrieval scoring for a fixed query-term set — the
     lexical ranking half of a retrieval pipeline (the dense half is
@@ -533,6 +487,7 @@ def bm25_topk(
     training-data search index serves.
 
     score(d) = Σ_t idf(t) · tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl)),
+    with the customary k1 = 1.2, b = 0.75 (``_BM25_K1``, ``_BM25_B``),
     idf(t) = ln(1 + (N − df + 0.5)/(df + 0.5))   (Robertson/Sparck Jones)
 
     Scale shape — the part that matters at 100 TB:
@@ -550,19 +505,19 @@ def bm25_topk(
 
     Ranking determinism: the score is rounded to 4 decimals BEFORE
     ordering (idf is transcendental — libm vs JVM ``ln`` may differ in
-    the last bit) with ``id_col`` as tiebreak, so the selected top-k
+    the last bit) with ``doc_id`` as tiebreak, so the selected top-k
     set is engine-portable."""
-    toks = tokens(F.col(text_col))
-    base = docs.select(F.col(id_col), toks.alias("_toks")).select(
-        id_col, "_toks", F.size("_toks").alias("dl")
+    toks = tokens(F.col(_TEXT_COL))
+    base = docs.select(F.col(_ID_COL), toks.alias("_toks")).select(
+        _ID_COL, "_toks", F.size("_toks").alias("dl")
     )
     stats = base.agg(
         F.count(F.lit(1)).alias("n_docs"), F.avg("dl").alias("avgdl")
     )
     tf = (
-        base.select(id_col, "dl", F.explode("_toks").alias("term"))
+        base.select(_ID_COL, "dl", F.explode("_toks").alias("term"))
         .where(F.col("term").isin(*terms))
-        .groupBy(id_col, "term")
+        .groupBy(_ID_COL, "term")
         .agg(F.count(F.lit(1)).alias("tf"), F.max("dl").alias("dl"))
     )
     # tf feeds BOTH the df aggregate and the score join — persist the
@@ -575,6 +530,7 @@ def bm25_topk(
         F.lit(1.0)
         + (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
     )
+    k1, b = _BM25_K1, _BM25_B
     denom = F.col("tf") + F.lit(k1) * (
         F.lit(1.0 - b) + F.lit(b) * F.col("dl") / F.col("avgdl")
     )
@@ -582,23 +538,18 @@ def bm25_topk(
         tf.join(F.broadcast(dfreq), "term")
         .crossJoin(F.broadcast(stats))
         .select(
-            id_col,
+            _ID_COL,
             (idf * F.col("tf") * F.lit(k1 + 1.0) / denom).alias("_s"),
         )
-        .groupBy(id_col)
+        .groupBy(_ID_COL)
         .agg(F.round(F.sum("_s"), 4).alias("bm25"))
     )
-    top = scored.orderBy(F.desc("bm25"), id_col).limit(k)
-    w = Window.orderBy(F.desc("bm25"), id_col)
+    top = scored.orderBy(F.desc("bm25"), _ID_COL).limit(k)
+    w = Window.orderBy(F.desc("bm25"), _ID_COL)
     return top.withColumn("rank", F.row_number().over(w).cast("int"))
 
 
-def ngram_counts(
-    docs: DataFrame,
-    n: int = 2,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_counts(docs: DataFrame, n: int = 2) -> DataFrame:
     """Corpus n-gram census: one row per distinct n-gram with its
     occurrence count and document reach — the table behind contamination
     checks, Kneser-Ney style LM estimation, and boilerplate mining.
@@ -609,7 +560,7 @@ def ngram_counts(
     shuffle is the final (ngram) rollup, which partial-aggregates
     map-side — at 100 TB the exchange carries one row per distinct
     n-gram per task, not one per occurrence."""
-    toks = tokens(F.col(text_col))
+    toks = tokens(F.col(_TEXT_COL))
     grams = F.when(
         F.size("_toks") >= n,
         F.transform(
@@ -620,11 +571,11 @@ def ngram_counts(
         ),
     ).otherwise(F.array().cast("array<string>"))
     return (
-        docs.select(F.col(id_col), toks.alias("_toks"))
-        .select(id_col, F.explode(grams).alias("ngram"))
+        docs.select(F.col(_ID_COL), toks.alias("_toks"))
+        .select(_ID_COL, F.explode(grams).alias("ngram"))
         .groupBy("ngram")
         .agg(
             F.count(F.lit(1)).alias("n_occurrences"),
-            F.countDistinct(id_col).alias("n_docs"),
+            F.countDistinct(_ID_COL).alias("n_docs"),
         )
     )

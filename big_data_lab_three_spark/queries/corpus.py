@@ -344,15 +344,15 @@ _CELL_CAP = 16 * _CELL_TARGET
 _CELL_MAX = 4096  # hard ceiling on centroid count (bounds n×k assign)
 
 
-def _n_cells(n_vecs: int, floor: int = 8) -> int:
+def _n_cells(n_vecs: int) -> int:
     """Centroid count for ``n_vecs`` corpus vectors: enough cells that
     the EXPECTED cell holds ~``_CELL_TARGET`` vectors, never fewer
-    than ``floor``, never more than ``_CELL_MAX`` (see the cost
+    than 8, never more than ``_CELL_MAX`` (see the cost
     accounting above).  Pure integer function — both engines compute
     it from the same corpus count (see ``_DUCK_N_CELLS``)."""
     import math
 
-    return min(_CELL_MAX, max(floor, math.ceil(n_vecs / _CELL_TARGET)))
+    return min(_CELL_MAX, max(8, math.ceil(n_vecs / _CELL_TARGET)))
 
 
 _DUCK_N_CELLS = (
@@ -5613,13 +5613,11 @@ _DHASH_BAND_BITS = 14
 _DHASH_BANDS = 4  # 4 x 14 = 56 dhash bits
 
 
-def _png_gen_partitions(
-    spark: SparkSession, sf_dir: str, target_bytes: int = 4 << 20
-) -> int:
+def _png_gen_partitions(spark: SparkSession, sf_dir: str) -> int:
     """Partition count for the PNG-generation ``mapInPandas`` stage,
     derived from the INPUT SIZE (guide §2: scale-adaptive, not a
     constant tuned for either local mode or the cluster): one
-    partition per ``target_bytes`` of the documents table, floor 1.
+    partition per 4 MiB of the documents table, floor 1.
 
     Why: ``spark.sql.files.minPartitionNum`` defaults to the cluster
     parallelism, so a KB-sized local scan splits into 32 micro-tasks
@@ -5645,7 +5643,7 @@ def _png_gen_partitions(
             docs, err.java_exception.getClass().getName(),
         )
         return 16
-    return max(1, int(size) // target_bytes)
+    return max(1, int(size) // (4 << 20))
 
 
 def _md5_png_media(ids: DataFrame) -> DataFrame:

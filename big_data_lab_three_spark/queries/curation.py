@@ -453,15 +453,6 @@ def admitted_table(spark: SparkSession, root: str) -> DataFrame:
     return spark.read.parquet(os.path.join(root, "admitted"))
 
 
-def read_or_empty(spark: SparkSession, path: str, ddl: str) -> DataFrame:
-    """Read a parquet sink that may not exist yet (first batch)."""
-    import os
-
-    if os.path.isdir(path):
-        return spark.read.parquet(path)
-    return spark.createDataFrame([], ddl)
-
-
 def batch_partition(path: str, batch_id: int) -> str:
     """The per-batch partition directory of a batch-keyed sink."""
     import os

@@ -454,9 +454,11 @@ def admission_et_base(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def run_admission_stream_et(
-    spark: SparkSession, schema, root: str, delay: int = 5000
-) -> None:
+# Watermark delay of the event-time admission stream, in event-time units.
+_ET_DELAY = 5000
+
+
+def run_admission_stream_et(spark: SparkSession, schema, root: str) -> None:
     """Drain everything staged under ``root/src`` through the
     WATERMARKED foreachBatch admission pipeline (AvailableNow),
     resuming from ``root/ckpt`` — and from the PERSISTED watermark
@@ -465,7 +467,7 @@ def run_admission_stream_et(
     Watermark semantics (the standard Structured Streaming contract,
     tracked explicitly so the state is durable and the policy
     auditable): the watermark in effect for batch ``k`` is
-    ``max(event time over batches < k) − delay``; a document older
+    ``max(event time over batches < k) − _ET_DELAY``; a document older
     than that is LATE — dropped to the ``root/late`` sink, never
     deduped, never indexed.  On-time documents flow through the same
     digest/band-key admission as ``streaming_minhash_admission``.
@@ -486,7 +488,7 @@ def run_admission_stream_et(
     )
 
     def admit(batch_df: DataFrame, batch_id: int) -> None:
-        admit_batch_et(spark, batch_df, batch_id, root, delay)
+        admit_batch_et(spark, batch_df, batch_id, root)
 
     run_foreachbatch_stream(spark, schema, root, admit)
 
@@ -496,7 +498,6 @@ def admit_batch_et(
     batch_df: DataFrame,
     batch_id: int,
     root: str,
-    delay: int = 5000,
 ) -> None:
     """One event-time admission micro-batch (module-level so the
     kill-mid-batch/replay test can redeliver a batch directly, exactly
@@ -528,7 +529,7 @@ def admit_batch_et(
     if wm_row is None:
         ontime = batch_df  # no prior batch → no watermark → no lates
     else:
-        wm = wm_row - delay
+        wm = wm_row - _ET_DELAY
         late = batch_df.where(F.col("et") < F.lit(wm))
         ontime = batch_df.where(~(F.col("et") < F.lit(wm)))
         late.select("id", "shard").write.mode("overwrite").parquet(

@@ -156,9 +156,9 @@ ORDER BY lang, predicted_lang
 )
 def lang_id_q(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID (marker-stopword argmax, deterministic
-    tie-break) cross-tabulated against the labeled ``lang`` column.
-    Uses the explode+aggregate table form (codegen path); the
-    expression form ``predict_lang`` has identical semantics."""
+    tie-break) cross-tabulated against the labeled ``lang`` column,
+    through :func:`~big_data_lab_three_spark.operators.text.lang_id_table`'s
+    explode+aggregate form (codegen path)."""
     d = table(spark, sf_dir, "documents")
     return (
         lang_id_table(d)

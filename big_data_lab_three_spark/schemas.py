@@ -6,43 +6,17 @@ inferred dtypes, column names arrive with leading spaces and are stripped
 frame to a saved 47-column feature contract with null fill
 (``src/predict.py:138`` — ``reindex(columns=..., fill_value=np.nan)``).
 
-Spark-first mapping:
-
-- an explicit ``StructType`` for the canonical flow table (schema-on-write
-  for production paths; inference only in exploratory reads),
-- ``conform(df, contract)`` replacing pandas ``reindex``: project present
-  columns, materialize missing ones as typed NULL literals.  This is a pure
-  ``Project`` node — Catalyst prunes the scan to only the needed columns, so
-  conforming a 1000-column parquet to a 47-column contract reads 47 columns.
+Spark-first mapping: ``conform(df, contract)`` replaces pandas
+``reindex``: project present columns, materialize missing ones as DOUBLE
+NULL literals.  This is a pure ``Project`` node — Catalyst prunes the scan
+to only the needed columns, so conforming a 1000-column parquet to a
+47-column contract reads 47 columns.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
-
-# The reference's trained feature contract — exactly 47 columns, recovered
-# from ``experiments/preprocessor.sav`` (``feature_columns`` key); see
-# SURVEY.md §1.3.
-FEATURE_CONTRACT: list[str] = [
-    "Source Port", "Destination Port", "Protocol", "Flow Duration",
-    "Total Backward Packets", "Total Length of Fwd Packets",
-    "Total Length of Bwd Packets", "Fwd Packet Length Max",
-    "Fwd Packet Length Mean", "Bwd Packet Length Max",
-    "Bwd Packet Length Min", "Bwd Packet Length Mean",
-    "Bwd Packet Length Std", "Flow Bytes/s", "Flow Packets/s",
-    "Flow IAT Std", "Flow IAT Max", "Flow IAT Min", "Fwd IAT Std",
-    "Fwd IAT Max", "Fwd Header Length", "Bwd Header Length",
-    "Fwd Packets/s", "Bwd Packets/s", "Min Packet Length",
-    "Max Packet Length", "Packet Length Mean", "Packet Length Std",
-    "Packet Length Variance", "PSH Flag Count", "ACK Flag Count",
-    "URG Flag Count", "Average Packet Size", "Avg Fwd Segment Size",
-    "Avg Bwd Segment Size", "Fwd Header Length.1", "Subflow Fwd Packets",
-    "Subflow Fwd Bytes", "Subflow Bwd Packets", "Subflow Bwd Bytes",
-    "Init_Win_bytes_forward", "Init_Win_bytes_backward", "act_data_pkt_fwd",
-    "min_seg_size_forward", "Idle Mean", "Idle Max", "Idle Min",
-]
 
 # Identity columns the reference drops before modeling
 # (``src/preprocess.py:65``): string keys + the unparsed timestamp + label.
@@ -51,25 +25,8 @@ IDENTITY_COLUMNS: list[str] = [
 ]
 
 
-def flow_schema(feature_cols: list[str] | None = None) -> T.StructType:
-    """Canonical flow-table StructType: 5 string identity columns + double
-    features (pandas widens ints to float64 because of NaNs — keep
-    DoubleType so aggregates stay bit-compatible with the reference,
-    SURVEY.md §1.2)."""
-    fields = [T.StructField(c, T.StringType(), True) for c in IDENTITY_COLUMNS]
-    fields += [
-        T.StructField(c, T.DoubleType(), True)
-        for c in (feature_cols or FEATURE_CONTRACT)
-    ]
-    return T.StructType(fields)
-
-
-def conform(
-    df: DataFrame,
-    contract: list[str],
-    fill_type: T.DataType | str = "double",
-) -> DataFrame:
-    """Project ``df`` onto ``contract`` columns; absent columns become typed
+def conform(df: DataFrame, contract: list[str]) -> DataFrame:
+    """Project ``df`` onto ``contract`` columns; absent columns become DOUBLE
     NULLs (Spark analogue of pandas ``reindex(columns=..., fill_value=nan)``,
     reference ``src/predict.py:138``).
 
@@ -79,7 +36,7 @@ def conform(
     return df.select(
         *[
             F.col(c).alias(c) if c in present
-            else F.lit(None).cast(fill_type).alias(c)
+            else F.lit(None).cast("double").alias(c)
             for c in contract
         ]
     )

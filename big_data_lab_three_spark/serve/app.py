@@ -191,7 +191,7 @@ class Service:
             label = "__label"
             table = test_df.select(
                 *[F.col(c).cast("double").alias(c) for c in self.feature_cols],
-                F.col(self.mm.label_col).cast("double").alias(label),
+                F.col("label").cast("double").alias(label),
             ).toArrow()
             self._held_out_split = (
                 test_df,

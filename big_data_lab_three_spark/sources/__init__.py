@@ -1,9 +1,7 @@
 from big_data_lab_three_spark.sources.readers import (  # noqa: F401
     TABLE_NAMES,
     events,
-    load_tables,
     read_csv,
-    read_flow_csv,
     read_json_records,
     register_views,
     spread,

@@ -2,10 +2,9 @@
 record source (S3).
 
 Scale notes: parquet reads get vectorized scan + predicate pushdown +
-column pruning for free; the CSV path takes an explicit schema so no
-inference pass is needed (the reference's ``low_memory=False`` exists only
-to work around pandas chunked type-guessing — Spark with a schema has no
-such pass at all).
+column pruning for free; the CSV path infers its schema in one extra job
+(the flow CSVs arrive without a declared schema, like the reference's
+``low_memory=False`` pandas read).
 """
 
 from __future__ import annotations
@@ -16,8 +15,6 @@ from typing import Callable, TypeVar
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-
-from big_data_lab_three_spark.schemas import strip_column_names
 
 # The driver's TPC-H-ish star schema + events/documents/embeddings
 # (TESTDATA.md).
@@ -36,7 +33,7 @@ TABLE_NAMES: tuple[str, ...] = (
 _CPU_BOUND_TABLES = frozenset({"documents"})
 
 
-def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
+def spread(df: DataFrame) -> DataFrame:
     """Round-robin repartition a NARROW scan before CPU-heavy per-row
     work — gated, so it is a no-op whenever the scan already has enough
     splits.
@@ -49,8 +46,7 @@ def spread(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
     row groups, `getNumPartitions() >= cores`, and this returns the
     input unchanged — the extra exchange exists only in the degenerate
     small-file case."""
-    sc = df.sparkSession.sparkContext
-    target = min_partitions or sc.defaultParallelism
+    target = df.sparkSession.sparkContext.defaultParallelism
     if df.rdd.getNumPartitions() < target:
         return df.repartition(target)
     return df
@@ -209,42 +205,19 @@ def events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def load_tables(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> dict[str, DataFrame]:
-    """All test tables keyed by name.  Scans are lazy; unused tables cost
-    nothing (their plan nodes are never executed)."""
-    return {name: table(spark, sf_dir, name) for name in names}
-
-
-def read_csv(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | None = None,
-    encoding: str = "iso-8859-1",
-    header: bool = True,
-) -> DataFrame:
-    """CSV scan, S1 (reference ``src/preprocess.py:103``:
-    ``pd.read_csv(path, encoding='latin1', low_memory=False)`` —
-    pandas' ``latin1`` is the charset Spark spells ``iso-8859-1``).
-
-    With ``schema`` given this is a single streaming pass; without it Spark
-    runs one inference job first (exploratory paths only).
+def read_csv(spark: SparkSession, path: str) -> DataFrame:
+    """CSV scan with a header row and an inferred schema, S1 (reference
+    ``src/preprocess.py:103``: ``pd.read_csv(path, encoding='latin1',
+    low_memory=False)`` — pandas' ``latin1`` is the charset Spark spells
+    ``iso-8859-1``).  Inference runs one Spark job before the scan.
     """
-    reader = (
-        spark.read.option("header", header)
-        .option("encoding", encoding)
+    return (
+        spark.read.option("header", True)
+        .option("encoding", "iso-8859-1")
         .option("mode", "PERMISSIVE")
+        .option("inferSchema", True)
+        .csv(path)
     )
-    if schema is not None:
-        return reader.schema(schema).csv(path)
-    return reader.option("inferSchema", True).csv(path)
-
-
-def read_flow_csv(spark: SparkSession, path: str, schema=None) -> DataFrame:
-    """CSV scan + header-whitespace normalization (S1 + P1) — the
-    reference's canonical load path."""
-    return strip_column_names(read_csv(spark, path, schema=schema))
 
 
 def read_json_records(
@@ -264,14 +237,12 @@ def read_json_records(
     )
 
 
-def register_views(
-    spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE_NAMES
-) -> None:
+def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every test table as a temp view so callers can use plain
     ``spark.sql`` — the engine's SQL front door.  Views are lazy scans;
     Catalyst sees straight through them (pushdown/pruning identical to
     the DataFrame API), so the SQL surface costs nothing."""
-    for name in names:
+    for name in TABLE_NAMES:
         table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 

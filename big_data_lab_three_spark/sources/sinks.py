@@ -21,34 +21,15 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def write_csv(
-    df: DataFrame,
-    path: str,
-    with_row_id: bool = True,
-    single_file: bool = False,
-    mode: str = "overwrite",
-) -> None:
+def write_csv(df: DataFrame, path: str) -> None:
     """CSV sink, S2 (reference ``df.to_csv(path, index=True)``,
-    ``src/preprocess.py:106-119``): optional explicit row-id column
-    standing in for the pandas index.
-
-    ``single_file=True`` coalesces to one partition for
-    pandas-compatible single-file output — correct only for small
-    results; the default keeps one file per partition (the scalable
-    layout).
+    ``src/preprocess.py:106-119``): a leading ``row_id`` column
+    (``monotonically_increasing_id``: unique, not dense) stands in for
+    the pandas index.  One file per partition — the scalable layout.
     """
-    out = df
-    if with_row_id:
-        out = out.withColumn("row_id", F.monotonically_increasing_id())
-        out = out.select("row_id", *df.columns)
-    if single_file:
-        out = out.coalesce(1)
-    out.write.mode(mode).option("header", True).csv(path)
-
-
-def write_json(df: DataFrame, path: str, mode: str = "overwrite") -> None:
-    """JSON lines sink (distributed variant of S6)."""
-    df.write.mode(mode).json(path)
+    out = df.withColumn("row_id", F.monotonically_increasing_id())
+    out = out.select("row_id", *df.columns)
+    out.write.mode("overwrite").option("header", True).csv(path)
 
 
 def write_predictions_fallback_json(
@@ -94,13 +75,10 @@ def redis_client(
 
 
 def write_predictions_redis(
-    df: DataFrame,
-    prediction_col: str = "prediction",
-    key: str = "predictions",
-    fallback_path: str = "predictions_fallback.json",
-    client_factory=redis_client,
+    df: DataFrame, fallback_path: str = "predictions_fallback.json"
 ) -> dict:
-    """S4 — Redis list sink with S6 fallback.
+    """S4 — Redis list sink with S6 fallback: ``df``'s ``prediction``
+    column rewrites the ``predictions`` list.
 
     Driver: DELETE the key once (idempotent rewrite).  Executors:
     ``foreachPartition`` RPUSH via a pipeline (one round-trip per
@@ -110,16 +88,17 @@ def write_predictions_redis(
 
     Returns a status dict ``{"sink": "redis"|"json", "count": n}``.
     """
-    preds = df.select(F.col(prediction_col).cast("int").alias("p"))
+    preds = df.select(F.col("prediction").cast("int").alias("p"))
+    key = "predictions"
 
-    conn = client_factory()
+    conn = redis_client()
     if conn is not None:
         try:
             conn.ping()
             conn.delete(key)
 
             def push(rows: Iterator) -> None:
-                c = client_factory()
+                c = redis_client()
                 pipe = c.pipeline()
                 for r in rows:
                     pipe.rpush(key, int(r["p"]))
@@ -141,7 +120,6 @@ def write_bucketed_table(
     bucket_col: str,
     num_buckets: int = 8,
     path: str | None = None,
-    mode: str = "overwrite",
 ) -> None:
     """Persist ``df`` as a bucketed (and bucket-sorted) parquet table.
 
@@ -155,7 +133,7 @@ def write_bucketed_table(
     at ingest instead of on every query.  ``sortBy`` additionally lets
     SortMergeJoin skip its per-task sort."""
     w = (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .bucketBy(num_buckets, bucket_col)
         .sortBy(bucket_col)
         .format("parquet")
@@ -169,7 +147,6 @@ def write_partitioned(
     df: DataFrame,
     path: str,
     partition_cols: Sequence[str],
-    mode: str = "overwrite",
 ) -> None:
     """Hive-style partitioned parquet layout (`.../col=value/part-*.parquet`).
 
@@ -181,22 +158,20 @@ def write_partitioned(
     Choose low-cardinality columns (date, region, event_type); never
     partition by a high-cardinality key — millions of tiny files kill
     the listing."""
-    df.write.mode(mode).partitionBy(*partition_cols).parquet(path)
+    df.write.mode("overwrite").partitionBy(*partition_cols).parquet(path)
 
 
-def zorder_value(
-    a, b, a_min, a_max, b_min, b_max, bits: int = 16
-):
+def zorder_value(a, b, a_min, a_max, b_min, b_max):
     """Z-order (Morton) key of two numeric columns as a single LONG:
-    each dimension min-max normalized to ``bits`` levels, then
-    bit-interleaved.  All codegen'd column arithmetic (shift/or over
-    2·bits terms) — no UDF.
+    each dimension min-max normalized to 16 bits, then bit-interleaved.
+    All codegen'd column arithmetic (shift/or over 32 terms) — no UDF.
 
     ``a_min``/``a_max``/... are COLUMNS (typically from a broadcast
     1-row min/max aggregate), so the normalization is data-driven
     without a driver round-trip."""
     from pyspark.sql import functions as F
 
+    bits = 16
     levels = (1 << bits) - 1
 
     def quant(x, lo, hi):
@@ -222,8 +197,6 @@ def write_zordered(
     path: str,
     cols: tuple[str, str],
     num_files: int = 8,
-    bits: int = 16,
-    mode: str = "overwrite",
 ) -> None:
     """Z-ORDERED parquet layout: range-partition and sort by the Morton
     interleave of two filter columns, so every file's min/max footer
@@ -256,14 +229,13 @@ def write_zordered(
             F.col("_amax"),
             F.col("_bmin"),
             F.col("_bmax"),
-            bits=bits,
         ),
     )
     (
         z.repartitionByRange(num_files, "_z")
         .sortWithinPartitions("_z")
         .drop("_z", "_amin", "_amax", "_bmin", "_bmax")
-        .write.mode(mode)
+        .write.mode("overwrite")
         .parquet(path)
     )
 

@@ -29,7 +29,6 @@ def events_stream(
     spark: SparkSession,
     directory: str,
     probe_path: str | None = None,
-    schema: T.StructType | None = None,
     **reader_options: str,
 ) -> DataFrame:
     """A parquet file-source stream of events honoring the engine-wide
@@ -43,15 +42,10 @@ def events_stream(
     job once per session and file version.  Hardcoding either
     encoding's schema makes the other arrive as raw longs at the wrong
     unit — silently wrong windows; the probe + shared
-    ``normalize_events_ts`` make both paths agree by construction.
-
-    A deployment starting the stream BEFORE any producer file exists
-    (nothing to probe) passes ``schema`` explicitly — the contract then
-    holds for whichever encoding the declared ``ts`` field matches."""
+    ``normalize_events_ts`` make both paths agree by construction."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     spark.conf.set("spark.sql.session.timeZone", "UTC")
-    if schema is None:
-        schema = probe_schema(spark, probe_path or directory)
+    schema = probe_schema(spark, probe_path or directory)
     reader = spark.readStream.schema(schema)
     for key, value in reader_options.items():
         reader = reader.option(key, value)
@@ -391,19 +385,13 @@ def dedup_within_watermark(
     )
 
 
-def interval_join_attribution(
-    stream: DataFrame,
-    trigger_type: str = "click",
-    outcome_type: str = "purchase",
-    horizon: str = "1 hour",
-    watermark: str = "2 hours",
-) -> DataFrame:
+def interval_join_attribution(stream: DataFrame) -> DataFrame:
     """True STREAM-STREAM join (not stream-static): attribute each
-    ``outcome_type`` event to every same-user ``trigger_type`` event in
-    the preceding ``horizon`` — the classic click→purchase attribution
-    shape, and the join Structured Streaming buffers BOTH sides of.
+    ``purchase`` event to every same-user ``click`` event in the
+    preceding hour — the classic click→purchase attribution shape, and
+    the join Structured Streaming buffers BOTH sides of.
 
-    Both branches carry a watermark and the join condition bounds
+    Both branches carry a 2-hour watermark and the join condition bounds
     event-time distance, which is exactly what lets the engine evict a
     buffered row once the other side's watermark passes its horizon —
     state is watermark-window-sized, never stream-sized.  At 100 TB/day
@@ -413,29 +401,29 @@ def interval_join_attribution(
     Inner join + ``AvailableNow`` drain emits the complete pair set, so
     the batch self-join is the exact oracle."""
     trig = (
-        stream.where(F.col("event_type") == trigger_type)
+        stream.where(F.col("event_type") == "click")
         .select(
             F.col("user_id").alias("t_user"),
             F.col("ts_utc").alias("trigger_ts"),
         )
-        .withWatermark("trigger_ts", watermark)
+        .withWatermark("trigger_ts", "2 hours")
     )
     out = (
-        stream.where(F.col("event_type") == outcome_type)
+        stream.where(F.col("event_type") == "purchase")
         .select(
             "user_id",
             F.col("ts_utc").alias("outcome_ts"),
             F.col("value").alias("outcome_value"),
         )
-        .withWatermark("outcome_ts", watermark)
+        .withWatermark("outcome_ts", "2 hours")
     )
     joined = out.join(
         trig,
         F.expr(
-            f"""
+            """
             user_id = t_user
             AND outcome_ts >= trigger_ts
-            AND outcome_ts <= trigger_ts + interval {horizon}
+            AND outcome_ts <= trigger_ts + interval 1 hour
             """
         ),
     )
@@ -447,12 +435,10 @@ def interval_join_attribution(
     )
 
 
-def enrich_with_dimension(
-    stream: DataFrame, dim: DataFrame, key: str = "user_id"
-) -> DataFrame:
-    """Stream-static join: each micro-batch of the stream joins the
-    static dimension snapshot.  The static side is broadcast — per
+def enrich_with_dimension(stream: DataFrame, dim: DataFrame) -> DataFrame:
+    """Stream-static join on ``user_id``: each micro-batch of the stream
+    joins the static dimension snapshot.  The static side is broadcast — per
     batch Spark re-plans the join, so a dimension refresh (re-read of
     the table) is picked up without restarting the query; the stream
     side never shuffles for the join itself."""
-    return stream.join(F.broadcast(dim), key)
+    return stream.join(F.broadcast(dim), "user_id")
