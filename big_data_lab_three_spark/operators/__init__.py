@@ -11,7 +11,6 @@ from big_data_lab_three_spark.operators.aggregates import (  # noqa: F401
     confusion_matrix,
     distinct_profile,
     null_profile,
-    shape,
     value_counts,
     zscore,
 )

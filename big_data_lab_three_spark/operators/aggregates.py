@@ -29,11 +29,6 @@ def _numeric_cols(df: DataFrame, cols: Sequence[str] | None) -> list[str]:
     ]
 
 
-def shape(df: DataFrame) -> tuple[int, int]:
-    """A1 — (rows, cols) like ``df.shape`` (reference nb cell 3)."""
-    return df.count(), len(df.columns)
-
-
 def null_profile(df: DataFrame, cols: Sequence[str] | None = None) -> DataFrame:
     """A3+A8 — per-column null count and proportion (reference nb cells
     17/22/37: ``df.isna().sum()``, ``isnull().sum()/len``) in ONE pass.

@@ -4,8 +4,10 @@
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
+import shutil
 import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
@@ -22,16 +24,22 @@ from big_data_lab_three_spark.sources import read_json_records, table
 from big_data_lab_three_spark.sources.sinks import write_csv
 
 
+_REMOVED_AT_EXIT: set[str] = set()
+
+
 def _scratch(name: str) -> str:
     """Per-process STABLE scratch path for round-trip sinks.  A fresh
     ``mkdtemp`` per invocation leaks one table slice per run — bench
     repeats, verify gates, and A/B rounds each compound it.  A fixed
     per-process path + ``mode=overwrite`` bounds the footprint to one
-    copy per sink per process; the PID suffix keeps concurrent
-    bench/verify processes from clobbering each other's files
-    mid-read."""
+    copy per sink per process, and the directory is removed when the
+    process exits; the PID suffix keeps concurrent bench/verify
+    processes from clobbering each other's files mid-read."""
     d = os.path.join(tempfile.gettempdir(), f"spark_graft_io_{os.getpid()}")
     os.makedirs(d, exist_ok=True)
+    if d not in _REMOVED_AT_EXIT:
+        _REMOVED_AT_EXIT.add(d)
+        atexit.register(shutil.rmtree, d, ignore_errors=True)
     return os.path.join(d, name)
 
 

@@ -6,22 +6,18 @@ Differences from the reference, by design (SURVEY.md §4.3):
 - ONE SparkSession and model registry for the process — the reference
   constructs a ``MultiModel``/``Predictor`` per HTTP request
   (``src/app.py:54``), re-reading and re-fitting everything.
-- ``upload`` mode actually works: CSV bytes → pandas → conform to the
-  trained contract → score (the reference's endpoint 500s because
-  ``predict_upload`` does not exist — ``src/app.py:97,120-124``).
-  ``d_tree`` and ``log_reg`` uploads score driver-local: the fitted
-  pipeline is compiled once into a NumPy scorer (``ml/local.py``) with
-  the same predictions as ``transform``, so a request never crosses
-  into the JVM.  ``rand_forest`` (its leaves' class statistics are not
-  readable in one call) and ``gnb`` keep the Spark transform.
-- ``smoke`` for ``d_tree`` and ``log_reg`` is driver-local too: the
-  first smoke collects the held-out split once through Arrow (its
+- ``upload`` mode actually works: CSV bytes → pandas → score (the
+  reference's endpoint 500s because ``predict_upload`` does not exist —
+  ``src/app.py:97,120-124``).
+- Every model scores driver-local: on first use the fitted pipeline is
+  compiled once into a NumPy scorer (``ml/local.py``) with the same
+  predictions as ``transform``, so a request never crosses into the
+  JVM.  ``smoke`` collects the held-out split once through Arrow (its
   feature columns and label as doubles, so rows × 5 doubles of driver
-  memory) and keeps it while ``mm.test_df`` is the same frame; each
-  smoke then runs the compiled scorer over it and takes the accuracy
-  in NumPy (``ml.local.accuracy``, the figure Spark's ``score`` gives).
-  ``rand_forest`` and ``gnb`` smoke still run ``score`` in Spark.
-- Upload input is checked before either path: a header-only CSV scores
+  memory), keeps it while ``mm.test_df`` is the same frame, and takes
+  the accuracy in NumPy (``ml.local.accuracy``, the figure Spark's
+  ``score`` gives).
+- Upload input is checked before scoring: a header-only CSV scores
   zero rows, and a non-numeric feature column is a ``ValueError``
   (HTTP 400), never coerced.
 - The cache key names the model, and a retrain drops that model's
@@ -46,7 +42,6 @@ from big_data_lab_three_spark.catalog import Catalog
 from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.ml import MultiModel
 from big_data_lab_three_spark.ml.local import accuracy, compile_scorer
-from big_data_lab_three_spark.schemas import conform
 from big_data_lab_three_spark.session import get_spark
 from big_data_lab_three_spark.sources.sinks import redis_client
 
@@ -99,9 +94,8 @@ class Service:
         self.mm = MultiModel(
             self.spark, train, test, feats, catalog=self.catalog
         )
-        # fitted model → its compiled scorer (None: score in Spark); a
-        # retrain puts a new model object in ``mm.models``, so the old
-        # entry drops with the old model
+        # fitted model → its compiled scorer; a retrain puts a new model
+        # object in ``mm.models``, so the old entry drops with the old model
         self._scorers = weakref.WeakKeyDictionary()
         # (test frame, its features as pandas, its labels as Arrow),
         # collected on the first compiled smoke
@@ -161,18 +155,15 @@ class Service:
         return {"from_cache": False, **result}
 
     def _scorer(self, model):
-        """The fitted model's compiled scorer (None: score in Spark),
-        compiled on first use."""
+        """The fitted model's compiled scorer, compiled on first use."""
         if model not in self._scorers:
             self._scorers[model] = compile_scorer(model)
         return self._scorers[model]
 
     def _smoke(self, model_type: str) -> dict:
-        """Accuracy on the held-out split: the compiled scorer over the
-        collected split, else ``MultiModel.predict`` in Spark."""
+        """Accuracy of the compiled scorer on the collected held-out
+        split."""
         scorer = self._scorer(self.mm.models[model_type])
-        if scorer is None:
-            return self.mm.predict(model_type, "smoke")
         features, labels = self._held_out()
         return {
             "model": model_type,
@@ -201,18 +192,10 @@ class Service:
         return self._held_out_split[1:]
 
     def _predict_upload(self, model_type: str, file_contents: bytes) -> dict:
-        """S10 fixed: CSV bytes → pandas → conform to contract → score,
-        driver-local when the model compiles (``ml/local.py``), else
-        through the Spark pipeline."""
+        """S10 fixed: CSV bytes → pandas → the compiled scorer, which
+        treats an absent feature column as missing and ignores extras."""
         pdf = self._read_upload(file_contents)
-        model = self.mm.models[model_type]
-        scorer = self._scorer(model)
-        if pdf.empty:
-            preds = []
-        elif scorer is not None:
-            preds = scorer.predict(pdf).tolist()
-        else:
-            preds = self._spark_predict(model, pdf)
+        preds = self._scorer(self.mm.models[model_type]).predict(pdf).tolist()
         return {
             "model": model_type,
             "mode": "upload",
@@ -222,8 +205,8 @@ class Service:
 
     def _read_upload(self, file_contents: bytes) -> pd.DataFrame:
         """Parse upload CSV bytes; a feature column must be numeric
-        (empty cells and ±inf are fine) — Spark would reject it with a
-        500, and coercing it would impute over the caller's data."""
+        (empty cells and ±inf are fine): coercing it would impute over
+        the caller's data."""
         pdf = pd.read_csv(io.BytesIO(file_contents))
         if pdf.empty:
             return pdf
@@ -234,14 +217,6 @@ class Service:
             ):
                 raise ValueError(f"upload column {c!r} is not numeric")
         return pdf
-
-    def _spark_predict(self, model, pdf: pd.DataFrame) -> list[int]:
-        """The pipeline's own ``transform`` on a driver-local frame."""
-        df = conform(self.spark.createDataFrame(pdf), self.feature_cols)
-        return [
-            int(r["prediction"])
-            for r in model.transform(df).select("prediction").collect()
-        ]
 
 
 def create_app(sf_dir: str = "/root/testdata/sf0.001"):

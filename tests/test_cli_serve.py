@@ -7,9 +7,11 @@ import-gated shim) and the Redis sink exercises its JSON fallback.
 
 from __future__ import annotations
 
+import contextlib
 import json
 import math
 import os
+from types import SimpleNamespace
 
 import pytest
 
@@ -168,7 +170,7 @@ def test_upload_neither_reads_nor_writes_the_cache(service, monkeypatch):
 
 @pytest.mark.parametrize("model_type", ["d_tree", "rand_forest"])
 def test_upload_header_only_csv_scores_no_rows(service, model_type):
-    """Both scoring paths: d_tree compiles, rand_forest uses Spark."""
+    """A single tree and a forest both score an empty frame."""
     out = service.predict(
         "upload", model_type,
         file_contents=b"l_quantity,l_extendedprice,l_discount,l_tax\n",
@@ -226,13 +228,14 @@ def _parity_frames(n=1200, seed=PARITY_SEED):
     return frames
 
 
-@pytest.mark.parametrize("model_type", ["d_tree", "log_reg"])
+@pytest.mark.parametrize("model_type", VALID_MODELS)
 def test_compiled_scorer_matches_spark_transform(service, model_type):
     """The NumPy scorer is exact: 0 of 2,400 seeded rows differ from
     ``PipelineModel.transform(...).prediction``."""
     import numpy as np
 
     from big_data_lab_three_spark.ml.local import compile_scorer
+    from big_data_lab_three_spark.schemas import conform
 
     full, partial = _parity_frames()
     assert str(full["l_quantity"].dtype) == "int64"
@@ -240,71 +243,190 @@ def test_compiled_scorer_matches_spark_transform(service, model_type):
     service.train(model_type, save_model=False)
     model = service.mm.models[model_type]
     scorer = compile_scorer(model)
-    assert scorer is not None
     for pdf in (full, partial):
         local = scorer.predict(pdf)
-        spark = np.array(service._spark_predict(model, pdf))
+        df = conform(service.spark.createDataFrame(pdf), service.feature_cols)
+        spark = np.array([
+            int(r["prediction"])
+            for r in model.transform(df).select("prediction").collect()
+        ])
         assert len(local) == len(pdf)
         assert int((local != spark).sum()) == 0
         assert 0 < local.sum() < len(pdf)  # both classes occur
 
 
-def test_tree_head_goes_left_on_equal_and_rejects_categorical_splits():
-    """Spark's continuous split sends ``x <= threshold`` left, so a value
-    equal to the threshold goes left and NaN goes right; a categorical
-    split has no compiled form and must fail loudly."""
-    from types import SimpleNamespace
+# Stand-ins for the py4j handles of Spark's tree nodes; the reader tells
+# them apart by their JVM class names, so the classes carry those names.
+class _JavaStub:
+    def getClass(self):
+        return SimpleNamespace(getSimpleName=lambda: type(self).__name__)
 
+
+class LeafNode(_JavaStub):
+    def __init__(self, *weights):
+        self.weights = list(weights)
+
+    def impurityStats(self):
+        return SimpleNamespace(stats=lambda: self.weights)
+
+
+class InternalNode(_JavaStub):
+    def __init__(self, split, left, right):
+        self._split, self._left, self._right = split, left, right
+
+    def split(self):
+        return self._split
+
+    def leftChild(self):
+        return self._left
+
+    def rightChild(self):
+        return self._right
+
+
+class ContinuousSplit(_JavaStub):
+    def __init__(self, feature, threshold):
+        self._feature, self._threshold = feature, threshold
+
+    def featureIndex(self):
+        return self._feature
+
+    def threshold(self):
+        return self._threshold
+
+
+class CategoricalSplit(_JavaStub):
+    def featureIndex(self):
+        return 0
+
+
+def test_tree_reader_goes_left_on_equal_and_right_on_nan_and_inf():
+    """Spark's continuous split sends ``x <= threshold`` left: a value
+    equal to the threshold goes left, NaN and +inf go right.  A leaf
+    predicts the argmax of its class weights, the first class on a
+    tie."""
     import numpy as np
 
-    from big_data_lab_three_spark.ml.local import _tree_head
+    from big_data_lab_three_spark.ml.local import _read_trees, _tree_head
 
-    header = "DecisionTreeClassificationModel: uid=t, depth=1, numNodes=3\n"
-    tree = SimpleNamespace(toDebugString=header + (
-        "  If (feature 1 <= 0.5)\n"
-        "   Predict: 0.0\n"
-        "  Else (feature 1 > 0.5)\n"
-        "   Predict: 1.0\n"
-    ))
-    x = np.array([[9.0, 0.5], [9.0, 0.5000001], [9.0, np.nan],
-                  [9.0, -np.inf]])
-    assert _tree_head(tree)(x).tolist() == [0, 1, 1, 0]
-
-    categorical = SimpleNamespace(toDebugString=header + (
-        "  If (feature 0 in {1.0,2.0})\n"
-        "   Predict: 0.0\n"
-        "  Else (feature 0 not in {1.0,2.0})\n"
-        "   Predict: 1.0\n"
-    ))
-    with pytest.raises(ValueError, match="unsupported tree split"):
-        _tree_head(categorical)
+    tree = InternalNode(
+        ContinuousSplit(0, 0.0),
+        InternalNode(ContinuousSplit(1, 0.5), LeafNode(2.0, 2.0),
+                     LeafNode(1.0, 2.0)),
+        LeafNode(0.0, 5.0),
+    )
+    trees = _read_trees([tree])
+    assert trees.left.tolist() == [1, 2, 2, 3, 4]  # pre-order
+    assert trees.right.tolist() == [4, 3, 2, 3, 4]
+    x = np.array([[0.0, 0.5], [0.0, 0.5000001], [0.0, np.nan],
+                  [0.0, np.inf], [0.0, -np.inf], [1.0, 0.0],
+                  [np.nan, 0.0], [np.inf, 0.0]])
+    assert _tree_head(trees)(x).tolist() == [0, 1, 1, 1, 0, 1, 1, 1]
 
 
-def test_compiled_uploads_never_reach_spark(service, monkeypatch):
-    """d_tree and log_reg score driver-local; rand_forest (and gnb) have
-    no compiled form and still go through Spark."""
+def test_tree_reader_rejects_categorical_splits():
+    """A categorical split has no compiled form and must fail loudly."""
+    from big_data_lab_three_spark.ml.local import _read_trees
+
+    tree = InternalNode(CategoricalSplit(), LeafNode(1.0, 0.0),
+                        LeafNode(0.0, 1.0))
+    with pytest.raises(ValueError, match="CategoricalSplit"):
+        _read_trees([tree])
+
+
+def test_forest_head_skips_zero_total_leaves_and_ties_to_class_0():
+    """Each tree votes its leaf's weights over their total; a leaf whose
+    total is 0 adds nothing (no NaN), and an exact tie is class 0."""
+    import numpy as np
+
+    from big_data_lab_three_spark.ml.local import _forest_head, _read_trees
+
+    forest = _read_trees([
+        InternalNode(ContinuousSplit(0, 0.0), LeafNode(0.0, 0.0),
+                     LeafNode(3.0, 1.0)),
+        InternalNode(ContinuousSplit(0, 0.0), LeafNode(1.0, 3.0),
+                     LeafNode(1.0, 3.0)),
+    ])
+    # row 0: 0 + (0.25, 0.75); row 1: (0.75, 0.25) + (0.25, 0.75) = (1, 1)
+    assert _forest_head(forest)(np.array([[-1.0], [1.0]])).tolist() == [1, 0]
+
+
+def test_gaussian_nb_head_matches_a_hand_computed_example():
+    """``pi[i] - (Σ (x-θ)²/σ + Σ log σ) / 2``: with equal priors, class 1
+    (θ=1, σ=(1, 4)) is nearer at x=(0.8, 0.8) but its wider variance
+    costs log 4 / 2, so class 0 (θ=0, σ=1) wins there."""
+    import numpy as np
+
+    from big_data_lab_three_spark.ml.local import _gaussian_nb_head
+
+    pi = np.log([0.5, 0.5])
+    head = _gaussian_nb_head(
+        pi, np.array([[0.0, 0.0], [1.0, 1.0]]),
+        np.array([[1.0, 1.0], [1.0, 4.0]]),
+    )
+    # x=(1, 1):     class 0: -(1 + 1)/2 = -1;      class 1: -log(4)/2 = -0.69
+    # x=(0.8, 0.8): class 0: -(0.64 + 0.64)/2 = -0.64;
+    #               class 1: -(0.04 + 0.01 + log 4)/2 = -0.72
+    # x=(0, 0):     class 0: 0;                    class 1: -(1 + 0.25 + log 4)/2
+    x = np.array([[1.0, 1.0], [0.8, 0.8], [0.0, 0.0]])
+    assert head(x).tolist() == [1, 0, 0]
+    skewed = _gaussian_nb_head(
+        np.log([0.1, 0.9]), np.array([[0.0, 0.0], [1.0, 1.0]]),
+        np.array([[1.0, 1.0], [1.0, 4.0]]),
+    )
+    # x=(0.8, 0.8): class 0: log 0.1 - 0.64 = -2.94; class 1: log 0.9 - 0.72
+    assert skewed(x[1:2]).tolist() == [1]
+
+
+def test_compile_scorer_names_a_head_it_cannot_compile():
     from big_data_lab_three_spark.ml.local import compile_scorer
 
-    for model_type in ("d_tree", "log_reg", "rand_forest"):
+    class LinearSVCModel:
+        pass
+
+    pipeline = SimpleNamespace(stages=[None, None, None, LinearSVCModel()])
+    with pytest.raises(ValueError, match="LinearSVCModel"):
+        compile_scorer(pipeline)
+
+
+@contextlib.contextmanager
+def _no_spark_jobs(sc, group):
+    """Fail unless the block launches no Spark job."""
+    sc.setJobGroup(group, group)
+    try:
+        yield
+        assert sc.statusTracker().getJobIdsForGroup(group) == []
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description",
+                    "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+
+
+def test_compiled_uploads_never_reach_spark(service):
+    """Once a model is compiled, its uploads run no Spark job."""
+    for model_type in VALID_MODELS:
         if model_type not in service.mm.models:
             service.train(model_type, save_model=False)
+        service.predict("upload", model_type, file_contents=UPLOAD_CSV)
 
-    def no_spark(*args, **kwargs):
-        raise RuntimeError("upload reached Spark")
-
-    monkeypatch.setattr(service.spark, "createDataFrame", no_spark)
-    for model_type in ("d_tree", "log_reg"):
-        out = service.predict("upload", model_type, file_contents=UPLOAD_CSV)
-        assert out["n_rows"] == 2
-    assert compile_scorer(service.mm.models["rand_forest"]) is None
-    with pytest.raises(RuntimeError, match="reached Spark"):
-        service.predict("upload", "rand_forest", file_contents=UPLOAD_CSV)
+    with _no_spark_jobs(service.spark.sparkContext, "compiled-upload"):
+        for model_type in VALID_MODELS:
+            out = service.predict(
+                "upload", model_type, file_contents=UPLOAD_CSV
+            )
+            assert out["n_rows"] == 2
 
 
-RETRAIN_PARAMS = {"d_tree": {"max_depth": 3}, "log_reg": {"max_iter": 1}}
+# gnb takes no parameters: its retrain fits the same model again
+RETRAIN_PARAMS = {
+    "d_tree": {"max_depth": 3},
+    "rand_forest": {"n_estimators": 5},
+    "log_reg": {"max_iter": 1},
+    "gnb": {},
+}
 
 
-@pytest.mark.parametrize("model_type", ["d_tree", "log_reg"])
+@pytest.mark.parametrize("model_type", VALID_MODELS)
 def test_compiled_smoke_matches_spark_score(service, model_type):
     """The driver-local smoke is Spark's ``score`` exactly, and a retrain
     is scored by its own model, never by the scorer of the one it
@@ -319,7 +441,8 @@ def test_compiled_smoke_matches_spark_score(service, model_type):
                   params=RETRAIN_PARAMS[model_type])
     after = service.predict("smoke", model_type)["test_score"]
     assert after == score(service.mm.models[model_type], service.mm.test_df)
-    assert after != before  # the retrain is told apart from its predecessor
+    if RETRAIN_PARAMS[model_type]:  # told apart from its predecessor
+        assert after != before
 
 
 def test_compiled_smoke_follows_a_replaced_held_out_split(
@@ -351,35 +474,18 @@ def test_compiled_smoke_follows_a_replaced_held_out_split(
         score(model, unlabelled)
 
 
-def test_compiled_smoke_never_reaches_spark(service, monkeypatch):
-    """Once the held-out split is collected, d_tree and log_reg smokes
-    run no Spark job; rand_forest has no compiled form and still scores
-    in Spark."""
-    from big_data_lab_three_spark.ml import models
-
-    for model_type in ("d_tree", "log_reg", "rand_forest"):
+def test_compiled_smoke_never_reaches_spark(service):
+    """Once the held-out split is collected and a model is compiled, its
+    smokes run no Spark job."""
+    for model_type in VALID_MODELS:
         if model_type not in service.mm.models:
             service.train(model_type, save_model=False)
-    service.predict("smoke", "d_tree")  # collects the held-out split
+        service.predict("smoke", model_type)
 
-    def no_spark(*args, **kwargs):
-        raise RuntimeError("smoke reached Spark")
-
-    monkeypatch.setattr(models, "score", no_spark)
-    monkeypatch.setattr(service.spark, "createDataFrame", no_spark)
-    sc = service.spark.sparkContext
-    sc.setJobGroup("compiled-smoke", "compiled-smoke")
-    try:
-        for model_type in ("d_tree", "log_reg"):
+    with _no_spark_jobs(service.spark.sparkContext, "compiled-smoke"):
+        for model_type in VALID_MODELS:
             out = service.predict("smoke", model_type)
             assert 0.0 <= out["test_score"] <= 1.0
-        assert sc.statusTracker().getJobIdsForGroup("compiled-smoke") == []
-    finally:
-        for key in ("spark.jobGroup.id", "spark.job.description",
-                    "spark.job.interruptOnCancel"):
-            sc.setLocalProperty(key, None)
-    with pytest.raises(RuntimeError, match="reached Spark"):
-        service.predict("smoke", "rand_forest")
 
 
 def test_accuracy_drops_null_labels_and_rejects_an_unlabelled_split():

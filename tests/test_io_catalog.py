@@ -125,3 +125,28 @@ def test_plan_caches_drop_stopped_sessions(spark, tmp_path):
         sessions = {key[0] for key in cache}
         assert stopped not in sessions
         assert spark in sessions
+
+
+def test_round_trip_scratch_dir_is_removed_at_exit(tmp_path):
+    """The per-process scratch dir of the round-trip queries is gone once
+    the process that made it exits."""
+    import subprocess
+    import sys
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        "import os\n"
+        "from big_data_lab_three_spark.queries.io import _scratch\n"
+        "path = _scratch('x')\n"
+        "open(path, 'w').close()\n"
+        "print(os.path.dirname(path))\n"
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", code], cwd=root, check=True,
+        capture_output=True, text=True,
+        env={**os.environ, "TMPDIR": str(tmp_path), "PYTHONPATH": root},
+    )
+    scratch = out.stdout.strip().splitlines()[-1]
+    assert os.path.basename(scratch).startswith("spark_graft_io_")
+    assert os.path.dirname(scratch) == str(tmp_path)
+    assert not os.path.exists(scratch)
