@@ -1,5 +1,6 @@
 """The one driver for the engine's iterative Spark loops (BPE merge,
-k-core peel, Lloyd k-means, both connected-components loops, PageRank).
+unigram-LM EM, k-core peel, Lloyd k-means, both connected-components
+loops, PageRank).
 
 :class:`Rounds` owns the per-round policy they share:
 
@@ -20,8 +21,8 @@ k-core peel, Lloyd k-means, both connected-components loops, PageRank).
   unpersisted.  A checkpoint is the frame's own RDD, never a
   ``getPersistentRDDs()`` diff that could free another thread's data.
   Reading a released checkpoint raises; it never recomputes wrong rows.
-  Rounds no action inside the loop materializes (k-means, PageRank)
-  stay persisted for the caller to free.
+  Rounds no action inside the loop materializes (k-means, PageRank,
+  unigram-LM EM) stay persisted for the caller to free.
 """
 
 from __future__ import annotations

@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from big_data_lab_three_spark.functions.numeric import md5_mod, micro_quantize
 from big_data_lab_three_spark.functions.text import tokens
 from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.operators.iterate import Rounds
@@ -1326,8 +1327,6 @@ def heldout_perplexity_census(
     build Zipf-bounded model tables, the test bigram stream LEFT-joins
     them (Spark broadcasts when they fit), one per-doc rollup, one
     per-language census.  The md5 fold split is a scan predicate."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
     fold = md5_mod("hp:", F.col("doc_id"), 5)
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -1552,8 +1551,6 @@ def kn_trigram_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     they are shuffled hash joins on bounded tables).  One corpus-scale
     exchange per groupBy ladder stage, no pair blowups, no Python in
     the hot path — the fold split is a scan predicate."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
     fold = md5_mod("kn:", F.col("doc_id"), 5)
     d = table(spark, sf_dir, "documents").select(
         "doc_id",
@@ -2689,8 +2686,6 @@ def nb_lang_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     and prior, and the argmax is a max-score + min-lang pair of
     groupBys — NO corpus-partitioned window, no dense grid, no
     feature-space explode."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
     fold = md5_mod("nb:", F.col("doc_id"), 5)
     marked = md5_mod("nbm:", F.col("doc_id"), 100) < 85
     marker = F.when(
@@ -3023,48 +3018,144 @@ def _ulm_piece_occurrences(words: DataFrame) -> DataFrame:
     ).select("w", "cnt", "u.i0", "u.k", "u.p")
 
 
-def _ulm_dp_frame(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-):
-    """Shared unigram-LM front half: the vocabulary table, the piece-
-    occurrence table, and the per-word Viterbi DP frame (w, cnt, wlen,
-    sf, b0..b8, bfin) under the frequency-initialized scores —
-    ``unigram_lm_viterbi_census`` reads the packed optimum,
-    ``unigram_lm_em_round`` walks the traceback,
-    ``unigram_lm_round2_census`` re-runs the DP under re-estimated
-    scores (``_ulm_dp_from_scores``).  Returns ``(toks, pc, dp)``.
-    ``docs`` overrides the source frame (r14: the frozen-vocab apply
-    trains on an md5 fold)."""
+def _ulm_train(spark: SparkSession, docs: DataFrame, k: int):
+    """``k`` unigram-LM (SentencePiece) training rounds on
+    ``Rounds(spark, "unigram_em", k)``, after ONE token scan of
+    ``docs`` collapsed to the (w, cnt) vocabulary and its piece grid.
+    Round 1 segments every vocabulary word under the frequency-
+    initialized scores ``ln(f(p)/T)`` over the full piece inventory;
+    each later round is one EM step on the round before it: the
+    Viterbi piece counts (``_ulm_used``, E) re-score the pieces they
+    used plus the single-character floor (``_ulm_rescore``, M — unused
+    pieces are pruned) and the vocabulary is re-segmented
+    (``_ulm_dp_from_scores``).  A round checkpoints its scores and DP
+    frame, and first folds the finished round's history row into its
+    checkpointed history: a round reads only the round before it, and
+    the history outlives the release of superseded rounds.  The last
+    round's row is appended after the loop, so a caller that never
+    reads the history pays no job for it.
+
+    Returns ``(toks, s, dp, hist)``: the vocabulary, the last round's
+    (p, s) scores and DP frame (w, cnt, wlen, sf, b0..b8, bfin), and
+    one row per round — (round, n_words, corpus_cnt, kept_pieces,
+    pruned_pieces, sum_pieces_weighted, sum_score_weighted)."""
     toks = (
-        (docs if docs is not None else table(spark, sf_dir, "documents"))
-        .select(F.explode(tokens(F.col("text"))).alias("tok"))
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .select(F.col("tok").alias("w"), "cnt")
+    ).localCheckpoint()
+    pc = _ulm_piece_occurrences(toks).localCheckpoint()
+    allp = pc.select("p").distinct()
+    chars = pc.where(F.col("k") == 1).agg(F.count_distinct("p").alias("c"))
+    rounds = Rounds(spark, "unigram_em", k)
+    hist = None
+    for r in rounds:
+        if r == 1:
+            pf = pc.groupBy("p").agg(F.sum("cnt").alias("f"))
+            pt = pf.agg(F.sum("f").alias("t"))
+            s = pf.crossJoin(F.broadcast(pt)).select(
+                "p",
+                micro_quantize(
+                    F.log(F.col("f") / F.col("t").cast("double"))
+                ).alias("s"),
+            )
+        else:
+            hist = rounds.checkpoint(
+                _ulm_history(hist, r - 1, dp, s, allp)
+            )
+            s = rounds.checkpoint(
+                _ulm_rescore(_ulm_used(dp), allp, chars)
+            )
+        dp = rounds.checkpoint(_ulm_dp_from_scores(pc, s))
+    return toks, s, dp, _ulm_history(hist, k, dp, s, allp)
+
+
+def _ulm_history(
+    hist, r: int, dp: DataFrame, s: DataFrame, allp: DataFrame
+) -> DataFrame:
+    """``hist`` (None before round 1) with round ``r``'s row appended:
+    the segmentation sums of the DP frame, the pieces the round's
+    scores keep and the rest of the inventory ``allp`` pruned — ONE
+    aggregate over the three frames stacked, each filling the columns
+    the other two leave NULL."""
+    kept = s.select(F.col("p").alias("kept"))
+    inv = allp.select(F.col("p").alias("inv"))
+    stack = (
+        _ulm_seg(dp)
+        .unionByName(kept, allowMissingColumns=True)
+        .unionByName(inv, allowMissingColumns=True)
     )
-    toks = toks.localCheckpoint()  # vocab table: pieces + long-row census
-    pc = _ulm_piece_occurrences(toks)
-    pc = pc.localCheckpoint()  # piece occurrences: freq AND per-word sf
-    pf = pc.groupBy("p").agg(F.sum("cnt").alias("f"))
-    pt = pf.agg(F.sum("f").alias("t"))
-    ps = pf.crossJoin(F.broadcast(pt)).select(
-        "p",
-        F.floor(
-            F.log(F.col("f") / F.col("t").cast("double"))
-            * F.lit(1000000.0)
-            + F.lit(0.5)
-        )
-        .cast("long")
-        .alias("s"),
+    n_words, corpus_cnt, pieces, score = _ulm_seg_sums()
+    row = stack.agg(
+        F.lit(r).alias("round"),
+        n_words,
+        corpus_cnt,
+        F.count("kept").alias("kept_pieces"),
+        (F.count("inv") - F.count("kept")).alias("pruned_pieces"),
+        pieces,
+        score,
     )
-    return toks, pc, _ulm_dp_from_scores(pc, ps)
+    return row if hist is None else hist.unionByName(row)
+
+
+def _ulm_seg(dp: DataFrame) -> DataFrame:
+    """(w, cnt, wlen, bp, bs) per DP row: the word, its corpus count
+    and length, and the piece count and score of its optimum, unpacked
+    from the packed ``bfin = 16·S − P``."""
+    return dp.select(
+        "w",
+        "cnt",
+        "wlen",
+        F.expr("(- bfin) % 16").alias("bp"),
+        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("bs"),
+    )
+
+
+def _ulm_seg_sums():
+    """The corpus-weighted sums over ``_ulm_seg`` rows — word count,
+    corpus count, piece count and total score of the optima — shared
+    by the per-round history and the by-length census."""
+    return [
+        F.count("cnt").alias("n_words"),
+        F.sum("cnt").alias("corpus_cnt"),
+        F.sum(F.col("cnt") * F.col("bp")).alias("sum_pieces_weighted"),
+        F.sum(F.col("cnt") * F.col("bs")).alias("sum_score_weighted"),
+    ]
+
+
+def _ulm_seg_census(toks: DataFrame, dp: DataFrame) -> DataFrame:
+    """The segmentation census of a DP frame by word length, plus the
+    ``len_group = −1`` row counting the vocabulary words past the
+    unroll bound (never silently dropped) — the readout of
+    ``unigram_lm_viterbi_census`` (round 1) and
+    ``unigram_lm_round2_census`` (round 2)."""
+    census = (
+        _ulm_seg(dp)
+        .groupBy(F.col("wlen").cast("int").alias("len_group"))
+        .agg(*_ulm_seg_sums())
+    )
+    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
+        F.lit(-1).cast("int").alias("len_group"),
+        F.count(F.lit(1)).alias("n_words"),
+        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
+        F.lit(0).cast("long").alias("sum_pieces_weighted"),
+        F.lit(0).cast("long").alias("sum_score_weighted"),
+    )
+    return census.unionByName(longrow)
 
 
 def _ulm_dp_from_scores(pc: DataFrame, ps: DataFrame) -> DataFrame:
     """The per-word Viterbi DP frame under an arbitrary (p, s) piece-
     score table: pieces absent from ``ps`` take the sentinel (pruned),
     so the same function runs round 1 (frequency scores over ALL
-    pieces) and round 2 (re-estimated scores over kept pieces)."""
+    pieces) and every later round (re-estimated scores over kept
+    pieces).  The caller checkpoints the frame: the lateral b-aliases
+    INLINE during analysis (b8 alone is a 4^8-node greatest tree) and
+    every downstream reference re-expands them — the traceback's
+    barr/karr references multiplied analysis time past a minute.  The
+    checkpoint pins b0..b8 as plain scan columns; the frame is
+    vocabulary-bounded, so this is a KB-scale materialization."""
     nslots = _ULM_MAXLEN * _ULM_MAXPIECE
     wsf = (
         pc.join(ps, "p")
@@ -3108,13 +3199,7 @@ def _ulm_dp_from_scores(pc: DataFrame, ps: DataFrame) -> DataFrame:
             ).split(",\n           ")
         ],
     )
-    # Materialize the vocab-sized DP frame: the lateral b-aliases
-    # INLINE during analysis (b8 alone is a 4^8-node greatest tree),
-    # and every downstream reference re-expands them — the EM round's
-    # barr/karr references multiplied analysis time past a minute.
-    # The checkpoint pins b0..b8 as plain scan columns; the frame is
-    # vocabulary-bounded, so this is a KB-scale materialization.
-    return dp.localCheckpoint()
+    return dp
 
 
 def _ulm_base_sql(src: str = "documents") -> str:
@@ -3210,32 +3295,10 @@ def unigram_lm_viterbi_census(
     the data.  Longer words need a longer unroll (L·4 slots, linear),
     or the grouped-map route ``semdedup_prune`` uses — noted, bounded,
     fail-visible."""
-    toks, _pc, dp = _ulm_dp_frame(spark, sf_dir)
-    seg = dp.select(
-        "w",
-        "cnt",
-        "wlen",
-        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-        F.expr("(- bfin) % 16").alias("best_p"),
+    toks, _s, dp, _hist = _ulm_train(
+        spark, table(spark, sf_dir, "documents"), 1
     )
-    census = seg.groupBy(F.col("wlen").cast("int").alias("len_group")).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("cnt").alias("corpus_cnt"),
-        F.sum(F.col("cnt") * F.col("best_p")).alias(
-            "sum_pieces_weighted"
-        ),
-        F.sum(F.col("cnt") * F.col("best_s")).alias(
-            "sum_score_weighted"
-        ),
-    )
-    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
-        F.lit(-1).cast("int").alias("len_group"),
-        F.count(F.lit(1)).alias("n_words"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
-        F.lit(0).cast("long").alias("sum_pieces_weighted"),
-        F.lit(0).cast("long").alias("sum_score_weighted"),
-    )
-    return census.unionByName(longrow).orderBy("len_group")
+    return _ulm_seg_census(toks, dp).orderBy("len_group")
 
 
 def _ulm_traceback_k(ix, pos: str) -> str:
@@ -3304,6 +3367,17 @@ def _ulm_traceback_pieces(dp: DataFrame) -> DataFrame:
     return tb
 
 
+def _ulm_used(dp: DataFrame) -> DataFrame:
+    """The E-step: (p, used_cnt), the corpus-weighted count of every
+    piece the Viterbi traceback of ``dp`` chose."""
+    return (
+        _ulm_traceback_pieces(dp)
+        .select("cnt", F.explode("ps").alias("p"))
+        .groupBy("p")
+        .agg(F.sum("cnt").alias("used_cnt"))
+    )
+
+
 _ULM_TB_SQL = f"""), tb AS (
     SELECT w, cnt, sf, {_ULM_BARR} AS barr,
            wlen AS pos, CAST([] AS VARCHAR[]) AS ps
@@ -3342,7 +3416,7 @@ def unigram_lm_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ONE full unigram-LM EM round (the SentencePiece training step,
     beside ``bpe_train_merges``'s merge loop): the E-step is the
     Viterbi segmentation of every vocabulary word under the
-    frequency-initialized piece scores (``_ulm_dp_frame``), its
+    frequency-initialized piece scores (``_ulm_train``, one round), its
     traceback RE-DERIVED from the packed DP values — at each position
     the chosen piece length is the smallest k whose predecessor state
     reproduces the optimum, a pure integer test both engines evaluate
@@ -3364,12 +3438,10 @@ def unigram_lm_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     This is exactly how a full EM loop would iterate at 100 TB: the
     corpus is scanned once for word counts, every E/M round after
     that touches only the Zipf-bounded vocabulary."""
-    toks, _pc, dp = _ulm_dp_frame(spark, sf_dir)
-    tb = _ulm_traceback_pieces(dp)
-    chosen = tb.select(
-        "cnt", F.explode("ps").alias("piece")
+    _toks, _s, dp, _hist = _ulm_train(
+        spark, table(spark, sf_dir, "documents"), 1
     )
-    m = chosen.groupBy("piece").agg(F.sum("cnt").alias("used_cnt"))
+    m = _ulm_used(dp).withColumnRenamed("p", "piece")
     mt = m.agg(F.sum("used_cnt").alias("t"))
     return (
         m.crossJoin(F.broadcast(mt))
@@ -3394,8 +3466,9 @@ def _ulm_s_sql_r(msuf: str, r: int) -> str:
     """Parameterized score re-estimation: model round ``r`` keeps the
     pieces round ``msuf``'s Viterbi used plus the single-character
     floor (add-one mass), scored ``ln((used+floor)/(t+c))`` — the ONE
-    SQL text behind round 2 (``_ULM_S2_SQL``), the convergence chain,
-    and the corpus apply (review finding r13: three drifting copies)."""
+    SQL text behind every re-scored round of the oracles (round 2 as
+    ``_ULM_S2_SQL``, each later round of the convergence chain), the
+    twin of ``_ulm_rescore``."""
     return f""", t{r} AS (
     SELECT CAST(sum(used_cnt) AS BIGINT) AS t FROM m{msuf}
 ), s{r} AS MATERIALIZED (
@@ -3413,28 +3486,13 @@ def _ulm_s_sql_r(msuf: str, r: int) -> str:
 _ULM_S2_SQL = _ULM_INV_SQL + _ulm_s_sql_r("", 2)
 
 
-def _ulm_inventory(pc: DataFrame):
-    """Shared piece inventory: ``(allp, chars)`` — the distinct piece
-    table (localCheckpoint'ed: reused by scores AND the prune
-    accounting) and the single-character type count for the add-one
-    floor."""
-    allp = pc.select("p").distinct().localCheckpoint()
-    chars = pc.where(F.col("k") == 1).agg(
-        F.count_distinct("p").alias("c")
-    )
-    return allp, chars
-
-
 def _ulm_rescore(m: DataFrame, allp: DataFrame, chars: DataFrame):
-    """Shared M-step score re-estimation — the SINGLE Spark
-    implementation behind ``unigram_lm_round2_census``, the
-    convergence loop, and ``unigram_corpus_apply_census`` (review
-    finding r13: three hand-copies could drift independently): keep
-    pieces the Viterbi used plus the single-character floor with
-    add-one mass, scored ``ln((used + floor) / (t + c))`` in
-    micro-units.  SQL twin: ``_ulm_s_sql_r`` / ``_ULM_S2_SQL``."""
-    from big_data_lab_three_spark.functions.numeric import micro_quantize
-
+    """The M-step of every ``_ulm_train`` round after the first: keep
+    the pieces of the distinct inventory ``allp`` the Viterbi used
+    (``m``: p, used_cnt) plus the single-character floor with add-one
+    mass (``chars``: the character type count), scored
+    ``ln((used + floor) / (t + c))`` in micro-units.  SQL twin:
+    ``_ulm_s_sql_r``."""
     t = m.agg(F.sum("used_cnt").alias("t"))
     return (
         allp.join(m, "p", "left")
@@ -3455,7 +3513,6 @@ def _ulm_rescore(m: DataFrame, allp: DataFrame, chars: DataFrame):
                 )
             ).alias("s"),
         )
-        .localCheckpoint()
     )
 
 
@@ -3543,57 +3600,18 @@ def unigram_lm_round2_census(
     100 TB is vocabulary-sized, never corpus-sized; the corpus is
     scanned exactly once for word counts no matter how many EM rounds
     run."""
-    toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
-    tb = _ulm_traceback_pieces(dp)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
+    toks, _s, dp, hist = _ulm_train(
+        spark, table(spark, sf_dir, "documents"), 2
     )
-    m = m.localCheckpoint()  # model table: scores + t2
-    allp, chars = _ulm_inventory(pc)
-    s2 = _ulm_rescore(m, allp, chars)  # kept model: dp2 + kept count
-    dp2 = _ulm_dp_from_scores(pc, s2)
-    seg2 = dp2.select(
-        "cnt",
-        "wlen",
-        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-        F.expr("(- bfin) % 16").alias("best_p"),
-    )
-    census = seg2.groupBy(
-        F.col("wlen").cast("int").alias("len_group")
-    ).agg(
-        F.count(F.lit(1)).alias("n_words"),
-        F.sum("cnt").alias("corpus_cnt"),
-        F.sum(F.col("cnt") * F.col("best_p")).alias(
-            "sum_pieces_weighted"
-        ),
-        F.sum(F.col("cnt") * F.col("best_s")).alias(
-            "sum_score_weighted"
-        ),
-    )
-    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
-        F.lit(-1).cast("int").alias("len_group"),
-        F.count(F.lit(1)).alias("n_words"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
+    modelrow = hist.where(F.col("round") == 2).select(
+        F.lit(-2).cast("int").alias("len_group"),
+        F.col("kept_pieces").alias("n_words"),
+        F.col("pruned_pieces").alias("corpus_cnt"),
         F.lit(0).cast("long").alias("sum_pieces_weighted"),
         F.lit(0).cast("long").alias("sum_score_weighted"),
     )
-    modelrow = (
-        s2.agg(F.count(F.lit(1)).alias("kept"))
-        .crossJoin(
-            F.broadcast(allp.agg(F.count(F.lit(1)).alias("np")))
-        )
-        .select(
-            F.lit(-2).cast("int").alias("len_group"),
-            F.col("kept").alias("n_words"),
-            (F.col("np") - F.col("kept")).alias("corpus_cnt"),
-            F.lit(0).cast("long").alias("sum_pieces_weighted"),
-            F.lit(0).cast("long").alias("sum_score_weighted"),
-        )
-    )
     return (
-        census.unionByName(longrow)
+        _ulm_seg_census(toks, dp)
         .unionByName(modelrow)
         .orderBy("len_group")
     )
@@ -3676,7 +3694,19 @@ def bpe_corpus_apply_census(
     No corpus-partitioned window, no pair stage, loop cost shared
     with ``bpe_train_merges``."""
     _, vocab = _bpe_merge_loop(spark, sf_dir)
-    pieces = vocab.select("tok", F.size("syms").alias("ns"))
+    return _apply_census(
+        spark, sf_dir, vocab.select("tok", F.size("syms").alias("np"))
+    )
+
+
+def _apply_census(
+    spark: SparkSession, sf_dir: str, pieces: DataFrame
+) -> DataFrame:
+    """The corpus apply census both tokenizer families share: every
+    document's token stream joins the memoized (tok, np) piece-count
+    map, rolls up per document (tokens, pieces, characters) and is
+    censused per language — tokens/doc, fertility, compression and
+    the worst per-doc fertility, as integer micro-unit divisions."""
     stream = table(spark, sf_dir, "documents").select(
         "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
     )
@@ -3685,7 +3715,7 @@ def bpe_corpus_apply_census(
         .groupBy("doc_id", "lang")
         .agg(
             F.count(F.lit(1)).alias("nt"),
-            F.sum("ns").alias("np"),
+            F.sum("np").alias("np"),
             F.sum(F.length("tok")).alias("nc"),
         )
     )
@@ -3837,69 +3867,14 @@ def unigram_lm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale shape: the corpus is scanned ONCE for word counts; each of
     the K rounds adds one vocabulary-bounded traceback + score
-    re-estimation + fixed-depth DP (localCheckpoint'ed bounded state,
-    the ``_bpe_merge_loop`` convention) — per-round cost is
+    re-estimation + fixed-depth DP (``_ulm_train`` on ``Rounds``, whose
+    per-round checkpoints keep the state bounded) — per-round cost is
     independent of corpus size, which is exactly what lets a real
     trainer run tens of EM rounds at 100 TB."""
-    toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
-    allp, chars = _ulm_inventory(pc)
-    npp = allp.agg(F.count(F.lit(1)).alias("np"))
-    model = npp.select(
-        F.col("np").alias("kept_pieces"),
-        F.lit(0).cast("long").alias("pruned_pieces"),
+    _toks, _s, _dp, hist = _ulm_train(
+        spark, table(spark, sf_dir, "documents"), _ULM_K_ROUNDS
     )
-    rows: list[DataFrame] = []
-    for r in range(1, _ULM_K_ROUNDS + 1):
-        seg = dp.select(
-            "cnt",
-            F.expr("(bfin + ((- bfin) % 16)) div 16").alias("best_s"),
-            F.expr("(- bfin) % 16").alias("best_p"),
-        )
-        census = seg.agg(
-            F.count(F.lit(1)).alias("n_words"),
-            F.sum("cnt").alias("corpus_cnt"),
-            F.sum(F.col("cnt") * F.col("best_p")).alias(
-                "sum_pieces_weighted"
-            ),
-            F.sum(F.col("cnt") * F.col("best_s")).alias(
-                "sum_score_weighted"
-            ),
-        )
-        rows.append(
-            census.crossJoin(F.broadcast(model)).select(
-                F.lit(r).cast("int").alias("round"),
-                "n_words",
-                "corpus_cnt",
-                "kept_pieces",
-                "pruned_pieces",
-                "sum_pieces_weighted",
-                "sum_score_weighted",
-            )
-        )
-        if r < _ULM_K_ROUNDS:
-            tb = _ulm_traceback_pieces(dp)
-            m = (
-                tb.select("cnt", F.explode("ps").alias("p"))
-                .groupBy("p")
-                .agg(F.sum("cnt").alias("used_cnt"))
-                .localCheckpoint()
-            )
-            s_next = _ulm_rescore(m, allp, chars)
-            model = (
-                s_next.agg(F.count(F.lit(1)).alias("kept_pieces"))
-                .crossJoin(F.broadcast(npp))
-                .select(
-                    "kept_pieces",
-                    (F.col("np") - F.col("kept_pieces")).alias(
-                        "pruned_pieces"
-                    ),
-                )
-            )
-            dp = _ulm_dp_from_scores(pc, s_next)
-    out = rows[0]
-    for extra in rows[1:]:
-        out = out.unionByName(extra)
-    return out.orderBy("round")
+    return hist.orderBy("round")
 
 
 # ---------------------------------------------------------------------
@@ -4060,8 +4035,6 @@ def _qc_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_QC_BEST_SQL`` fragment, shared by ``quality_classifier_census``
     and the curation funnel's classifier stage (one model definition,
     two consumers)."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
     hash_mod = lambda salt, mod: md5_mod(salt, F.col("doc_id"), mod)
     is_bad = hash_mod("qc:", 10) < 3
     marked = hash_mod("qcm:", 100) < 85
@@ -4239,62 +4212,13 @@ def unigram_corpus_apply_census(
     a shuffled hash join rather than forcing driver memory) — one
     per-doc combiner rollup, one per-language census: no corpus
     window, no pair stage."""
-    toks, pc, dp = _ulm_dp_frame(spark, sf_dir)
-    tb = _ulm_traceback_pieces(dp)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-        .localCheckpoint()
+    _toks, _s, dp, _hist = _ulm_train(
+        spark, table(spark, sf_dir, "documents"), 2
     )
-    allp, chars = _ulm_inventory(pc)
-    s2 = _ulm_rescore(m, allp, chars)
-    dp2 = _ulm_dp_from_scores(pc, s2)
-    pieces = dp2.select(
-        F.col("w").alias("tok"),
-        F.expr("(- bfin) % 16").alias("np"),
-    )
-    stream = table(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.explode(tokens(F.col("text"))).alias("tok")
-    )
-    pd = (
-        stream.join(pieces, "tok")
-        .groupBy("doc_id", "lang")
-        .agg(
-            F.count(F.lit(1)).alias("nt"),
-            F.sum("np").alias("np"),
-            F.sum(F.length("tok")).alias("nc"),
-        )
-    )
-    return (
-        pd.groupBy("lang")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum("nt").alias("n_tokens"),
-            F.sum("np").alias("n_pieces"),
-            F.sum("nc").alias("n_chars"),
-            F.max(F.expr("div(np * 1000000, nt)")).alias(
-                "worst_doc_fertility_micro"
-            ),
-        )
-        .select(
-            "lang",
-            "n_docs",
-            "n_tokens",
-            "n_pieces",
-            "n_chars",
-            F.expr("div(n_tokens * 1000000, n_docs)").alias(
-                "tokens_per_doc_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_tokens)").alias(
-                "fertility_micro"
-            ),
-            F.expr("div(n_pieces * 1000000, n_chars)").alias(
-                "compression_micro"
-            ),
-            "worst_doc_fertility_micro",
-        )
-        .orderBy("lang")
+    return _apply_census(
+        spark,
+        sf_dir,
+        _ulm_seg(dp).select(F.col("w").alias("tok"), F.col("bp").alias("np")),
     )
 
 
@@ -4675,6 +4599,47 @@ def curation_pipeline_census(
     )
 
 
+def _heldout_fold(spark: SparkSession, sf_dir: str, salt: str):
+    """The frozen-vocabulary applies' split: ``(tr, hw)`` — the
+    documents of the md5-derived 80% training fold (``salt`` picks the
+    fold), and the held-out 20% collapsed to (lang, tok, cnt).  The
+    synthetic corpus's templated vocabulary is fully covered by any 80%
+    fold, so without a plant the OOV path would be vacuously green at
+    every tier: a quarter of held-out docs gain 'qv'-repeat tokens (OOV
+    spelled entirely in training-inventory characters) and
+    'xz'-repeat tokens ('x'/'z' never appear in the corpus alphabet —
+    the unseen-character fallback).  Organic OOV, when the data has
+    it, counts identically."""
+    d = table(spark, sf_dir, "documents").select(
+        "doc_id",
+        "lang",
+        "text",
+        md5_mod(salt, F.col("doc_id"), 5).alias("fold"),
+    )
+    te = d.where(F.col("fold") == 0).select(
+        "lang",
+        F.when(
+            F.col("doc_id") % 4 == 2,
+            F.concat(
+                F.col("text"),
+                F.lit(" "),
+                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
+                F.lit(" x"),
+                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
+            ),
+        )
+        .otherwise(F.col("text"))
+        .alias("text"),
+    )
+    hw = (
+        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
+        .groupBy("lang", "tok")
+        .agg(F.count(F.lit(1)).alias("cnt"))
+        .localCheckpoint()
+    )
+    return d.where(F.col("fold") != 0), hw
+
+
 def _bpe_oracle_apply_rounds(k: int = _BPE_K) -> str:
     """Chained-CTE APPLY of an already-trained merge table to a
     held-out span table ``h0``: round r replays training round r's
@@ -4859,50 +4824,13 @@ def bpe_frozen_oov_apply_census(
     join if a 100 TB vocabulary outgrows the threshold), the 10-deep
     merge fold over DISTINCT OOV tokens only, and the bounded
     char-inventory anti-join.  No corpus window, no pair stage."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "text",
-        md5_mod("bfo:", F.col("doc_id"), 5).alias("fold"),
-    )
-    tr = d.where(F.col("fold") != 0)
-    # Seeded OOV arm (registry fixture convention — the synthetic
-    # corpus's templated vocabulary is fully covered by the 80% fold,
-    # so without a plant the OOV path would be vacuously green at
-    # every tier): a quarter of held-out docs gain 'qv'-repeat tokens
-    # (OOV spelled entirely in training-inventory characters — the
-    # pure merge-fold path) and 'xz'-repeat tokens ('x'/'z' never
-    # appear in the corpus alphabet — the unseen-character fallback).
-    # Organic OOV, when the data has it, counts identically.
-    te = d.where(F.col("fold") == 0).select(
-        "lang",
-        F.when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.col("text"),
-                F.lit(" "),
-                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
-                F.lit(" x"),
-                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
+    tr, hw = _heldout_fold(spark, sf_dir, "bfo:")
     merges, vocab = _bpe_merge_loop(spark, sf_dir, docs=tr)
     pieces = vocab.select("tok", F.size("syms").alias("np"))
     chars = F.expr("filter(split(tok, ''), x -> x != '')")
     inv = (
         vocab.select(F.explode(chars).alias("sym"))
         .distinct()
-        .localCheckpoint()
-    )
-    hw = (
-        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
         .localCheckpoint()
     )
     j = hw.join(pieces, "tok", "left")
@@ -5150,52 +5078,10 @@ def unigram_frozen_oov_apply_census(
     cnt); the frozen map join and the OOV-remainder DP are both
     vocabulary-bounded; one per-language census.  No corpus window,
     no pair stage."""
-    from big_data_lab_three_spark.functions.numeric import md5_mod
-
-    d = table(spark, sf_dir, "documents").select(
-        "doc_id",
-        "lang",
-        "text",
-        md5_mod("ufo:", F.col("doc_id"), 5).alias("fold"),
-    )
-    tr = d.where(F.col("fold") != 0)
-    te = d.where(F.col("fold") == 0).select(
-        "lang",
-        F.when(
-            F.col("doc_id") % 4 == 2,
-            F.concat(
-                F.col("text"),
-                F.lit(" "),
-                F.expr("repeat('qv', CAST(1 + doc_id % 3 AS INT))"),
-                F.lit(" x"),
-                F.expr("repeat('z', CAST(1 + doc_id % 2 AS INT))"),
-            ),
-        )
-        .otherwise(F.col("text"))
-        .alias("text"),
-    )
-
-    toks_tr, pc_tr, dp1 = _ulm_dp_frame(spark, sf_dir, docs=tr)
-    tb = _ulm_traceback_pieces(dp1)
-    m = (
-        tb.select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-        .localCheckpoint()
-    )
-    allp, chars = _ulm_inventory(pc_tr)
-    s2 = _ulm_rescore(m, allp, chars)
-    dp2 = _ulm_dp_from_scores(pc_tr, s2)
-    pieces = dp2.select(
-        F.col("w").alias("tok"),
-        F.expr("(- bfin) % 16").alias("np_map"),
-    )
-
-    hw = (
-        te.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("lang", "tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .localCheckpoint()
+    tr, hw = _heldout_fold(spark, sf_dir, "ufo:")
+    toks_tr, s2, dp2, _hist = _ulm_train(spark, tr, 2)
+    pieces = _ulm_seg(dp2).select(
+        F.col("w").alias("tok"), F.col("bp").alias("np_map")
     )
     vocab_flag = toks_tr.select(
         F.col("w").alias("tok"), F.lit(True).alias("in_vocab")
@@ -5209,7 +5095,9 @@ def unigram_frozen_oov_apply_census(
         .distinct()
         .withColumn("cnt", F.lit(1).cast("long"))
     )
-    hdp = _ulm_dp_from_scores(_ulm_piece_occurrences(oov_words), s2)
+    hdp = _ulm_dp_from_scores(
+        _ulm_piece_occurrences(oov_words), s2
+    ).localCheckpoint()  # pins b0..b8 (see _ulm_dp_from_scores)
     oov_seg = hdp.select(
         F.col("w").alias("tok"),
         F.when(

@@ -243,10 +243,14 @@ def create_app(sf_dir: str = "/root/testdata/sf0.001"):
             raise HTTPException(status_code=500, detail=str(e)) from e
 
     @app.post("/predict/")
-    async def predict(mode: str = "smoke", file: UploadFile | None = None):
+    async def predict(
+        mode: str = "smoke",
+        model_type: str = "d_tree",
+        file: UploadFile | None = None,
+    ):
         try:
             contents = await file.read() if file is not None else None
-            return service.predict(mode, file_contents=contents)
+            return service.predict(mode, model_type, file_contents=contents)
         except ValueError as e:
             raise HTTPException(status_code=400, detail=str(e)) from e
         except Exception as e:  # noqa: BLE001

@@ -88,6 +88,57 @@ def test_cli_train_and_predict(tmp_path, monkeypatch, capsys):
     assert out["model"] == "gnb" and 0.0 <= out["test_score"] <= 1.0
 
 
+def test_http_predict_forwards_the_model_type(monkeypatch):
+    """``POST /predict/`` takes ``model_type`` like ``/train/`` and
+    scores that model, in both modes; it defaults to ``d_tree``.
+    FastAPI is optional, so a stub module captures the route functions
+    and a stub service records what the handler asks of it."""
+    import asyncio
+    import sys
+    import types
+
+    from big_data_lab_three_spark.serve import app as serve_app
+
+    routes = {}
+
+    class FastAPI:
+        def __init__(self, **kwargs):
+            pass
+
+        def post(self, path):
+            return lambda fn: routes.setdefault(path, fn)
+
+    class Upload:
+        async def read(self):
+            return b"csv"
+
+    calls = []
+
+    class Service:
+        def __init__(self, sf_dir):
+            pass
+
+        def predict(self, mode, model_type="d_tree", file_contents=None):
+            calls.append((mode, model_type, file_contents))
+            return {}
+
+    fastapi = types.ModuleType("fastapi")
+    fastapi.FastAPI, fastapi.HTTPException = FastAPI, Exception
+    fastapi.UploadFile = Upload
+    monkeypatch.setitem(sys.modules, "fastapi", fastapi)
+    monkeypatch.setattr(serve_app, "Service", Service)
+    serve_app.create_app()
+    predict = routes["/predict/"]
+    asyncio.run(predict(mode="upload", model_type="gnb", file=Upload()))
+    asyncio.run(predict(model_type="rand_forest"))
+    asyncio.run(predict())
+    assert calls == [
+        ("upload", "gnb", b"csv"),
+        ("smoke", "rand_forest", None),
+        ("smoke", "d_tree", None),
+    ]
+
+
 @pytest.fixture(scope="module")
 def service(tmp_path_factory):
     """One serving core shared by the module's serve tests (building

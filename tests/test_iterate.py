@@ -3,6 +3,7 @@ checkpoint, cap, tag and release their rounds through it alone."""
 
 from __future__ import annotations
 
+import ast
 import pathlib
 import re
 
@@ -30,18 +31,38 @@ def test_loop_query_releases_superseded_rounds(spark, sf_dir, name):
     assert len(left) <= 3, f"{name} left {len(left)} persisted RDDs"
 
 
-def test_loop_rounds_tag_their_jobs_and_restore_the_caller(spark):
+def _path_components(spark, sf_dir):
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
+    )
+    return connected_components(pairs)
+
+
+def _unigram_convergence(spark, sf_dir):
+    return load_all()["unigram_lm_convergence"].spark(spark, sf_dir)
+
+
+@pytest.mark.parametrize(
+    "build, loop, rounds",
+    [
+        # a 4-node path converges in 3 rounds; round 4 sees no change
+        (_path_components, "connected_components", 4),
+        (_unigram_convergence, "unigram_em", 3),
+    ],
+    ids=["connected_components", "unigram_em"],
+)
+def test_loop_rounds_tag_their_jobs_and_restore_the_caller(
+    spark, sf_dir, build, loop, rounds
+):
     """Every job a round launches is described ``"<loop> round <r>"``;
     the caller's job group covers the loop and comes back unchanged,
     and so does its description."""
     sc = spark.sparkContext
-    pairs = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4)], "id_a long, id_b long"
-    )
-    sc.setJobGroup("iterate-tagging", "caller")
+    group = f"iterate-tagging-{loop}"
+    sc.setJobGroup(group, "caller")
     try:
-        connected_components(pairs).collect()
-        assert sc.getLocalProperty("spark.jobGroup.id") == "iterate-tagging"
+        build(spark, sf_dir).collect()
+        assert sc.getLocalProperty("spark.jobGroup.id") == group
         assert sc.getLocalProperty("spark.job.description") == "caller"
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
@@ -49,12 +70,11 @@ def test_loop_rounds_tag_their_jobs_and_restore_the_caller(spark):
     jsc = sc._jsc.sc()
     jsc.listenerBus().waitUntilEmpty()
     descs = set()
-    for job in sc.statusTracker().getJobIdsForGroup("iterate-tagging"):
+    for job in sc.statusTracker().getJobIdsForGroup(group):
         d = jsc.statusStore().job(job).description()
         descs.add(d.get() if d.isDefined() else None)
-    # a 4-node path converges in 3 rounds; round 4 sees no change
-    rounds = {f"connected_components round {r}" for r in range(1, 5)}
-    assert descs == rounds | {"caller"}
+    tags = {f"{loop} round {r}" for r in range(1, rounds + 1)}
+    assert descs == tags | {"caller"}
 
 
 def test_lazy_checkpoints_only_in_the_loop_driver():
@@ -71,3 +91,38 @@ def test_lazy_checkpoints_only_in_the_loop_driver():
         if lazy.search(line)
     ]
     assert not sites, f"lazy checkpoint outside the loop driver: {sites}"
+
+
+_CACHING = {"localCheckpoint", "persist", "cache"}
+
+
+def _caches_in_loops(pkg: pathlib.Path) -> list[str]:
+    """``path:line`` of every ``localCheckpoint``/``persist``/``cache``
+    call inside a ``for``/``while`` body of ``pkg``, the loop driver
+    excepted."""
+    driver = pkg / "operators" / "iterate.py"
+    sites = []
+    for path in sorted(pkg.rglob("*.py")):
+        if path == driver:
+            continue
+        for loop in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(loop, (ast.For, ast.While)):
+                continue
+            for node in (n for s in loop.body for n in ast.walk(s)):
+                if (
+                    isinstance(node, ast.Call)
+                    and isinstance(node.func, ast.Attribute)
+                    and node.func.attr in _CACHING
+                ):
+                    line = node.func.end_lineno  # the method name's line
+                    sites.append(f"{path.relative_to(pkg)}:{line}")
+    return sorted(set(sites))
+
+
+def test_loops_cache_only_through_the_loop_driver():
+    """README rule 6: a loop keeps its per-round state only through
+    ``Rounds.checkpoint``, which caps, tags and releases the rounds.
+    A loop body that checkpoints, persists or caches by itself keeps
+    every round alive and re-implements the driver."""
+    sites = _caches_in_loops(PKG)
+    assert not sites, f"loop state cached outside the loop driver: {sites}"

@@ -62,9 +62,7 @@ ALLOWED_PARAMS = {
 }
 
 # Functions no Python code references, keyed "<module>.<function>".
-ALLOWED_FUNCTIONS = {
-    "serve.app.create_app": "ASGI factory, started by name: uvicorn --factory ...:create_app",
-}
+ALLOWED_FUNCTIONS: dict[str, str] = {}
 
 
 def _files(path: Path) -> list[Path]:
