@@ -1,6 +1,7 @@
-"""The one driver for the engine's iterative Spark loops (BPE merge,
-unigram-LM EM, k-core peel, Lloyd k-means, both connected-components
-loops, PageRank).
+"""The one driver for the engine's iterative Spark loops (unigram-LM EM,
+k-core peel, Lloyd k-means, both connected-components loops, PageRank).
+BPE training is not one of them: its rounds run inside one grouped-map
+task over the vocabulary (``queries/corpus._bpe_train``).
 
 :class:`Rounds` owns the per-round policy they share:
 

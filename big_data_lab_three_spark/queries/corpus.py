@@ -13,6 +13,8 @@ iterative oracles per ``queries/graph.py``'s pagerank_check).
 
 from __future__ import annotations
 
+from collections import Counter
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -28,108 +30,115 @@ log = get_logger(__name__)
 
 _BPE_K = 10
 
+# The training stage's one output.  A merge row is the merged token, its
+# pre-merge pair count and its two symbols [left, right] under its rank;
+# a segmentation row has no rank.
+_BPE_STAGE = (
+    "merge_rank int, tok string, cnt long, syms array<string>, "
+    "unseen boolean"
+)
 
-def _bpe_vocab(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
-    """The word-frequency table BPE trains on: ONE corpus token scan
-    collapsed to (tok, cnt, syms) where ``syms`` is the initial
-    character segmentation.  Everything after this is
-    vocabulary-bounded (Zipf), never corpus-sized — the property that
-    makes the 10-round loop scale-free: at 100 TB the corpus scan is
-    one combiner-friendly groupBy and the loop state is still only the
-    vocabulary.  ``docs`` overrides the source frame (r14: the frozen-
-    vocab census trains on an md5 fold, not the whole table)."""
-    words = (
-        (docs if docs is not None else table(spark, sf_dir, "documents"))
-        .select(F.explode(tokens(F.col("text"))).alias("tok"))
+
+def _bpe_words(docs: DataFrame) -> DataFrame:
+    """The word-frequency table BPE trains on: one token scan of
+    ``docs`` collapsed to (tok, cnt)."""
+    return (
+        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("tok")
         .agg(F.count(F.lit(1)).alias("cnt"))
     )
-    return words.select(
-        "tok",
-        "cnt",
-        F.expr("filter(split(tok, ''), x -> x != '')").alias("syms"),
-    )
 
 
-def _bpe_merge_loop(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int = _BPE_K,
-    docs: DataFrame | None = None,
-):
-    """Run the K-merge BPE training loop; returns ``(merges, vocab)``
-    where ``merges`` is the list of (rank, left, right, merged, cnt)
-    rows and ``vocab`` is the final segmented vocabulary DataFrame.
+def _bpe_merge(syms: list[str], a: str, b: str) -> list[str]:
+    """Sennrich's greedy left-to-right NON-OVERLAPPING merge of the pair
+    (a, b): a consumed position becomes ``a+b`` and is never matched
+    again, so [a,a,a] under (a,a) yields [aa,a] and [a,b,a,b] under
+    (a,b) yields [ab,ab] (pinned by ``tests/test_llm_ops.py``)."""
+    out: list[str] = []
+    i = 0
+    while i < len(syms):
+        if syms[i] == a and i + 1 < len(syms) and syms[i + 1] == b:
+            out.append(a + b)
+            i += 2
+        else:
+            out.append(syms[i])
+            i += 1
+    return out
 
-    Loop shape per round: one pair-explode + combiner groupBy on the
-    vocabulary, ONE driver-side ``first()`` for the argmax pair (1 row
-    × K rounds — the same bounded driver materialization as the IVF
-    codebook sample), then the greedy non-overlapping merge as a pure
-    ``aggregate`` fold over each word's symbol array (left-to-right,
-    exactly Sennrich's merge: a consumed symbol becomes the merged
-    token, which can never equal the left symbol again, so the
-    last-element check IS the non-overlap rule).  The vocabulary is
-    checkpointed per round (:class:`Rounds`) — bounded state, so the
-    plan never compounds across rounds; each round's checkpoint
-    materializes inside the next round's argmax job."""
-    vocab = _bpe_vocab(spark, sf_dir, docs=docs).localCheckpoint()
-    merges: list[tuple] = []
-    rounds = Rounds(spark, "bpe_merge", k)
-    for rank in rounds:
-        n = F.size("syms")
-        pairs = (
-            vocab.where(n >= 2)
-            .select(
-                "cnt",
-                F.explode(
-                    F.zip_with(
-                        F.slice("syms", 1, n - 1),
-                        F.slice("syms", 2, n - 1),
-                        lambda a, b: F.struct(a.alias("a"), b.alias("b")),
-                    )
-                ).alias("p"),
-            )
-            .groupBy("p.a", "p.b")
-            .agg(F.sum("cnt").alias("c"))
-        )
-        top = pairs.orderBy(F.desc("c"), "a", "b").first()
-        if top is None:
+
+def _bpe_fit(words: dict[str, int], k: int, apply=()):
+    """K rounds of BPE training over a {tok: cnt} vocabulary; returns
+    ``(merges, segs)``: the (rank, left, right, merged, pair_cnt) rows
+    and the final symbols of every training word and ``apply`` token.
+
+    A round counts adjacent symbol pairs weighted by word count, takes
+    the argmax on (count DESC, left, right) and merges it everywhere;
+    training ends early when no word has two symbols left.  Python
+    orders strings by code point, which is Spark's UTF-8 byte order and
+    DuckDB's, so ties fall as in the exact-integer oracle.  ``apply``
+    tokens get every merge in rank order but never count toward a
+    pair: a frozen tokenizer's held-out text."""
+    segs = {t: list(t) for t in [*words, *apply]}
+    merges = []
+    for rank in range(1, k + 1):
+        pairs: Counter = Counter()
+        for w, c in words.items():
+            for p in zip(segs[w], segs[w][1:]):
+                pairs[p] += c
+        if not pairs:
             break
-        a, b, c = top["a"], top["b"], int(top["c"])
+        (a, b), c = min(pairs.items(), key=lambda pc: (-pc[1], pc[0]))
         merges.append((rank, a, b, a + b, c))
-        vocab = rounds.checkpoint(
-            vocab.select(
-                "tok", "cnt", bpe_merge_expr("syms", a, b).alias("syms")
-            )
+        segs = {t: _bpe_merge(syms, a, b) for t, syms in segs.items()}
+    return merges, segs
+
+
+def _bpe_train(words: DataFrame, k: int, apply: DataFrame | None = None):
+    """BPE training as ONE grouped-map stage over the (tok, cnt)
+    ``words``: :func:`_bpe_fit` runs all K rounds executor-side, so the
+    constructor launches no job and ``explain()`` shows the whole
+    query.  Returns two lazy frames cut from the stage's one output:
+    the merge table (merge_rank, left_sym, right_sym, merged, pair_cnt)
+    and the segmentation (tok, cnt, syms, unseen) of every training
+    word.  ``apply`` adds apply-only (tok) rows: they come back with
+    ``cnt`` 0, the trained merges applied, and ``unseen`` set when a
+    character is missing from the training words.
+
+    Scale trade-off: the loop holds while the vocabulary fits one task.
+    The corpus scan before it is one combiner-friendly groupBy, and
+    vocabulary grows sublinearly with the corpus (Heaps' law);
+    ``tests/test_llm_ops.py`` trains 10^5 types."""
+    rows = words.select("tok", "cnt")
+    if apply is not None:
+        rows = rows.unionByName(
+            apply.select("tok", F.lit(0).cast("long").alias("cnt"))
         )
-    return merges, vocab
 
+    def stage(pdf):
+        import pandas as pd
 
-def bpe_merge_expr(syms, a: str, b: str):
-    """Greedy left-to-right NON-OVERLAPPING merge of the symbol pair
-    (a, b) in a symbol array, as a pure fold expression: append each
-    symbol unless the accumulator's last element is ``a`` and the
-    current is ``b``, in which case replace the last element with
-    ``a+b``.  This IS Sennrich's merge: a consumed position becomes
-    the merged token, which can never equal ``a`` again (``b`` is
-    non-empty), so runs like [a,a,a] under (a,a) yield [aa,a] and
-    [a,b,a,b] under (a,b) yields [ab,ab] — pinned by
-    ``tests/test_llm_ops.py``."""
-    return F.aggregate(
-        syms,
-        F.expr("CAST(array() AS array<string>)"),
-        lambda acc, s: F.when(
-            (F.size(acc) > 0)
-            & (F.element_at(acc, -1) == F.lit(a))
-            & (s == F.lit(b)),
-            F.concat(
-                F.slice(acc, 1, F.size(acc) - 1),
-                F.array(F.lit(a + b)),
-            ),
-        ).otherwise(F.concat(acc, F.array(s))),
+        train = pdf[pdf["cnt"] > 0]
+        vocab = dict(zip(train["tok"], train["cnt"].tolist()))
+        merges, segs = _bpe_fit(vocab, k, pdf["tok"][pdf["cnt"] == 0])
+        chars = set("".join(vocab))
+        return pd.DataFrame(
+            [(r, m, c, [a, b], False) for r, a, b, m, c in merges]
+            + [
+                (None, t, vocab.get(t, 0), syms, not chars.issuperset(t))
+                for t, syms in segs.items()
+            ],
+            columns=["merge_rank", "tok", "cnt", "syms", "unseen"],
+        )
+
+    out = rows.groupBy().applyInPandas(stage, _BPE_STAGE)
+    merges = out.where(F.col("merge_rank").isNotNull()).select(
+        "merge_rank",
+        F.col("syms")[0].alias("left_sym"),
+        F.col("syms")[1].alias("right_sym"),
+        F.col("tok").alias("merged"),
+        F.col("cnt").alias("pair_cnt"),
     )
+    return merges, out.where(F.col("merge_rank").isNull()).drop("merge_rank")
 
 
 def _bpe_oracle_rounds(k: int = _BPE_K, src: str = "documents") -> str:
@@ -242,17 +251,12 @@ def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     value hash pins every rank's pair AND its pre-merge count.
 
     Scale shape: ONE corpus token scan collapses to the word-frequency
-    table; every loop round is vocabulary-bounded (pair explode +
-    combiner groupBy + 1-row driver argmax + fold-merge projection,
-    localCheckpoint'ed bounded state).  At 100 TB the corpus scan
-    dominates and runs once; the loop cost is independent of corpus
-    size."""
-    merges, _ = _bpe_merge_loop(spark, sf_dir)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, "
-        "merged string, pair_cnt long",
-    ).orderBy("merge_rank")
+    table; all 10 rounds then run in one vocabulary-sized grouped-map
+    task (:func:`_bpe_train`).  At 100 TB the corpus scan dominates
+    and runs once; the loop cost is independent of corpus size."""
+    docs = table(spark, sf_dir, "documents")
+    merges, _ = _bpe_train(_bpe_words(docs), _BPE_K)
+    return merges.orderBy("merge_rank")
 
 
 @register(
@@ -288,16 +292,18 @@ def bpe_segment_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     All counts are exact integers weighted by word frequency; the
     compression ratio is an integer micro-unit division.
 
-    Scale shape: shares ``bpe_train_merges``'s loop (one corpus scan,
+    Scale shape: shares ``bpe_train_merges``'s stage (one corpus scan,
     vocabulary-bounded rounds); the census itself is two 1-row
-    aggregates over the vocabulary joined by a broadcast cross —
-    output is exactly one row."""
-    _, vocab = _bpe_merge_loop(spark, sf_dir)
-    before = _bpe_vocab(spark, sf_dir).agg(
+    aggregates joined by a broadcast cross — ``before`` over the same
+    (tok, cnt) table the stage trains on, ``after`` over its
+    segmentation — output is exactly one row."""
+    words = _bpe_words(table(spark, sf_dir, "documents"))
+    _, seg = _bpe_train(words, _BPE_K)
+    before = words.agg(
         F.sum("cnt").alias("n_tokens"),
         F.sum(F.col("cnt") * F.length("tok")).alias("syms_before"),
     )
-    after = vocab.select(
+    after = seg.select(
         "cnt", F.explode("syms").alias("sym")
     ).agg(
         F.sum("cnt").alias("syms_after"),
@@ -726,16 +732,16 @@ def bpe_fertility_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: the corpus contributes one (lang, tok) rollup; the
     trained segmentation contributes a vocabulary-sized (tok →
     n_symbols) map joined BROADCAST onto it — the corpus is never
-    rescanned per language, and the loop cost is shared with
-    ``bpe_train_merges`` by construction."""
-    _, vocab = _bpe_merge_loop(spark, sf_dir)
+    rescanned per language, and the training stage is
+    ``bpe_train_merges``'s by construction."""
+    docs = table(spark, sf_dir, "documents")
+    _, seg = _bpe_train(_bpe_words(docs), _BPE_K)
     wl = (
-        table(spark, sf_dir, "documents")
-        .select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
+        docs.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
-    f = vocab.select("tok", F.size("syms").alias("ns"))
+    f = seg.select("tok", F.size("syms").alias("ns"))
     return (
         wl.join(F.broadcast(f), "tok")
         .groupBy("lang")
@@ -2052,20 +2058,20 @@ def byte_fallback_census(spark: SparkSession, sf_dir: str) -> DataFrame:
     Exact integers throughout (weighted counts, byte totals,
     micro-unit shares); the vocabulary cut ties break on the symbol.
 
-    Scale shape: shares the BPE loop's vocabulary state; the corpus
-    contributes one (lang, tok) rollup; everything after is
+    Scale shape: shares the BPE training stage's segmentation; the
+    corpus contributes one (lang, tok) rollup; everything after is
     vocabulary-sized joins, with the 16-row cap table broadcast."""
     from pyspark.sql import Window
 
-    _, vocab = _bpe_merge_loop(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
+    _, seg = _bpe_train(_bpe_words(docs), _BPE_K)
     wl = (
-        table(spark, sf_dir, "documents")
-        .select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
+        docs.select("lang", F.explode(tokens(F.col("text"))).alias("tok"))
         .groupBy("lang", "tok")
         .agg(F.count(F.lit(1)).alias("c"))
     )
     fsy = (
-        vocab.select("tok", F.explode("syms").alias("sym"))
+        seg.select("tok", F.explode("syms").alias("sym"))
         .groupBy("tok", "sym")
         .agg(F.count(F.lit(1)).alias("m"))
     )
@@ -3672,30 +3678,30 @@ def bpe_corpus_apply_census(
 
     The apply itself is MEMOIZED segmentation — the standard
     production shape (SentencePiece/fastText cache word → pieces):
-    the training loop already holds the final segmentation of every
+    the training stage already holds the final segmentation of every
     DISTINCT token, so the corpus stream hash-joins that
     vocabulary-bounded (tok → n_pieces) map instead of re-running the
-    10-merge fold per corpus token; ``bpe_merge_expr`` remains the
-    per-token fold for out-of-vocabulary application (exercised by
-    ``tests/test_llm_ops.py``), and for corpus tokens the join is
-    exact by construction (the vocabulary came from the same scan).
+    10 merges per corpus token; out-of-vocabulary application is
+    ``bpe_frozen_oov_apply_census``'s, and for corpus tokens the join
+    is exact by construction (the vocabulary came from the same scan).
 
     All counts are exact integers; ratios are integer micro-unit
     divisions (``div``/``//`` on both engines) — no float anywhere.
 
     Scale shape: ONE corpus token scan (shared shape with training's
     frequency scan), one join against the Zipf-bounded piece map —
-    UNHINTED (ADVICE r13): the localCheckpoint'ed map's known size
-    lets the planner broadcast it at driver tiers, while a vocabulary
-    that ever outgrew ``autoBroadcastJoinThreshold`` at 100 TB would
+    UNHINTED (ADVICE r13): the map's estimated size lets the planner
+    broadcast it at driver tiers, while a vocabulary that ever
+    outgrew ``autoBroadcastJoinThreshold`` at 100 TB would
     legitimately fall back to a shuffled hash join on the bounded
     table instead of being forced through driver memory — one per-doc
     combiner rollup keyed by the document, one per-language census.
     No corpus-partitioned window, no pair stage, loop cost shared
     with ``bpe_train_merges``."""
-    _, vocab = _bpe_merge_loop(spark, sf_dir)
+    docs = table(spark, sf_dir, "documents")
+    _, seg = _bpe_train(_bpe_words(docs), _BPE_K)
     return _apply_census(
-        spark, sf_dir, vocab.select("tok", F.size("syms").alias("np"))
+        spark, sf_dir, seg.select("tok", F.size("syms").alias("np"))
     )
 
 
@@ -4647,8 +4653,8 @@ def _bpe_oracle_apply_rounds(k: int = _BPE_K) -> str:
     from the held-out text; the tokenizer is FROZEN) with the same
     run-parity greedy non-overlap selection, emitting ``h{r}``.  The
     OOV production path: a held-out token the training fold never saw
-    still flows through every merge left-to-right, exactly like
-    ``bpe_merge_expr``'s per-token fold on the Spark side."""
+    still flows through every merge left-to-right, exactly like the
+    apply-only rows of ``_bpe_train`` on the Spark side."""
     parts = []
     for r in range(1, k + 1):
         prev = f"h{r - 1}"
@@ -4786,29 +4792,33 @@ def bpe_frozen_oov_apply_census(
     held-out docs (same fixture convention as the dedup/TTL cohorts —
     both engines render it from the same expressions): 'qv'-repeat
     tokens spelled in training-inventory characters exercise the pure
-    merge-fold path, 'xz'-repeat tokens ('x'/'z' are outside the
+    frozen-merge path, 'xz'-repeat tokens ('x'/'z' are outside the
     corpus alphabet) exercise the unseen-character fallback; organic
     OOV counts identically when the data has it.
 
     Two segmentation paths, both exercised at corpus grain:
 
-    - IN-VOCAB: the held-out (lang, tok, cnt) stream joins the frozen
-      memoized (tok → n_pieces) map — the fast path a production
+    - IN-VOCAB: a held-out token the training fold has keeps its
+      memoized training segmentation — the fast path a production
       tokenizer serves from its cache.
-    - OOV: tokens the join misses take the REAL fold path — the 10
-      frozen merges applied left-to-right via ``bpe_merge_expr`` over
-      the character segmentation, exactly Sennrich apply.  A character
-      the training fold never saw simply survives as a singleton
-      symbol (the char-level analogue of byte fallback) and is counted
-      in ``n_unseen_char_tokens``.
+    - OOV: the held-out tokens ride into the training stage as
+      apply-only rows (``_bpe_train``'s ``apply``): they never count
+      toward a pair, and each one the training words lack gets the 10
+      frozen merges left-to-right over its characters, exactly
+      Sennrich apply.  A character the training fold never saw simply
+      survives as a singleton symbol (the char-level analogue of byte
+      fallback); the same stage flags such tokens against the training
+      character inventory, and they are counted in
+      ``n_unseen_char_tokens``.
 
     The oracle replays training on the train fold (chained CTEs),
     then replays the FROZEN merge ranks over the held-out span table
     (``_bpe_oracle_apply_rounds`` — t{{r}} is read, never re-derived)
     and computes every census column from that single ground-truth
-    segmentation — so the hash ALSO proves the memoized join and the
-    fold path agree on in-vocab tokens (the memoization-validity
-    property, now oracle-checked rather than asserted).
+    segmentation — so the hash ALSO proves that a training word's
+    memoized segmentation equals the frozen merges replayed on it (the
+    memoization-validity property, oracle-checked rather than
+    asserted).
 
     Census per language: held-out token count, OOV count + micro rate,
     pieces via each path, fertility (pieces per token, micro) split by
@@ -4819,48 +4829,21 @@ def bpe_frozen_oov_apply_census(
     Scale shape: one train-fold token scan (the training chain's),
     one held-out token scan collapsed to (lang, tok, cnt) — both scan
     predicates on the same table — then everything is
-    vocabulary-bounded: the frozen map join (planner broadcasts the
-    localCheckpoint'ed known-size map at driver tiers, shuffled hash
-    join if a 100 TB vocabulary outgrows the threshold), the 10-deep
-    merge fold over DISTINCT OOV tokens only, and the bounded
-    char-inventory anti-join.  No corpus window, no pair stage."""
+    vocabulary-bounded: one training stage over the train-fold
+    vocabulary plus the held-out tokens, and one join of the held-out
+    stream against its segmentation (broadcast at driver tiers,
+    shuffled hash join if a 100 TB vocabulary outgrows the
+    threshold).  No corpus window, no pair stage."""
     tr, hw = _heldout_fold(spark, sf_dir, "bfo:")
-    merges, vocab = _bpe_merge_loop(spark, sf_dir, docs=tr)
-    pieces = vocab.select("tok", F.size("syms").alias("np"))
-    chars = F.expr("filter(split(tok, ''), x -> x != '')")
-    inv = (
-        vocab.select(F.explode(chars).alias("sym"))
-        .distinct()
-        .localCheckpoint()
-    )
-    j = hw.join(pieces, "tok", "left")
-    oov_toks = (
-        j.where(F.col("np").isNull()).select("tok").distinct()
-    )
-    fold_expr = chars
-    for _rank, a, b, _m, _c in merges:
-        fold_expr = bpe_merge_expr(fold_expr, a, b)
-    oov_pieces = oov_toks.select(
-        "tok", F.size(fold_expr).alias("np_oov")
-    ).localCheckpoint()
-    oov_unseen = (
-        oov_toks.select("tok", F.explode(chars).alias("sym"))
-        .join(inv, "sym", "left_anti")
-        .select("tok")
-        .distinct()
-        .withColumn("has_unseen", F.lit(True))
-        .localCheckpoint()
-    )
-    flat = (
-        j.join(oov_pieces, "tok", "left")
-        .join(oov_unseen, "tok", "left")
-        .select(
-            "lang",
-            "cnt",
-            F.col("np").isNull().alias("is_oov"),
-            F.coalesce("np", "np_oov").cast("long").alias("npc"),
-            F.coalesce("has_unseen", F.lit(False)).alias("unseen"),
-        )
+    _, seg = _bpe_train(_bpe_words(tr), _BPE_K, apply=hw)
+    flat = hw.join(
+        seg.select(
+            "tok",
+            (F.col("cnt") == 0).alias("is_oov"),
+            F.size("syms").cast("long").alias("npc"),
+            F.col("unseen"),
+        ),
+        "tok",
     )
     zero = F.lit(0).cast("long")
     agg = flat.groupBy("lang").agg(
@@ -4920,31 +4903,26 @@ ORDER BY merge_rank
 )
 def bpe_train_merges_k50(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE training at PRODUCTION merge depth (r13 verdict item 6) —
-    the same loop as ``bpe_train_merges`` continued to K=50, emitting
-    the full 50-rank merge table.  The point being proven is the cost
-    model, not new mechanics: every round is vocabulary-bounded (pair
-    explode + combiner groupBy + 1-row driver argmax + fold-merge
-    projection over localCheckpoint'ed bounded state), so per-round
-    wall-time stays FLAT as the rank grows — measured ~0.5s/round on
-    an idle local[32] at sf0.01 with no upward trend from rank 1 to 50
-    (EXPERIMENTS.md r14) — and the corpus scan still runs exactly
-    once.  At a real 100 TB tier the scan dominates and rounds 2..K
-    cost the same as round 1: the property that makes 32k-merge
-    production vocabularies a driver-loop, not a corpus-loop.
+    the same training stage as ``bpe_train_merges`` continued to K=50,
+    emitting the full 50-rank merge table.  The point being proven is
+    the cost model, not new mechanics: every round is
+    vocabulary-bounded (one weighted pair count and one merge pass over
+    the vocabulary inside the one grouped-map task), and the corpus
+    scan still runs exactly once.  At a real 100 TB tier the scan
+    dominates and rounds 2..K cost the same as round 1: the property
+    that makes 32k-merge production vocabularies a vocabulary loop,
+    not a corpus loop.
 
     The oracle replays all 50 rounds as chained CTEs (the
     ``_bpe_oracle_rounds`` machinery at k=50 — full replay, stronger
     than witness-checking the tail rounds; ~6-20s in DuckDB since the
     span tables are vocabulary-bounded too).  If the corpus exhausts
     mergeable pairs before rank 50 both engines emit only the realized
-    ranks (the Spark loop breaks on an empty argmax; the oracle's
+    ranks (the trainer stops when no pair is left; the oracle's
     empty t{{r}} contributes no UNION arm rows)."""
-    merges, _ = _bpe_merge_loop(spark, sf_dir, k=_BPE_K50)
-    return spark.createDataFrame(
-        merges,
-        "merge_rank int, left_sym string, right_sym string, "
-        "merged string, pair_cnt long",
-    ).orderBy("merge_rank")
+    docs = table(spark, sf_dir, "documents")
+    merges, _ = _bpe_train(_bpe_words(docs), _BPE_K50)
+    return merges.orderBy("merge_rank")
 
 
 # Fallback separator: one sentinel piece in the best path drags the

@@ -19,16 +19,47 @@ def _persisted(spark) -> set:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
 
-@pytest.mark.parametrize("name", ["bpe_train_merges_k50", "kcore_peel_census"])
-def test_loop_query_releases_superseded_rounds(spark, sf_dir, name):
-    """``clearCache()`` does not free checkpoints, so a loop that kept
-    every round would leave one RDD per round behind.  Only the state
-    made before the loop and its last rounds may stay."""
+def _left_persisted(spark, sf_dir, name) -> set:
+    """RDDs a query leaves persisted after ``collect()`` + ``clearCache()``."""
     before = _persisted(spark)
     load_all()[name].spark(spark, sf_dir).collect()
     spark.catalog.clearCache()
-    left = _persisted(spark) - before
-    assert len(left) <= 3, f"{name} left {len(left)} persisted RDDs"
+    return _persisted(spark) - before
+
+
+@pytest.mark.parametrize(
+    "name, kept",
+    [
+        # the pair input, edges and seed labels, the result and the
+        # last round; with no release its superseded rounds make it 6
+        ("cc_star_census", 5),
+        ("kcore_peel_census", 3),
+    ],
+    ids=["cc_star_census", "kcore_peel_census"],
+)
+def test_loop_query_releases_superseded_rounds(spark, sf_dir, name, kept):
+    """``clearCache()`` does not free checkpoints, so a loop that kept
+    every round would leave one RDD per round behind.  Only the state
+    made outside the loop and its last rounds may stay."""
+    left = _left_persisted(spark, sf_dir, name)
+    assert len(left) <= kept, f"{name} left {len(left)} persisted RDDs"
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "bpe_train_merges",
+        "bpe_train_merges_k50",
+        "bpe_segment_census",
+        "bpe_fertility_by_lang",
+        "bpe_corpus_apply_census",
+    ],
+)
+def test_bpe_training_persists_nothing(spark, sf_dir, name):
+    """BPE trains inside one grouped-map stage, so a name whose only
+    state was the merge loop leaves no persisted RDD behind."""
+    left = _left_persisted(spark, sf_dir, name)
+    assert not left, f"{name} left {len(left)} persisted RDDs"
 
 
 def _path_components(spark, sf_dir):

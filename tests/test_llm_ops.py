@@ -459,12 +459,12 @@ def test_span_mask_apply_matches_decontaminate_extents(spark, sf_dir):
     assert ext == msk
 
 
-def test_bpe_merge_fold_is_greedy_nonoverlapping(spark):
-    """The BPE merge fold must implement Sennrich's greedy
-    left-to-right non-overlapping replacement exactly: runs of the
-    merged pair collapse every OTHER position, and a merged token
-    never re-matches as the left symbol."""
-    from big_data_lab_three_spark.queries.corpus import bpe_merge_expr
+def test_bpe_merge_fold_is_greedy_nonoverlapping():
+    """The BPE merge must implement Sennrich's greedy left-to-right
+    non-overlapping replacement exactly: runs of the merged pair
+    collapse every OTHER position, and a merged token never re-matches
+    as the left symbol."""
+    from big_data_lab_three_spark.queries.corpus import _bpe_merge
 
     cases = [
         (["a", "a", "a"], "a", "a", ["aa", "a"]),
@@ -475,21 +475,19 @@ def test_bpe_merge_fold_is_greedy_nonoverlapping(spark):
         (["b", "a"], "a", "b", ["b", "a"]),
         (["ab", "c"], "ab", "c", ["abc"]),
     ]
-    df = spark.createDataFrame(
-        [(i, syms, a, b) for i, (syms, a, b, _) in enumerate(cases)],
-        "i int, syms array<string>, a string, b string",
-    )
-    # the fold takes literal (a, b) per merge round — apply per case
-    out = {}
     for i, (syms, a, b, want) in enumerate(cases):
-        got = (
-            df.where(F.col("i") == i)
-            .select(bpe_merge_expr("syms", a, b).alias("m"))
-            .first()["m"]
-        )
-        out[i] = (got, want)
-    for i, (got, want) in out.items():
+        got = _bpe_merge(syms, a, b)
         assert got == want, f"case {i}: {got} != {want}"
+
+
+def _bpe_fixture_train(spark, fix, k):
+    """``_bpe_train`` over a fixture's documents: the merge rows as
+    tuples in rank order, and the final segmentation frame."""
+    from big_data_lab_three_spark.queries.corpus import _bpe_train, _bpe_words
+
+    docs = table(spark, str(fix), "documents")
+    merges, seg = _bpe_train(_bpe_words(docs), k)
+    return [tuple(r) for r in merges.orderBy("merge_rank").collect()], seg
 
 
 def test_bpe_oracle_run_parity_uses_dense_span_index(spark, tmp_path):
@@ -499,13 +497,10 @@ def test_bpe_oracle_run_parity_uses_dense_span_index(spark, tmp_path):
     split into separate pos-based run groups and the oracle selected
     BOTH overlapping sites, deleting symbols from the span table.  The
     dense-seq run grouping must keep the DuckDB chain in lockstep with
-    the (hypothesis-pinned) Spark fold, round by round."""
+    the (hypothesis-pinned) training stage, round by round."""
     import duckdb
 
-    from big_data_lab_three_spark.queries.corpus import (
-        _bpe_merge_loop,
-        _bpe_oracle_rounds,
-    )
+    from big_data_lab_three_spark.queries.corpus import _bpe_oracle_rounds
 
     fix = tmp_path / "bpe_selfpair"
     fix.mkdir()
@@ -515,7 +510,7 @@ def test_bpe_oracle_run_parity_uses_dense_span_index(spark, tmp_path):
     ).coalesce(1).write.parquet(str(fix / "documents.parquet"))
 
     k = 3
-    merges, vocab = _bpe_merge_loop(spark, str(fix), k=k)
+    merges, vocab = _bpe_fixture_train(spark, fix, k)
 
     con = duckdb.connect()
     con.execute(
@@ -552,6 +547,56 @@ def test_bpe_oracle_run_parity_uses_dense_span_index(spark, tmp_path):
         (r["tok"], r["syms"]) for r in vocab.select("tok", "syms").collect()
     )
     assert oracle_syms == spark_syms
+
+
+def test_bpe_fit_matches_oracle_on_a_large_vocabulary():
+    """Scale evidence the test tiers (31 types) cannot give: 10^5
+    generated types (16-letter alphabet, lengths 2-12, Zipf-weighted
+    counts) trained by ``_bpe_fit`` and by the DuckDB chained-CTE
+    oracle over the same table must agree on the merge table and on
+    every word's final symbols.  Both times are printed."""
+    import random
+    import time
+
+    import duckdb
+    import pandas as pd
+
+    from big_data_lab_three_spark.queries.corpus import (
+        _bpe_fit,
+        _bpe_merges_select,
+        _bpe_oracle_rounds,
+    )
+
+    rng = random.Random(20261019)
+    words: dict[str, int] = {}
+    while len(words) < 100_000:
+        w = "".join(
+            rng.choice("abcdefghijklmnop") for _ in range(rng.randint(2, 12))
+        )
+        words.setdefault(w, 10_000 // (len(words) + 1) or 1)
+    k = 10
+
+    t0 = time.perf_counter()
+    merges, segs = _bpe_fit(words, k)
+    fit_s = time.perf_counter() - t0
+
+    con = duckdb.connect()
+    src = pd.DataFrame({"text": [" ".join([w] * c) for w, c in words.items()]})
+    con.register("generated", src)
+    sql = _bpe_oracle_rounds(k, "generated")
+    t0 = time.perf_counter()
+    want_merges = con.execute(
+        f"{sql}\n{_bpe_merges_select(k)}\nORDER BY merge_rank"
+    ).fetchall()
+    want_segs = con.execute(
+        f"{sql} SELECT w, list(sym ORDER BY pos) FROM s{k} GROUP BY w"
+    ).fetchall()
+    oracle_s = time.perf_counter() - t0
+    print(f"10^5 types, K={k}: _bpe_fit {fit_s:.1f} s, DuckDB {oracle_s:.1f} s")
+
+    assert len(merges) == k
+    assert [tuple(m) for m in want_merges] == merges
+    assert dict(want_segs) == segs
 
 
 def test_seeded_id_guards_fail_loud_on_collision(spark):
@@ -609,17 +654,14 @@ def test_bpe_oracle_differential_on_random_corpora(spark, tmp_path):
     the greedy-window parity itself): on random small corpora drawn
     from a 2-letter alphabet — the regime where overlapping self-pair
     runs are common — the DuckDB chained-CTE oracle must match the
-    Spark merge loop round-for-round, merges AND final span tables.
+    training stage round-for-round, merges AND final span tables.
     Deterministic seed; a handful of adversarial corpora beats one
     hand-picked case."""
     import random
 
     import duckdb
 
-    from big_data_lab_three_spark.queries.corpus import (
-        _bpe_merge_loop,
-        _bpe_oracle_rounds,
-    )
+    from big_data_lab_three_spark.queries.corpus import _bpe_oracle_rounds
 
     rng = random.Random(20260816)
     k = 2
@@ -635,7 +677,7 @@ def test_bpe_oracle_differential_on_random_corpora(spark, tmp_path):
             [(1, text)], "doc_id bigint, text string"
         ).coalesce(1).write.parquet(str(fix / "documents.parquet"))
 
-        merges, vocab = _bpe_merge_loop(spark, str(fix), k=k)
+        merges, vocab = _bpe_fixture_train(spark, fix, k)
 
         con = duckdb.connect()
         con.execute(

@@ -1776,8 +1776,8 @@ def test_method_agreement_bucketed_pipelines_no_cartesian(spark, sf_dir):
 def test_bpe_segment_census_vocab_bounded(spark, sf_dir):
     """The BPE apply census's final plan: before/after aggregates are
     1-row frames joined by a broadcast cross — no CartesianProduct, no
-    corpus-sized join; the loop's vocabulary state is checkpointed, so
-    the census reruns never re-derive the merge rounds."""
+    corpus-sized join; the merge rounds run once, in the training
+    stage's one grouped-map task."""
     df = REG["bpe_segment_census"].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -2111,9 +2111,9 @@ def test_bpe_frozen_oov_apply_is_keyed_join_no_window(
     spark, sf_dir, monkeypatch
 ):
     """The frozen-vocab OOV apply shares the apply family's contract:
-    held-out (lang, tok, cnt) stream joins the frozen piece map, OOV
-    remainder takes the vocabulary-bounded merge fold — no corpus
-    window, no cartesian, no non-broadcast nested loop
+    held-out (lang, tok, cnt) stream joins the frozen segmentation,
+    whose OOV tokens the training stage segments as apply-only rows —
+    no corpus window, no cartesian, no non-broadcast nested loop
     (localCheckpoints no-op'd so the whole plan is inspected)."""
     import re
 

@@ -644,27 +644,18 @@ def _py_bpe_merge(syms: list[str], a: str, b: str) -> list[str]:
         st.sampled_from(["a", "b", "c", "ba"]),
     ),
 )
-def test_bpe_merge_fold_matches_reference(spark, words, pair):
-    """The distributed fold must agree with the sequential reference
+def test_bpe_merge_fold_matches_reference(words, pair):
+    """The trainer's merge must agree with the sequential reference
     merge on arbitrary symbol sequences — including runs of the merged
     pair, multi-char symbols, and symbols that EQUAL the merged token
     (e.g. pair (a,b) with 'ab' already present in the sequence)."""
-    from big_data_lab_three_spark.queries.corpus import bpe_merge_expr
+    from big_data_lab_three_spark.queries.corpus import _bpe_merge
 
     a, b = pair
-    df = spark.createDataFrame(
-        [(i, w) for i, w in enumerate(words)],
-        "i int, syms array<string>",
-    )
-    got = {
-        r["i"]: r["m"]
-        for r in df.select(
-            "i", bpe_merge_expr("syms", a, b).alias("m")
-        ).collect()
-    }
-    for i, w in enumerate(words):
-        assert got[i] == _py_bpe_merge(w, a, b), (
-            f"pair={pair} syms={w}: fold {got[i]} != "
+    for w in words:
+        got = _bpe_merge(w, a, b)
+        assert got == _py_bpe_merge(w, a, b), (
+            f"pair={pair} syms={w}: merge {got} != "
             f"reference {_py_bpe_merge(w, a, b)}"
         )
 

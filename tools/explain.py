@@ -6,7 +6,9 @@ registered query — the plan-review loop as a one-liner:
 
 Prints the `.explain("formatted")` output plus the facts
 `tests/test_plans.py` pins: pushed filters, per-scan read schemas,
-broadcast/shuffle counts, codegen spans.
+broadcast/shuffle counts, codegen spans; then collects the query and
+prints the Spark jobs its constructor and its `collect()` launched (one
+job group each, read back through the public status tracker).
 """
 
 from __future__ import annotations
@@ -44,10 +46,13 @@ def main() -> int:
     )
     from big_data_lab_three_spark.plans.inspect import explain_str
     from big_data_lab_three_spark.session import get_spark
+    from perfbench.tracing import SparkCounters
 
     spark = get_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
-    df = registry[name].spark(spark, sf_dir)
+    counters = SparkCounters(spark)
+    with counters.group("construct"):
+        df = registry[name].spark(spark, sf_dir)
 
     print(explain_str(df))
     print("—— plan facts " + "—" * 50)
@@ -57,6 +62,13 @@ def main() -> int:
     print(f"pushed filters    : {pushed_filters(df)}")
     for cols in scan_columns(df):
         print(f"scan reads        : {cols}")
+    with counters.group("execute"):
+        df.collect()
+    jobs = counters.collect(["construct", "execute"])
+    print(
+        f"spark jobs        : {jobs['construct']['jobs']} construct, "
+        f"{jobs['execute']['jobs']} execute"
+    )
     return 0
 
 
