@@ -27,9 +27,11 @@ TABLE_NAMES: tuple[str, ...] = (
 # Tables whose downstream work is CPU-bound per row (tokenization,
 # shingle hashing) rather than scan-bound.  See :func:`spread`.
 # ``embeddings`` is deliberately NOT here: its consumers are Arrow-batched
-# matmuls whose throughput comes from LARGE batches — splitting 2k vectors
-# over 32 partitions starves the BLAS calls and multiplies Python worker
-# spin-up (measured 2× slower).
+# matmuls whose throughput comes from LARGE batches, and every extra
+# partition is one more Python task.  Spreading it over 32 partitions made
+# ``similarity_topk``, ``mmr_rerank``, ``similarity_lsh_recall`` and
+# ``semdedup_prune`` 1.3–1.7× slower at sf0.1 on 4 cores (1.5–3.5× before
+# Python workers stopped re-reading their zip archives on every task).
 _CPU_BOUND_TABLES = frozenset({"documents"})
 
 

@@ -8,7 +8,10 @@ Prints the `.explain("formatted")` output plus the facts
 `tests/test_plans.py` pins: pushed filters, per-scan read schemas,
 broadcast/shuffle counts, codegen spans; then collects the query and
 prints the Spark jobs its constructor and its `collect()` launched (one
-job group each, read back through the public status tracker).
+job group each, read back through the public status tracker) and the
+classes each phase compiled (count and milliseconds, from Spark's
+`CodegenMetrics` and `CodeGenerator.compileTime`; a class already in the
+session's code cache costs nothing).
 """
 
 from __future__ import annotations
@@ -17,6 +20,14 @@ import os
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+
+def _codegen(spark) -> tuple[int, float]:
+    """Classes compiled so far in this JVM, and their compile ms."""
+    jvm = spark._jvm
+    count = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return count, ns / 1e6
 
 
 def main() -> int:
@@ -51,8 +62,10 @@ def main() -> int:
     spark = get_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
     counters = SparkCounters(spark)
+    c0 = _codegen(spark)
     with counters.group("construct"):
         df = registry[name].spark(spark, sf_dir)
+    c1 = _codegen(spark)
 
     print(explain_str(df))
     print("—— plan facts " + "—" * 50)
@@ -62,12 +75,18 @@ def main() -> int:
     print(f"pushed filters    : {pushed_filters(df)}")
     for cols in scan_columns(df):
         print(f"scan reads        : {cols}")
+    c2 = _codegen(spark)
     with counters.group("execute"):
         df.collect()
+    c3 = _codegen(spark)
     jobs = counters.collect(["construct", "execute"])
     print(
         f"spark jobs        : {jobs['construct']['jobs']} construct, "
         f"{jobs['execute']['jobs']} execute"
+    )
+    print(
+        f"compiled classes  : {c1[0] - c0[0]} construct ({c1[1] - c0[1]:.0f} ms), "
+        f"{c3[0] - c2[0]} execute ({c3[1] - c2[1]:.0f} ms)"
     )
     return 0
 
