@@ -1,7 +1,8 @@
-"""The one driver for the engine's iterative Spark loops (unigram-LM EM,
-k-core peel, Lloyd k-means, both connected-components loops, PageRank).
-BPE training is not one of them: its rounds run inside one grouped-map
-task over the vocabulary (``queries/corpus._bpe_train``).
+"""The one driver for the engine's iterative Spark loops (k-core peel,
+Lloyd k-means, both connected-components loops, PageRank).  Tokenizer
+training is not one of them: the BPE merge rounds and the unigram-LM EM
+rounds run inside one grouped-map task over the vocabulary
+(``queries/corpus._bpe_train`` and ``_ulm_train``).
 
 :class:`Rounds` owns the per-round policy they share:
 
@@ -22,8 +23,8 @@ task over the vocabulary (``queries/corpus._bpe_train``).
   unpersisted.  A checkpoint is the frame's own RDD, never a
   ``getPersistentRDDs()`` diff that could free another thread's data.
   Reading a released checkpoint raises; it never recomputes wrong rows.
-  Rounds no action inside the loop materializes (k-means, PageRank,
-  unigram-LM EM) stay persisted for the caller to free.
+  Rounds no action inside the loop materializes (k-means, PageRank)
+  stay persisted for the caller to free.
 """
 
 from __future__ import annotations

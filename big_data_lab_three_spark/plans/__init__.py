@@ -11,6 +11,7 @@ from big_data_lab_three_spark.plans.inspect import (  # noqa: F401
     broadcast_join_count,
     codegen_stage_count,
     explain_str,
+    final_plan,
     pushed_filters,
     scan_columns,
     shuffle_count,

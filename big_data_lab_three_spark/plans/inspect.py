@@ -22,6 +22,17 @@ def explain_str(df: DataFrame, mode: str = "formatted") -> str:
     return buf.getvalue()
 
 
+def final_plan(df: DataFrame) -> str:
+    """The physical plan ``df``'s last action ran: the ``== Final Plan
+    ==`` section of the adaptive plan (call after an action).  The
+    executed plan's string repeats the initial plan below the final
+    one, so a node count over all of it counts most nodes twice."""
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    if "== Final Plan ==" not in plan:
+        return plan
+    return plan.split("== Final Plan ==")[1].split("== Initial Plan ==")[0]
+
+
 def scan_columns(df: DataFrame, table_hint: str = "") -> list[list[str]]:
     """Column lists read by each parquet scan (from ``ReadSchema``),
     optionally filtered to scans whose Location mentions ``table_hint``.

@@ -13,12 +13,13 @@ iterative oracles per ``queries/graph.py``'s pagerank_check).
 
 from __future__ import annotations
 
+import math
 from collections import Counter
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from big_data_lab_three_spark.functions.numeric import md5_mod, micro_quantize
+from big_data_lab_three_spark.functions.numeric import md5_mod
 from big_data_lab_three_spark.functions.text import tokens
 from big_data_lab_three_spark.logger import get_logger
 from big_data_lab_three_spark.operators.iterate import Rounds
@@ -2959,11 +2960,17 @@ _ULM_MAXLEN = 8  # corpus words are <= 8 chars; longer words are
 _ULM_MAXPIECE = 4
 _ULM_SENTINEL = -(10**15)
 
+# Fallback separator: one sentinel piece in the best path drags the
+# packed optimum to ~16·(−1e15); a fully-scored path bottoms out near
+# 16·8·|min score| ≈ −3e9.  Any threshold between separates exactly.
+_ULM_FALLBACK_FLOOR = -(10**12)
+
 
 def _ulm_dp_steps(ix) -> str:
-    """The unrolled Viterbi DP as lateral-alias SELECT columns, shared
-    by both engines via a per-engine 1-based list-index renderer
-    ``ix(list_name, flat_index)``.  State encoding: ``b_i = 16·S − P``
+    """The unrolled Viterbi DP as lateral-alias SELECT columns of the
+    DuckDB oracles, through the 1-based list-index renderer
+    ``ix(list_name, flat_index)``; ``_ulm_viterbi`` is its Python twin,
+    which ``_ulm_fit`` runs.  State encoding: ``b_i = 16·S − P``
     where S is the best micro-quantized log-score of a segmentation of
     the first i chars and P its piece count — integer scores are >= 1
     apart and P <= 8 < 16, so one BIGINT max IS the lexicographic
@@ -3003,209 +3010,205 @@ def _ulm_duck_pieces(src: str = "words") -> str:
 _ULM_DUCK_PIECES = _ulm_duck_pieces()
 
 
-def _ulm_piece_occurrences(words: DataFrame) -> DataFrame:
-    """All (w, cnt, i0, k, p) substring-piece occurrences of the
-    in-unroll words of a (w, cnt) vocabulary — the structural grid the
-    Viterbi DP scores against; factored (r14) so the frozen apply can
-    expand HELD-OUT words with the identical expression."""
-    inscope = words.where(F.length("w") <= _ULM_MAXLEN)
-    return inscope.select(
-        "w",
-        "cnt",
-        F.explode(
-            F.expr(
-                f"""flatten(transform(sequence(1, length(w)), i ->
-                    transform(sequence(1, least({_ULM_MAXPIECE},
-                                                length(w) - i + 1)),
-                              k -> struct(i AS i0, k AS k,
-                                          substring(w, i, k) AS p))))"""
-            )
-        ).alias("u"),
-    ).select("w", "cnt", "u.i0", "u.k", "u.p")
+# The training stage's one output: a history row per round (``round``
+# set), then a row per segmented word (no round).  A fallback word has
+# NULL ``np``, ``score`` and ``pieces``.
+_ULM_STAGE = (
+    "round int, n_words long, corpus_cnt long, kept_pieces long, "
+    "pruned_pieces long, sum_pieces_weighted long, "
+    "sum_score_weighted long, w string, cnt long, wlen int, np long, "
+    "score long, pieces array<string>"
+)
 
 
-def _ulm_train(spark: SparkSession, docs: DataFrame, k: int):
-    """``k`` unigram-LM (SentencePiece) training rounds on
-    ``Rounds(spark, "unigram_em", k)``, after ONE token scan of
-    ``docs`` collapsed to the (w, cnt) vocabulary and its piece grid.
-    Round 1 segments every vocabulary word under the frequency-
-    initialized scores ``ln(f(p)/T)`` over the full piece inventory;
-    each later round is one EM step on the round before it: the
-    Viterbi piece counts (``_ulm_used``, E) re-score the pieces they
-    used plus the single-character floor (``_ulm_rescore``, M — unused
-    pieces are pruned) and the vocabulary is re-segmented
-    (``_ulm_dp_from_scores``).  A round checkpoints its scores and DP
-    frame, and first folds the finished round's history row into its
-    checkpointed history: a round reads only the round before it, and
-    the history outlives the release of superseded rounds.  The last
-    round's row is appended after the loop, so a caller that never
-    reads the history pays no job for it.
+def _ulm_micro_log(x: float) -> int:
+    """``floor(ln(x)·1e6 + 0.5)``: ``micro_quantize``'s quantization of
+    a log-prob, in Python."""
+    return math.floor(math.log(x) * 1e6 + 0.5)
 
-    Returns ``(toks, s, dp, hist)``: the vocabulary, the last round's
-    (p, s) scores and DP frame (w, cnt, wlen, sf, b0..b8, bfin), and
-    one row per round — (round, n_words, corpus_cnt, kept_pieces,
-    pruned_pieces, sum_pieces_weighted, sum_score_weighted)."""
-    toks = (
-        docs.select(F.explode(tokens(F.col("text"))).alias("tok"))
-        .groupBy("tok")
-        .agg(F.count(F.lit(1)).alias("cnt"))
-        .select(F.col("tok").alias("w"), "cnt")
-    ).localCheckpoint()
-    pc = _ulm_piece_occurrences(toks).localCheckpoint()
-    allp = pc.select("p").distinct()
-    chars = pc.where(F.col("k") == 1).agg(F.count_distinct("p").alias("c"))
-    rounds = Rounds(spark, "unigram_em", k)
-    hist = None
-    for r in rounds:
-        if r == 1:
-            pf = pc.groupBy("p").agg(F.sum("cnt").alias("f"))
-            pt = pf.agg(F.sum("f").alias("t"))
-            s = pf.crossJoin(F.broadcast(pt)).select(
-                "p",
-                micro_quantize(
-                    F.log(F.col("f") / F.col("t").cast("double"))
-                ).alias("s"),
-            )
+
+def _ulm_unpack(bfin: int) -> tuple[int, int]:
+    """(P, S): the piece count and score packed in ``bfin = 16·S − P``,
+    unpacked as the oracles do."""
+    p = -bfin % 16
+    return p, (bfin + p) // 16
+
+
+def _ulm_viterbi(w: str, scores: dict[str, int]):
+    """``(bfin, pieces)``: the packed optimum ``16·S − P`` of ``w``
+    under ``scores`` and its pieces left to right.  The recurrence is
+    the oracle's (``_ulm_dp_steps``: ``b_i = max_k b_{i−k} + 16·s − 1``,
+    a piece missing from ``scores`` taking the sentinel) on exact
+    Python ints, and the traceback takes ``_ulm_traceback_k``'s
+    smallest k whose predecessor reproduces ``b_i``."""
+    b = [0]
+
+    def cand(i: int, k: int) -> int:
+        return b[i - k] + 16 * scores.get(w[i - k : i], _ULM_SENTINEL) - 1
+
+    for i in range(1, len(w) + 1):
+        b.append(max(cand(i, k) for k in range(1, min(_ULM_MAXPIECE, i) + 1)))
+    pieces, i = [], len(w)
+    while i > 0:
+        ks = range(1, min(_ULM_MAXPIECE, i) + 1)
+        k = next(k for k in ks if cand(i, k) == b[i])
+        pieces.append(w[i - k : i])
+        i -= k
+    return b[-1], pieces[::-1]
+
+
+def _ulm_fit(words: dict[str, int], k: int, apply=()):
+    """``k`` unigram-LM (SentencePiece) EM rounds over a {w: cnt}
+    vocabulary — the twin of ``_bpe_fit`` and of the DuckDB oracle
+    chain.  Returns ``(hist, segs)``: one (round, n_words, corpus_cnt,
+    kept_pieces, pruned_pieces, sum_pieces_weighted,
+    sum_score_weighted) row per round, and one (w, cnt, wlen, np,
+    score, pieces) row per training word and ``apply`` token.
+
+    Only words of at most ``_ULM_MAXLEN`` characters train; their
+    pieces are every substring of at most ``_ULM_MAXPIECE`` characters.
+    Round 1 scores a piece ``ln(f/t)`` by its corpus-weighted
+    occurrences; each later round keeps the pieces the previous
+    round's Viterbi used plus every single character, scored
+    ``ln((used + [len = 1]) / (t + c))`` (the M-step; ``c`` is the
+    character count, the floor's add-one mass), and re-segments.
+    Every score is micro-quantized through ``math.log``, which matched
+    DuckDB's ``ln`` on every corpus tested (``numpy.log`` need not).
+    ``apply`` tokens are segmented under
+    the final scores and never count toward a score: a frozen
+    tokenizer's held-out text, ``cnt`` 0 unless it is a training word.
+    A token with no fully scored path (``bfin`` at or below
+    ``_ULM_FALLBACK_FLOOR``) or past the unroll bound gets NULL
+    ``np``, ``score`` and ``pieces``.
+
+    Scale trade-off, as for ``_bpe_train``: ``_ulm_train`` runs this
+    in one task, so the rounds hold while the vocabulary fits one
+    task.  The corpus scan before them is one combiner-friendly
+    groupBy, and vocabulary grows sublinearly with the corpus (Heaps'
+    law); ``tests/test_llm_ops.py`` trains 10^5 types."""
+    train = {w: c for w, c in words.items() if len(w) <= _ULM_MAXLEN}
+    f: Counter = Counter()
+    for w, c in train.items():
+        for i in range(len(w)):
+            for n in range(1, min(_ULM_MAXPIECE, len(w) - i) + 1):
+                f[w[i : i + n]] += c
+    t = sum(f.values())
+    scores = {p: _ulm_micro_log(n / t) for p, n in f.items()}
+    chars = sum(len(p) == 1 for p in f)
+    hist = []
+    for r in range(1, k + 1):
+        if r > 1:
+            used: Counter = Counter()
+            for w, c in train.items():
+                for p in segs[w][1]:
+                    used[p] += c
+            t = sum(used.values()) + chars
+            scores = {
+                p: _ulm_micro_log((used[p] + (len(p) == 1)) / t)
+                for p in f
+                if used[p] or len(p) == 1
+            }
+        segs = {w: _ulm_viterbi(w, scores) for w in train}
+        terms = [
+            (c, c * p, c * s)
+            for w, c in train.items()
+            for p, s in [_ulm_unpack(segs[w][0])]
+        ]
+        corpus, pw, sw = [sum(x) for x in zip(*terms)] if terms else [None] * 3
+        kept = len(scores)
+        hist.append((r, len(terms), corpus, kept, len(f) - kept, pw, sw))
+    rows = []
+    for w in dict.fromkeys([*train, *apply]):
+        bfin, pieces = segs.get(w) or (
+            _ulm_viterbi(w, scores) if len(w) <= _ULM_MAXLEN else (None, None)
+        )
+        row = (w, words.get(w, 0), len(w))
+        if bfin is None or bfin <= _ULM_FALLBACK_FLOOR:
+            rows.append((*row, None, None, None))
         else:
-            hist = rounds.checkpoint(
-                _ulm_history(hist, r - 1, dp, s, allp)
-            )
-            s = rounds.checkpoint(
-                _ulm_rescore(_ulm_used(dp), allp, chars)
-            )
-        dp = rounds.checkpoint(_ulm_dp_from_scores(pc, s))
-    return toks, s, dp, _ulm_history(hist, k, dp, s, allp)
+            rows.append((*row, *_ulm_unpack(bfin), pieces))
+    return hist, rows
 
 
-def _ulm_history(
-    hist, r: int, dp: DataFrame, s: DataFrame, allp: DataFrame
+def _ulm_train(words: DataFrame, k: int, apply: DataFrame | None = None):
+    """Unigram-LM training as ONE grouped-map stage over the (tok, cnt)
+    ``words``: :func:`_ulm_fit` runs all ``k`` EM rounds executor-side,
+    so the constructor launches no job and ``explain()`` shows the
+    whole query.  Returns the stage's one output (``_ULM_STAGE``): the
+    history rows carry ``round``; the word rows — every training word
+    within the unroll bound, then every ``apply`` token — do not.
+    ``apply`` adds apply-only (tok) rows, segmented under the final
+    scores.  A readout that needs several cuts of the output takes
+    them in one pass: the output is one partition, so an aggregate
+    over it adds no exchange two branches could share, and each
+    branch would run the stage again."""
+    rows = words.select("tok", "cnt")
+    if apply is not None:
+        rows = rows.unionByName(
+            apply.select("tok", F.lit(0).cast("long").alias("cnt"))
+        )
+
+    def stage(pdf):
+        import pandas as pd
+
+        train = pdf[pdf["cnt"] > 0]
+        vocab = dict(zip(train["tok"], train["cnt"].tolist()))
+        hist, segs = _ulm_fit(vocab, k, pdf["tok"][pdf["cnt"] == 0])
+        # 7 history fields then 6 word fields, matched to _ULM_STAGE by
+        # position; object columns keep Python ints exact through Arrow
+        return pd.DataFrame(
+            [(*h, *[None] * 6) for h in hist]
+            + [(*[None] * 7, *s) for s in segs],
+            dtype=object,
+        )
+
+    return rows.groupBy().applyInPandas(stage, _ULM_STAGE)
+
+
+def _ulm_words(out: DataFrame) -> DataFrame:
+    """The word rows of a ``_ulm_train`` output."""
+    return out.where(F.col("round").isNull())
+
+
+def _ulm_seg_census(
+    words: DataFrame, out: DataFrame, model_round: int | None = None
 ) -> DataFrame:
-    """``hist`` (None before round 1) with round ``r``'s row appended:
-    the segmentation sums of the DP frame, the pieces the round's
-    scores keep and the rest of the inventory ``allp`` pruned — ONE
-    aggregate over the three frames stacked, each filling the columns
-    the other two leave NULL."""
-    kept = s.select(F.col("p").alias("kept"))
-    inv = allp.select(F.col("p").alias("inv"))
-    stack = (
-        _ulm_seg(dp)
-        .unionByName(kept, allowMissingColumns=True)
-        .unionByName(inv, allowMissingColumns=True)
+    """The segmentation census of a ``_ulm_train`` output by word
+    length, plus the ``len_group = −1`` row counting the vocabulary
+    ``words`` past the unroll bound (never silently dropped) — the
+    readout of ``unigram_lm_viterbi_census`` (round 1) and
+    ``unigram_lm_round2_census`` (round 2).  With ``model_round``,
+    that round's history row joins the same aggregate as the
+    ``len_group = −2`` row (kept pieces, pruned pieces), so the census
+    reads the training stage once."""
+    rows, group = _ulm_words(out), F.col("wlen")
+    if model_round is not None:
+        model = F.col("round") == model_round
+        rows = out.where(F.col("round").isNull() | model)
+        group = F.when(model, -2).otherwise(group)
+    census = rows.groupBy(group.alias("len_group")).agg(
+        F.sum(F.coalesce("kept_pieces", F.lit(1))).alias("n_words"),
+        F.sum(F.coalesce("pruned_pieces", "cnt")).alias("corpus_cnt"),
+        F.coalesce(F.sum(F.col("cnt") * F.col("np")), F.lit(0)).alias(
+            "sum_pieces_weighted"
+        ),
+        F.coalesce(F.sum(F.col("cnt") * F.col("score")), F.lit(0)).alias(
+            "sum_score_weighted"
+        ),
     )
-    n_words, corpus_cnt, pieces, score = _ulm_seg_sums()
-    row = stack.agg(
-        F.lit(r).alias("round"),
-        n_words,
-        corpus_cnt,
-        F.count("kept").alias("kept_pieces"),
-        (F.count("inv") - F.count("kept")).alias("pruned_pieces"),
-        pieces,
-        score,
-    )
-    return row if hist is None else hist.unionByName(row)
-
-
-def _ulm_seg(dp: DataFrame) -> DataFrame:
-    """(w, cnt, wlen, bp, bs) per DP row: the word, its corpus count
-    and length, and the piece count and score of its optimum, unpacked
-    from the packed ``bfin = 16·S − P``."""
-    return dp.select(
-        "w",
-        "cnt",
-        "wlen",
-        F.expr("(- bfin) % 16").alias("bp"),
-        F.expr("(bfin + ((- bfin) % 16)) div 16").alias("bs"),
-    )
-
-
-def _ulm_seg_sums():
-    """The corpus-weighted sums over ``_ulm_seg`` rows — word count,
-    corpus count, piece count and total score of the optima — shared
-    by the per-round history and the by-length census."""
-    return [
-        F.count("cnt").alias("n_words"),
-        F.sum("cnt").alias("corpus_cnt"),
-        F.sum(F.col("cnt") * F.col("bp")).alias("sum_pieces_weighted"),
-        F.sum(F.col("cnt") * F.col("bs")).alias("sum_score_weighted"),
-    ]
-
-
-def _ulm_seg_census(toks: DataFrame, dp: DataFrame) -> DataFrame:
-    """The segmentation census of a DP frame by word length, plus the
-    ``len_group = −1`` row counting the vocabulary words past the
-    unroll bound (never silently dropped) — the readout of
-    ``unigram_lm_viterbi_census`` (round 1) and
-    ``unigram_lm_round2_census`` (round 2)."""
-    census = (
-        _ulm_seg(dp)
-        .groupBy(F.col("wlen").cast("int").alias("len_group"))
-        .agg(*_ulm_seg_sums())
-    )
-    longrow = toks.where(F.length("w") > _ULM_MAXLEN).agg(
-        F.lit(-1).cast("int").alias("len_group"),
-        F.count(F.lit(1)).alias("n_words"),
-        F.coalesce(F.sum("cnt"), F.lit(0)).alias("corpus_cnt"),
+    # conditional sums, not a filter: a filter on the token would be
+    # pushed below the word count and scan the corpus a second time
+    long = F.length("tok") > _ULM_MAXLEN
+    longrow = words.agg(
+        F.lit(-1).alias("len_group"),
+        F.count(F.when(long, 1)).alias("n_words"),
+        F.coalesce(F.sum(F.when(long, F.col("cnt"))), F.lit(0)).alias(
+            "corpus_cnt"
+        ),
         F.lit(0).cast("long").alias("sum_pieces_weighted"),
         F.lit(0).cast("long").alias("sum_score_weighted"),
     )
     return census.unionByName(longrow)
-
-
-def _ulm_dp_from_scores(pc: DataFrame, ps: DataFrame) -> DataFrame:
-    """The per-word Viterbi DP frame under an arbitrary (p, s) piece-
-    score table: pieces absent from ``ps`` take the sentinel (pruned),
-    so the same function runs round 1 (frequency scores over ALL
-    pieces) and every later round (re-estimated scores over kept
-    pieces).  The caller checkpoints the frame: the lateral b-aliases
-    INLINE during analysis (b8 alone is a 4^8-node greatest tree) and
-    every downstream reference re-expands them — the traceback's
-    barr/karr references multiplied analysis time past a minute.  The
-    checkpoint pins b0..b8 as plain scan columns; the frame is
-    vocabulary-bounded, so this is a KB-scale materialization."""
-    nslots = _ULM_MAXLEN * _ULM_MAXPIECE
-    wsf = (
-        pc.join(ps, "p")
-        .groupBy("w")
-        .agg(
-            F.first("cnt").alias("cnt"),
-            F.length(F.first("w")).cast("long").alias("wlen"),
-            F.map_from_entries(
-                F.collect_list(
-                    F.struct(
-                        (
-                            (F.col("i0") + F.col("k") - 2)
-                            * F.lit(_ULM_MAXPIECE)
-                            + F.col("k")
-                        ).cast("int").alias("slot"),
-                        F.col("s").alias("s"),
-                    )
-                )
-            ).alias("sm"),
-        )
-        .select(
-            "w",
-            "cnt",
-            "wlen",
-            F.expr(
-                f"""transform(sequence(1, {nslots}), n ->
-                    coalesce(element_at(sm, n),
-                             CAST({_ULM_SENTINEL} AS BIGINT)))"""
-            ).alias("sf"),
-        )
-    )
-    dp = wsf.selectExpr(
-        "w",
-        "cnt",
-        "wlen",
-        "sf",
-        *[
-            c.replace("\n           ", " ")
-            for c in _ulm_dp_steps(
-                lambda l, i: f"element_at({l}, {i})"
-            ).split(",\n           ")
-        ],
-    )
-    return dp
 
 
 def _ulm_base_sql(src: str = "documents") -> str:
@@ -3283,38 +3286,37 @@ def unigram_lm_viterbi_census(
     standard unigram-LM initialization before EM), and each word's
     optimal segmentation is found by an EXACT-INTEGER Viterbi DP —
     micro-quantized scores, the (score, piece-count) pair packed into
-    one BIGINT (``16·S − P``) so a single ``greatest`` chain is the
-    lexicographic argmax with no float tie hazards.  The DP is
-    unrolled to the corpus's bounded word length (8 chars) from ONE
-    shared Python generator (``_ulm_dp_steps``), so the two engines
-    execute the identical recurrence; words past the bound are counted
-    in a ``len_group = −1`` census row, never silently dropped.
+    one integer (``16·S − P``) so a single max is the lexicographic
+    argmax with no float tie hazards.  The Spark side runs the DP on
+    Python ints in the training stage (``_ulm_fit``); the oracle
+    unrolls the same recurrence to the corpus's bounded word length
+    (8 chars) as a ``greatest`` chain (``_ulm_dp_steps``).  Words past
+    the bound are counted in a ``len_group = −1`` census row, never
+    silently dropped.
     Readout: per word-length group, corpus-weighted piece counts
     (fertility) and total segmentation scores.
 
     Scale shape: everything after the one corpus token scan is
-    vocabulary-bounded (Zipf) — the piece explode is <= 26 rows per
-    DISTINCT word, the score table is piece-type-bounded, and the DP
-    is a fixed-depth expression evaluated per vocabulary row (no
-    iteration state, no shuffle growth with corpus size).  At 100 TB
-    the census costs one combiner-friendly groupBy more than reading
-    the data.  Longer words need a longer unroll (L·4 slots, linear),
-    or the grouped-map route ``semdedup_prune`` uses — noted, bounded,
+    vocabulary-bounded (Zipf): the training stage is one grouped-map
+    task over the (tok, cnt) table (``_ulm_train``), whose pieces are
+    <= 26 per DISTINCT word and whose DP is linear in word length.
+    At 100 TB the census costs one combiner-friendly groupBy more than
+    reading the data.  Longer words need a larger ``_ULM_MAXLEN`` (and
+    the oracle a longer unroll, L·4 slots) — noted, bounded,
     fail-visible."""
-    toks, _s, dp, _hist = _ulm_train(
-        spark, table(spark, sf_dir, "documents"), 1
-    )
-    return _ulm_seg_census(toks, dp).orderBy("len_group")
+    words = _bpe_words(table(spark, sf_dir, "documents"))
+    return _ulm_seg_census(words, _ulm_train(words, 1)).orderBy("len_group")
 
 
 def _ulm_traceback_k(ix, pos: str) -> str:
-    """The Viterbi traceback step as a CASE chain, shared by both
-    engines via the same index renderer as ``_ulm_dp_steps``: at
+    """The Viterbi traceback step as a CASE chain of the DuckDB
+    oracles, through the same index renderer as ``_ulm_dp_steps``: at
     position ``pos``, the chosen piece length is the SMALLEST k whose
     predecessor state reproduces the packed optimum —
     ``b[pos−k] + 16·s(pos,k) − 1 = b[pos]`` — re-derived from the DP
     values instead of stored, so the forward pass stays one packed
-    BIGINT.  ``barr`` is the 1-based list [b0..b8]."""
+    BIGINT.  ``barr`` is the 1-based list [b0..b8].  ``_ulm_viterbi``
+    makes the same choice in ``_ulm_fit``."""
     tests = []
     for k in range(1, _ULM_MAXPIECE + 1):
         cur = ix("barr", f"{pos} + 1")
@@ -3328,61 +3330,7 @@ def _ulm_traceback_k(ix, pos: str) -> str:
 
 
 _ULM_K_DUCK = _ulm_traceback_k(lambda l, i: f"{l}[{i}]", "pos")
-_ULM_K_SPARK = _ulm_traceback_k(
-    lambda l, i: f"element_at({l}, CAST({i} AS INT))", "pos"
-)
 _ULM_BARR = "[" + ", ".join(f"b{i}" for i in range(_ULM_MAXLEN + 1)) + "]"
-
-
-def _ulm_traceback_pieces(dp: DataFrame) -> DataFrame:
-    """The Viterbi traceback over a DP frame: (w, cnt, ps) where
-    ``ps`` is the chosen piece array.  The k decision depends only on
-    the position, so it is hoisted out of the fold into ONE
-    per-position array (kept the plan off the 3x-inlined-CASE codegen
-    cliff: 70s -> interactive)."""
-    tb = (
-        dp.withColumn(
-            "barr", F.array(*[f"b{i}" for i in range(_ULM_MAXLEN + 1)])
-        )
-        .withColumn(
-            "karr",
-            F.expr(
-                f"transform(sequence(1, {_ULM_MAXLEN}), "
-                f"pos -> {_ULM_K_SPARK})"
-            ),
-        )
-        .select(
-            "w",
-            "cnt",
-            F.expr(
-                f"""aggregate(
-    sequence(1, {_ULM_MAXLEN}),
-    named_struct('pos', CAST(wlen AS INT),
-                 'ps', CAST(array() AS array<string>)),
-    (acc, st) -> IF(acc.pos <= 0, acc,
-        named_struct(
-            'pos', acc.pos - element_at(karr, acc.pos),
-            'ps', concat(acc.ps, array(substring(
-                w,
-                acc.pos - element_at(karr, acc.pos) + 1,
-                element_at(karr, acc.pos)))))),
-    acc -> acc.ps)"""
-            ).alias("ps"),
-        )
-    )
-    return tb
-
-
-def _ulm_used(dp: DataFrame) -> DataFrame:
-    """The E-step: (p, used_cnt), the corpus-weighted count of every
-    piece the Viterbi traceback of ``dp`` chose."""
-    return (
-        _ulm_traceback_pieces(dp)
-        .select("cnt", F.explode("ps").alias("p"))
-        .groupBy("p")
-        .agg(F.sum("cnt").alias("used_cnt"))
-    )
-
 
 _ULM_TB_SQL = f"""), tb AS (
     SELECT w, cnt, sf, {_ULM_BARR} AS barr,
@@ -3426,35 +3374,38 @@ def unigram_lm_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     traceback RE-DERIVED from the packed DP values — at each position
     the chosen piece length is the smallest k whose predecessor state
     reproduces the optimum, a pure integer test both engines evaluate
-    identically (``_ulm_traceback_k``) — and the M-step re-estimates
-    piece probabilities from the corpus-weighted Viterbi piece counts.
+    identically (``_ulm_viterbi``, ``_ulm_traceback_k``) — and the
+    M-step re-estimates piece probabilities from the corpus-weighted
+    Viterbi piece counts.
     Readout: the re-estimated top-20 piece table (count-desc,
     piece-asc; exact integer counts, micro-unit probabilities).
 
-    The traceback is a bounded fold on the Spark side
-    (``aggregate(sequence(1, 8), …)`` peeling one piece per step) and
-    a recursive CTE on the DuckDB side (the ``lttb_downsample``
-    oracle precedent) — the recurrence text is generated once and
-    rendered per engine.
+    The traceback is a Python loop in the training stage, which emits
+    each word's pieces, and a recursive CTE on the DuckDB side (the
+    ``lttb_downsample`` oracle precedent).
 
     Scale shape: identical to ``unigram_lm_viterbi_census`` —
     everything after the corpus token scan is vocabulary-bounded, the
-    traceback adds a fixed-depth expression per vocabulary row, and
-    the M-step is one groupBy over (pieces-per-word × vocab) rows.
+    traceback adds at most 8 steps per vocabulary word, and the
+    M-step is one groupBy over (pieces-per-word × vocab) rows.
     This is exactly how a full EM loop would iterate at 100 TB: the
     corpus is scanned once for word counts, every E/M round after
     that touches only the Zipf-bounded vocabulary."""
-    _toks, _s, dp, _hist = _ulm_train(
-        spark, table(spark, sf_dir, "documents"), 1
-    )
-    m = _ulm_used(dp).withColumnRenamed("p", "piece")
-    mt = m.agg(F.sum("used_cnt").alias("t"))
+    words = _bpe_words(table(spark, sf_dir, "documents"))
+    # the training stage's output is one partition, so the total over
+    # a whole-frame window adds no exchange, and the stage runs once
+    # (a cross join with the total would run it in both branches)
     return (
-        m.crossJoin(F.broadcast(mt))
+        _ulm_words(_ulm_train(words, 1))
+        .select("cnt", F.explode("pieces").alias("piece"))
+        .groupBy("piece")
+        .agg(F.sum("cnt").alias("used_cnt"))
         .select(
             "piece",
             "used_cnt",
-            F.expr("div(used_cnt * 1000000, t)").alias("prob_micro"),
+            F.expr("div(used_cnt * 1000000, sum(used_cnt) OVER ())").alias(
+                "prob_micro"
+            ),
         )
         .orderBy(F.desc("used_cnt"), "piece")
         .limit(20)
@@ -3474,7 +3425,7 @@ def _ulm_s_sql_r(msuf: str, r: int) -> str:
     floor (add-one mass), scored ``ln((used+floor)/(t+c))`` — the ONE
     SQL text behind every re-scored round of the oracles (round 2 as
     ``_ULM_S2_SQL``, each later round of the convergence chain), the
-    twin of ``_ulm_rescore``."""
+    twin of ``_ulm_fit``'s M-step."""
     return f""", t{r} AS (
     SELECT CAST(sum(used_cnt) AS BIGINT) AS t FROM m{msuf}
 ), s{r} AS MATERIALIZED (
@@ -3490,36 +3441,6 @@ def _ulm_s_sql_r(msuf: str, r: int) -> str:
 
 
 _ULM_S2_SQL = _ULM_INV_SQL + _ulm_s_sql_r("", 2)
-
-
-def _ulm_rescore(m: DataFrame, allp: DataFrame, chars: DataFrame):
-    """The M-step of every ``_ulm_train`` round after the first: keep
-    the pieces of the distinct inventory ``allp`` the Viterbi used
-    (``m``: p, used_cnt) plus the single-character floor with add-one
-    mass (``chars``: the character type count), scored
-    ``ln((used + floor) / (t + c))`` in micro-units.  SQL twin:
-    ``_ulm_s_sql_r``."""
-    t = m.agg(F.sum("used_cnt").alias("t"))
-    return (
-        allp.join(m, "p", "left")
-        .crossJoin(F.broadcast(t))
-        .crossJoin(F.broadcast(chars))
-        .where(F.col("used_cnt").isNotNull() | (F.length("p") == 1))
-        .select(
-            "p",
-            micro_quantize(
-                F.log(
-                    (
-                        F.coalesce("used_cnt", F.lit(0))
-                        + F.when(
-                            F.length("p") == 1, F.lit(1)
-                        ).otherwise(F.lit(0))
-                    )
-                    / (F.col("t") + F.col("c")).cast("double")
-                )
-            ).alias("s"),
-        )
-    )
 
 
 def _ulm_dp2_sql(
@@ -3599,27 +3520,18 @@ def unigram_lm_round2_census(
     new model.  Readout: the round-2 segmentation census (same shape
     as ``unigram_lm_viterbi_census`` for direct round-over-round
     comparison) plus a ``len_group = −2`` row carrying (model pieces
-    kept, pieces pruned).
+    kept, pieces pruned), read from the training stage's round-2
+    history row in the same aggregate as the word rows, so the stage
+    runs once.
 
     Scale shape: the round-1 chain plus one vocabulary-bounded score
-    re-estimation and one more fixed-depth DP — per-iteration cost at
-    100 TB is vocabulary-sized, never corpus-sized; the corpus is
-    scanned exactly once for word counts no matter how many EM rounds
-    run."""
-    toks, _s, dp, hist = _ulm_train(
-        spark, table(spark, sf_dir, "documents"), 2
-    )
-    modelrow = hist.where(F.col("round") == 2).select(
-        F.lit(-2).cast("int").alias("len_group"),
-        F.col("kept_pieces").alias("n_words"),
-        F.col("pruned_pieces").alias("corpus_cnt"),
-        F.lit(0).cast("long").alias("sum_pieces_weighted"),
-        F.lit(0).cast("long").alias("sum_score_weighted"),
-    )
-    return (
-        _ulm_seg_census(toks, dp)
-        .unionByName(modelrow)
-        .orderBy("len_group")
+    re-estimation and one more DP in the same training stage —
+    per-iteration cost at 100 TB is vocabulary-sized, never
+    corpus-sized; the corpus is scanned exactly once for word counts
+    no matter how many EM rounds run."""
+    words = _bpe_words(table(spark, sf_dir, "documents"))
+    return _ulm_seg_census(words, _ulm_train(words, 2), 2).orderBy(
+        "len_group"
     )
 
 
@@ -3866,21 +3778,32 @@ def unigram_lm_convergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     evidence (monotone improvement pinned at sf0.001 by
     ``tests/test_llm_ops.py``).
 
-    Both engines run the identical recurrence: the DP and traceback
-    texts come from the same Python generators (``_ulm_dp_steps``,
-    ``_ulm_traceback_k``) rendered per engine, and each round's score
-    arithmetic is the shared round-2 formula.
+    Both engines run the identical recurrence: ``_ulm_fit`` runs the
+    DP and traceback on Python ints with the oracle's smallest-k rule
+    (the SQL texts come from ``_ulm_dp_steps`` and
+    ``_ulm_traceback_k``), and each round's score arithmetic is the
+    shared round-2 formula; its history rows are this readout.
 
-    Scale shape: the corpus is scanned ONCE for word counts; each of
-    the K rounds adds one vocabulary-bounded traceback + score
-    re-estimation + fixed-depth DP (``_ulm_train`` on ``Rounds``, whose
-    per-round checkpoints keep the state bounded) — per-round cost is
-    independent of corpus size, which is exactly what lets a real
-    trainer run tens of EM rounds at 100 TB."""
-    _toks, _s, _dp, hist = _ulm_train(
-        spark, table(spark, sf_dir, "documents"), _ULM_K_ROUNDS
+    Scale shape: the corpus is scanned ONCE for word counts; all K
+    rounds (traceback + score re-estimation + DP) then run in one
+    vocabulary-sized grouped-map task (``_ulm_train``) — per-round
+    cost is independent of corpus size, which is exactly what lets a
+    real trainer run tens of EM rounds at 100 TB."""
+    words = _bpe_words(table(spark, sf_dir, "documents"))
+    return (
+        _ulm_train(words, _ULM_K_ROUNDS)
+        .where(F.col("round").isNotNull())
+        .select(
+            "round",
+            "n_words",
+            "corpus_cnt",
+            "kept_pieces",
+            "pruned_pieces",
+            "sum_pieces_weighted",
+            "sum_score_weighted",
+        )
+        .orderBy("round")
     )
-    return hist.orderBy("round")
 
 
 # ---------------------------------------------------------------------
@@ -4218,13 +4141,13 @@ def unigram_corpus_apply_census(
     a shuffled hash join rather than forcing driver memory) — one
     per-doc combiner rollup, one per-language census: no corpus
     window, no pair stage."""
-    _toks, _s, dp, _hist = _ulm_train(
-        spark, table(spark, sf_dir, "documents"), 2
-    )
+    words = _bpe_words(table(spark, sf_dir, "documents"))
     return _apply_census(
         spark,
         sf_dir,
-        _ulm_seg(dp).select(F.col("w").alias("tok"), F.col("bp").alias("np")),
+        _ulm_words(_ulm_train(words, 2)).select(
+            F.col("w").alias("tok"), "np"
+        ),
     )
 
 
@@ -4925,11 +4848,6 @@ def bpe_train_merges_k50(spark: SparkSession, sf_dir: str) -> DataFrame:
     return merges.orderBy("merge_rank")
 
 
-# Fallback separator: one sentinel piece in the best path drags the
-# packed optimum to ~16·(−1e15); a fully-scored path bottoms out near
-# 16·8·|min score| ≈ −3e9.  Any threshold between separates exactly.
-_ULM_FALLBACK_FLOOR = -(10**12)
-
 _UFO_ORACLE = (
     """WITH RECURSIVE docs_f AS MATERIALIZED (
     SELECT doc_id, lang, text,
@@ -5026,21 +4944,23 @@ def unigram_frozen_oov_apply_census(
 
     Three segmentation paths, all exercised at corpus grain:
 
-    - IN-VOCAB: the held-out (lang, tok, cnt) stream joins the frozen
-      memoized (word → n_pieces) map from the round-2 DP — the
-      production cache hit.
-    - OOV, SEGMENTABLE: tokens the map misses run a FRESH Viterbi DP
-      under the frozen scores (``_ulm_dp_from_scores`` over the OOV
-      remainder's piece grid — vocabulary-bounded, never per corpus
-      token).  An unseen WORD spelled in seen pieces segments normally
+    - IN-VOCAB: a held-out token the training fold has keeps its
+      memoized round-2 segmentation — the production cache hit.
+    - OOV, SEGMENTABLE: the held-out tokens ride into the training
+      stage as apply-only rows (``_ulm_train``'s ``apply``); each one
+      the training words lack runs a FRESH Viterbi DP under the frozen
+      scores (vocabulary-bounded, never per corpus token) and never
+      counts toward a score.  An unseen WORD spelled in seen pieces
+      segments normally
       (the single-character floor guarantees a path whenever every
       character was seen in training — SentencePiece's char coverage).
     - FALLBACK: a token containing a character the training fold never
       saw has NO fully-scored path — every segmentation crosses a
-      sentinel slot, detected exactly by ``bfin <`` the fallback floor
-      (one sentinel costs ~16e15, a real path bottoms near −3e9) — and
-      is counted as length(w) UNK-per-char pieces, SentencePiece's
-      byte-fallback shape.
+      sentinel slot, detected exactly by ``bfin <=`` the fallback floor
+      (one sentinel costs ~16e15, a real path bottoms near −3e9), the
+      stage gives it a NULL piece count — and it is counted as
+      length(w) UNK-per-char pieces, SentencePiece's byte-fallback
+      shape.
 
     The oracle replays training on the train fold and runs the SAME
     DP machinery (``_ulm_dp2_sql`` parametrized to the held-out piece
@@ -5051,53 +4971,22 @@ def unigram_frozen_oov_apply_census(
     OOV over seen chars = segmentable path; 'xz'-repeats: unseen chars
     = fallback path); organic OOV counts identically.
 
-    Scale shape: the training chain's one corpus scan + vocabulary-
-    bounded rounds; one held-out token scan collapsed to (lang, tok,
-    cnt); the frozen map join and the OOV-remainder DP are both
+    Scale shape: the training chain's one corpus scan; one held-out
+    token scan collapsed to (lang, tok, cnt); one training stage over
+    the train-fold vocabulary plus the held-out tokens, and one join
+    of the held-out stream against its segmentation — all
     vocabulary-bounded; one per-language census.  No corpus window,
     no pair stage."""
     tr, hw = _heldout_fold(spark, sf_dir, "ufo:")
-    toks_tr, s2, dp2, _hist = _ulm_train(spark, tr, 2)
-    pieces = _ulm_seg(dp2).select(
-        F.col("w").alias("tok"), F.col("bp").alias("np_map")
-    )
-    vocab_flag = toks_tr.select(
-        F.col("w").alias("tok"), F.lit(True).alias("in_vocab")
-    )
-    j = hw.join(pieces, "tok", "left").join(vocab_flag, "tok", "left")
-    # OOV remainder: fresh Viterbi under the FROZEN scores — the real
-    # production apply for unseen words; vocabulary-bounded.
-    oov_words = (
-        j.where(F.col("np_map").isNull())
-        .select(F.col("tok").alias("w"))
-        .distinct()
-        .withColumn("cnt", F.lit(1).cast("long"))
-    )
-    hdp = _ulm_dp_from_scores(
-        _ulm_piece_occurrences(oov_words), s2
-    ).localCheckpoint()  # pins b0..b8 (see _ulm_dp_from_scores)
-    oov_seg = hdp.select(
-        F.col("w").alias("tok"),
-        F.when(
-            F.col("bfin") > F.lit(_ULM_FALLBACK_FLOOR),
-            F.expr("(- bfin) % 16"),
-        ).alias("np_oov"),
-    )
-    flat = (
-        j.join(oov_seg, "tok", "left")
-        .select(
-            "lang",
-            "cnt",
-            F.col("in_vocab").isNull().alias("is_oov"),
-            F.coalesce("np_map", "np_oov")
-            .isNull()
-            .alias("is_fallback"),
-            F.coalesce(
-                "np_map", "np_oov", F.length("tok").cast("long")
-            )
-            .cast("long")
-            .alias("np"),
-        )
+    seg = _ulm_words(_ulm_train(_bpe_words(tr), 2, apply=hw))
+    flat = hw.join(
+        seg.select(
+            F.col("w").alias("tok"),
+            (F.col("cnt") == 0).alias("is_oov"),
+            F.col("np").isNull().alias("is_fallback"),
+            F.coalesce("np", F.length("w")).alias("np"),
+        ),
+        "tok",
     )
     zero = F.lit(0).cast("long")
     agg = flat.groupBy("lang").agg(

@@ -599,6 +599,51 @@ def test_bpe_fit_matches_oracle_on_a_large_vocabulary():
     assert dict(want_segs) == segs
 
 
+def test_ulm_fit_matches_oracle_on_a_large_vocabulary():
+    """The unigram-LM twin of the BPE scale test: 10^5 generated types
+    (16-letter alphabet, lengths 2-8, Zipf-weighted counts) trained
+    for K=3 EM rounds by ``_ulm_fit`` and by the DuckDB convergence
+    oracle over the same table must agree on every round's history
+    row — model size, corpus-weighted piece count and score.  Both
+    times are printed."""
+    import random
+    import time
+
+    import duckdb
+    import pandas as pd
+
+    from big_data_lab_three_spark.queries.corpus import (
+        _ULM_K_ROUNDS,
+        _ulm_convergence_oracle,
+        _ulm_fit,
+    )
+
+    rng = random.Random(20261020)
+    words: dict[str, int] = {}
+    while len(words) < 100_000:
+        w = "".join(
+            rng.choice("abcdefghijklmnop") for _ in range(rng.randint(2, 8))
+        )
+        words.setdefault(w, 10_000 // (len(words) + 1) or 1)
+    k = _ULM_K_ROUNDS
+
+    t0 = time.perf_counter()
+    hist, segs = _ulm_fit(words, k)
+    fit_s = time.perf_counter() - t0
+
+    con = duckdb.connect()
+    src = pd.DataFrame({"text": [" ".join([w] * c) for w, c in words.items()]})
+    con.register("documents", src)
+    t0 = time.perf_counter()
+    want = con.execute(_ulm_convergence_oracle()).fetchall()
+    oracle_s = time.perf_counter() - t0
+    print(f"10^5 types, K={k}: _ulm_fit {fit_s:.1f} s, DuckDB {oracle_s:.1f} s")
+
+    assert [tuple(r) for r in want] == hist
+    assert hist[1][4] > 0  # the prune bites
+    assert len(segs) == len(words)
+
+
 def test_seeded_id_guards_fail_loud_on_collision(spark):
     """The seeded-id helpers (dedup._seed_id, corpus._cohort_id) must
     shift ids below their offset and ABORT — not silently alias — the

@@ -5,11 +5,13 @@ broadcast, or codegen fails here — before it costs a cluster-day.
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from big_data_lab_three_spark.plans import (
     broadcast_join_count,
     codegen_stage_count,
+    final_plan,
     pushed_filters,
     scan_columns,
     shuffle_count,
@@ -2003,12 +2005,17 @@ def test_substring_dedup_window_is_per_doc(spark, sf_dir):
     ), "lead window is not partitioned by doc id"
 
 
+def _python_stages(df) -> int:
+    """Grouped-map Python nodes in the plan ``df.collect()`` ran."""
+    df.collect()
+    return final_plan(df).count("FlatMapGroupsInPandas")
+
+
 def test_unigram_lm_dp_is_vocab_bounded(spark, sf_dir):
-    """The Viterbi DP must be a fixed-depth expression over the
-    VOCABULARY (one corpus token scan, then Zipf-bounded tables):
-    no corpus window, no cartesian, the piece-total broadcast as a
-    1-row scalar, and exactly one corpus-scale exchange (the word
-    count) feeding everything else."""
+    """The Viterbi DP must run over the VOCABULARY (one corpus token
+    scan, then the (tok, cnt) table in one grouped-map stage): no
+    corpus window, no cartesian, no non-broadcast nested loop, and
+    the training stage runs once."""
     import re
 
     df = REG["unigram_lm_viterbi_census"].spark(spark, sf_dir)
@@ -2019,6 +2026,7 @@ def test_unigram_lm_dp_is_vocab_bounded(spark, sf_dir):
         r"(?<!Broadcast)NestedLoopJoin",
         plan.replace("BroadcastNestedLoopJoin", "Broadcast_NLJ"),
     )
+    assert _python_stages(df) == 1, "training stage ran more than once"
 
 
 def test_bpe_corpus_apply_is_keyed_join_no_window(spark, sf_dir):
@@ -2056,6 +2064,21 @@ def test_unigram_convergence_rounds_are_vocab_bounded(spark, sf_dir):
         r"(?<!Broadcast)NestedLoopJoin",
         plan.replace("BroadcastNestedLoopJoin", "Broadcast_NLJ"),
     )
+    assert _python_stages(df) == 1, "training stage ran more than once"
+
+
+@pytest.mark.parametrize(
+    "name", ["unigram_lm_round2_census", "unigram_lm_em_round"]
+)
+def test_unigram_readouts_run_the_training_stage_once(spark, sf_dir, name):
+    """A readout that needs more than one cut of the training stage —
+    the round-2 census reads its word rows and its round-2 history
+    row, the EM round its pieces and their total — still runs the
+    stage once.  The stage's output is one partition, so an aggregate
+    over it adds no exchange two branches could share: each branch
+    would run the stage again."""
+    df = REG[name].spark(spark, sf_dir)
+    assert _python_stages(df) == 1, "training stage ran more than once"
 
 
 def test_quality_classifier_scoring_is_sparse_and_broadcast(
@@ -2084,19 +2107,13 @@ def test_quality_classifier_scoring_is_sparse_and_broadcast(
     )
 
 
-def test_unigram_corpus_apply_is_keyed_join_no_window(spark, sf_dir, monkeypatch):
+def test_unigram_corpus_apply_is_keyed_join_no_window(spark, sf_dir):
     """The unigram apply shares the BPE apply's contract: corpus
     stream joins the vocabulary-bounded piece map; training rounds
-    stay vocab-bounded — no corpus window, no cartesian, no
-    non-broadcast nested loop (localCheckpoints no-op'd so the whole
-    plan is inspected)."""
+    stay vocab-bounded in one grouped-map stage — no corpus window,
+    no cartesian, no non-broadcast nested loop."""
     import re
 
-    from pyspark.sql.classic.dataframe import DataFrame
-
-    monkeypatch.setattr(
-        DataFrame, "localCheckpoint", lambda self, eager=True: self
-    )
     df = REG["unigram_corpus_apply_census"].spark(spark, sf_dir)
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
@@ -2105,6 +2122,7 @@ def test_unigram_corpus_apply_is_keyed_join_no_window(spark, sf_dir, monkeypatch
         r"(?<!Broadcast)NestedLoopJoin",
         plan.replace("BroadcastNestedLoopJoin", "Broadcast_NLJ"),
     )
+    assert _python_stages(df) == 1, "training stage ran more than once"
 
 
 def test_bpe_frozen_oov_apply_is_keyed_join_no_window(
@@ -2136,11 +2154,10 @@ def test_unigram_frozen_oov_apply_is_keyed_join_no_window(
     spark, sf_dir, monkeypatch
 ):
     """The frozen unigram apply shares the apply family's contract:
-    held-out (lang, tok, cnt) stream joins the frozen piece map, the
-    OOV remainder runs the vocabulary-bounded fresh DP — no corpus
-    window, no cartesian beyond broadcast 1-row model censuses, no
-    non-broadcast nested loop (localCheckpoints no-op'd so the whole
-    training chain is inspected)."""
+    held-out (lang, tok, cnt) stream joins the frozen segmentation,
+    whose OOV tokens the training stage segments as apply-only rows —
+    no corpus window, no cartesian, no non-broadcast nested loop
+    (localCheckpoints no-op'd so the whole plan is inspected)."""
     import re
 
     from pyspark.sql.classic.dataframe import DataFrame
@@ -2156,6 +2173,7 @@ def test_unigram_frozen_oov_apply_is_keyed_join_no_window(
         r"(?<!Broadcast)NestedLoopJoin",
         plan.replace("BroadcastNestedLoopJoin", "Broadcast_NLJ"),
     )
+    assert _python_stages(df) == 1, "training stage ran more than once"
 
 
 def test_curation_funnel_is_one_scan_one_digest_exchange(

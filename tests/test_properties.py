@@ -745,7 +745,7 @@ def test_opq_rotation_is_orthogonal_and_guarantee_preserving():
     )
 
 
-def test_ulm_fallback_floor_separates_sentinel_paths(spark):
+def test_ulm_fallback_floor_separates_sentinel_paths():
     """The frozen unigram apply's fallback detector: a token whose
     every segmentation crosses an unscored (sentinel) piece must land
     BELOW `_ULM_FALLBACK_FLOOR`, and a token with any fully-scored
@@ -753,19 +753,11 @@ def test_ulm_fallback_floor_separates_sentinel_paths(spark):
     'ab' has a clean path and 'ax' does not ('x' unscored)."""
     from big_data_lab_three_spark.queries.corpus import (
         _ULM_FALLBACK_FLOOR,
-        _ulm_dp_from_scores,
-        _ulm_piece_occurrences,
+        _ulm_viterbi,
     )
 
-    words = spark.createDataFrame(
-        [("ab", 1), ("ax", 1)], "w string, cnt long"
-    )
-    ps = spark.createDataFrame(
-        [("a", -5_000_000), ("b", -6_000_000), ("ab", -4_000_000)],
-        "p string, s long",
-    )
-    dp = _ulm_dp_from_scores(_ulm_piece_occurrences(words), ps)
-    got = {r.w: r.bfin for r in dp.collect()}
+    ps = {"a": -5_000_000, "b": -6_000_000, "ab": -4_000_000}
+    got = {w: _ulm_viterbi(w, ps)[0] for w in ("ab", "ax")}
     assert got["ab"] > _ULM_FALLBACK_FLOOR
     # best clean path for 'ab' is the single piece: 16·s('ab') − 1
     assert got["ab"] == 16 * -4_000_000 - 1

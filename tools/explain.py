@@ -8,8 +8,9 @@ Prints the `.explain("formatted")` output plus the facts
 `tests/test_plans.py` pins: pushed filters, per-scan read schemas,
 broadcast/shuffle counts, codegen spans; then collects the query and
 prints the Spark jobs its constructor and its `collect()` launched (one
-job group each, read back through the public status tracker) and the
-classes each phase compiled (count and milliseconds, from Spark's
+job group each, read back through the public status tracker), the
+Python/Arrow stages of the plan the collect ran, and the classes each
+phase compiled (count and milliseconds, from Spark's
 `CodegenMetrics` and `CodeGenerator.compileTime`; a class already in the
 session's code cache costs nothing).
 """
@@ -51,13 +52,14 @@ def main() -> int:
     from big_data_lab_three_spark.plans import (
         broadcast_join_count,
         codegen_stage_count,
+        final_plan,
         pushed_filters,
         scan_columns,
         shuffle_count,
     )
     from big_data_lab_three_spark.plans.inspect import explain_str
     from big_data_lab_three_spark.session import get_spark
-    from perfbench.tracing import SparkCounters
+    from perfbench.tracing import SparkCounters, python_nodes
 
     spark = get_spark("explain")
     spark.sparkContext.setLogLevel("ERROR")
@@ -84,6 +86,7 @@ def main() -> int:
         f"spark jobs        : {jobs['construct']['jobs']} construct, "
         f"{jobs['execute']['jobs']} execute"
     )
+    print(f"python stages     : {python_nodes(final_plan(df))}")
     print(
         f"compiled classes  : {c1[0] - c0[0]} construct ({c1[1] - c0[1]:.0f} ms), "
         f"{c3[0] - c2[0]} execute ({c3[1] - c2[1]:.0f} ms)"
